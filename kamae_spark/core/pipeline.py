@@ -6,17 +6,18 @@ without the networkx dependency:
 
 - stages are validated/ordered topologically by column-name edges
   (~60 LoC hand-rolled toposort)
-- fit applies only stages that are ancestors of a not-yet-fitted
-  estimator (reference's one optimizer rule, pipeline.py:100-178)
+- fit fits each estimator on the output-pruned transform of the stages
+  before it, so only its ancestors run (reference's one optimizer rule,
+  pipeline.py:100-178)
 - transform compiles the transformer chain into BATCHED ``select``s:
   consecutive pure-projection stages fuse into one select — dependent
   stages included, via Spark's lateral column aliases (depth-capped at
   _MAX_LCA_DEPTH per select) — so a 500-stage pipeline produces a
   handful of Project nodes instead of 500 ``withColumn``s (analyzer
   O(n^2) avoidance; Catalyst CollapseProject + whole-stage codegen then
-  see one flat projection). Stage expressions are built against a
-  schema-only virtual frame so per-stage validation never re-analyzes
-  the accumulated plan.
+  see one flat projection). A stage reading a pending alias builds
+  against an empty frame of just its inputs, so per-stage validation
+  never re-analyzes the accumulated plan.
 - save/load: one JSON spec per pipeline (stages + params, including
   fitted state such as vocab arrays / means), reference analogue:
   pipeline.py:193-239, pipeline_model.py:62-79
@@ -26,13 +27,12 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Any, Iterable
+from typing import Iterable
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import StructType
 
-from kamae_spark.core.stage import Estimator, Stage, Transformer
+from kamae_spark.core.stage import Estimator, Stage, Transformer, select_outputs
 
 
 def _toposort(stages: list[Stage], hoist: bool = False) -> list[Stage]:
@@ -136,36 +136,29 @@ _MAX_LCA_DEPTH = 40
 
 def _fused_transform(
     df: DataFrame, transformers: list[Transformer],
-    checkpoint_every: int | None = None,
     canonical: list[Transformer] | None = None,
 ) -> DataFrame:
     """Apply transformers with select-fusion.
 
-    ALL consecutive pure-projection stages fuse into ONE
-    ``select("*", ...)`` — including stages that consume a column
-    produced earlier in the same batch: Spark's lateral column aliases
-    (3.4+, on by default) let a select expression reference an alias
-    defined earlier in the SAME select, so a 500-stage dependent chain
-    compiles to a single Project instead of 500 chained selects (whose
-    per-select re-analysis is the O(n^2) analyzer wall of SURVEY.md §7
-    risk 4; measured 110s for 500 chained stages pre-LCA, <10s fused).
+    Consecutive pure-projection stages fuse into ONE ``select("*", ...)``
+    — including stages that consume a column produced earlier in the
+    same batch: Spark's lateral column aliases (3.4+, on by default) let
+    a select expression reference an alias defined earlier in the SAME
+    select, so a dependent chain compiles to a few Projects instead of
+    one select per stage (whose per-select re-analysis is the O(n^2)
+    analyzer wall of SURVEY.md §7 risk 4).
 
-    Stages build their expressions against a MINIMAL schema-only frame:
-    an empty LocalRelation carrying ONLY the stage's input columns
-    (with their true types, whether base columns or pending aliases).
-    This keeps per-stage cost O(|stage inputs|): building against the
-    real accumulated frame would eagerly re-analyze the growing
-    lateral-alias plan once per stage, and a full-schema virtual frame
-    pays O(|all columns|) schema serialization per stage — both are the
-    O(n^2) analyzer wall this function exists to avoid. Pending-alias
-    types are resolved LAZILY: only when a later stage actually reads a
-    pending column, and then the whole untyped backlog resolves in one
-    LCA select — a breadth-only pipeline never pays for typing at all.
-    Measured on a 500-stage DEPENDENT chain: per-stage selects 110s+
-    (and the old lazy-checkpoint valve dies in task serialization with
-    StackOverflowError), full-schema virtual frame 87s, this scheme
-    ~54s build = ~0.1s/stage LINEAR (py4j + one type-resolution
-    analysis per stage); 500 independent stages: ~20s, one Project.
+    Typing rule: ``fields`` holds the types of the current frame's
+    columns and is refreshed whenever ``df`` changes. A stage that reads
+    no pending alias builds on ``df`` itself. A stage that reads one
+    builds on an empty frame carrying only its input columns, so its
+    cost stays O(|stage inputs|): building on ``df`` would re-analyze
+    the growing lateral-alias plan once per stage, and a full-schema
+    frame would pay O(|all columns|) schema serialization per stage —
+    both the O(n^2) wall this function exists to avoid. A pending alias is typed lazily, the first time
+    a later stage reads it, by one ``select(expr.alias(name)).schema``
+    on the frame it was built on; its type then joins ``fields``. A
+    breadth-only pipeline never types an alias nor makes an empty frame.
     Builds may only reference columns they declare in
     ``input_columns`` — already the pipeline's dependency contract
     (toposort runs on the same declaration).
@@ -174,74 +167,34 @@ def _fused_transform(
     iteration per chained-reference layer, hard-capped by
     spark.sql.analyzer.maxIterations = 100), so each pending alias's
     lateral DEPTH is tracked and the batch flushes before a chain
-    exceeds ``_MAX_LCA_DEPTH`` — a 500-stage dependent chain compiles
-    to ~13 selects of 40 laterally-chained exprs each instead of one
-    unanalyzable select or 500 O(n^2)-analysis selects.
+    exceeds ``_MAX_LCA_DEPTH``: a 500-stage dependent chain compiles to
+    ~13 selects of 40 laterally-chained exprs each instead of one
+    unanalyzable select.
 
-    Flushes happen only at non-projection stages (custom ``transform``
-    overrides: joins, Python paths). ``checkpoint_every``: every N
-    flushes the plan is cut with an EAGER ``localCheckpoint`` — a
-    lineage/analysis valve for pipelines with hundreds of
-    non-projection stages (eager because a lazy checkpoint leaves the
-    full lineage in the task closure: a 500-select chain then dies in
-    task serialization with StackOverflowError before any truncation
-    happens)."""
+    Non-projection stages (``build`` returns None: joins, Python paths)
+    flush the batch and apply their own ``transform``."""
     spark = df.sparkSession
-    base_cols = list(df.columns)
+    base_cols = tuple(df.columns)
     added: dict[int, list[str]] = {}  # id(stage) -> columns it added
-    pending: dict[str, Any] = {}
-    replacing: dict[str, Any] = {}  # in-place replacements, fused (see loop)
-    depth: dict[str, int] = {}  # lateral-reference depth per pending alias
-    vfields: dict[str, Any] = {}  # name -> StructField of TYPED columns
-    untyped: dict[str, None] = {}  # pending aliases awaiting type resolution
-    untyped_ins: set[str] = set()  # columns the untyped exprs may reference
-    flushes = 0
+    # pending alias -> (expr, lateral depth, frame it was built on)
+    pending: dict[str, tuple[Column, int, DataFrame]] = {}
+    replacing: dict[str, Column] = {}  # in-place replacements, fused (see loop)
+    # types of the current frame's columns, plus pending aliases once typed
+    fields = {f.name: f for f in df.schema.fields}
 
-    def reset_fields() -> None:
-        vfields.clear()
-        untyped.clear()
-        untyped_ins.clear()
-        vfields.update({f.name: f for f in df.schema.fields})
-
-    reset_fields()
-
-    def ensure_types(cols) -> None:
-        """Resolve the types of untyped pending aliases — lazily, only
-        when a later stage actually reads one, and for the WHOLE untyped
-        backlog in one LCA select (insertion order is dependency order,
-        so untyped-on-untyped references resolve laterally). A breadth-
-        only pipeline (no stage reads a pending column) never pays."""
-        if not any(c in untyped for c in cols):
-            return
-        refs = [vfields[c] for c in sorted(untyped_ins) if c in vfields]
-        frame = spark.createDataFrame([], StructType(refs))
-        fields = frame.select(
-            *[pending[n].alias(n) for n in untyped]
-        ).schema.fields
-        vfields.update({f.name: f for f in fields})
-        untyped.clear()
-        untyped_ins.clear()
-
-    def minimal(cols) -> DataFrame:
-        # empty frame carrying just these columns' true types
-        known = [vfields[c] for c in dict.fromkeys(cols) if c in vfields]
-        return spark.createDataFrame([], StructType(known))
-
-    def flush() -> None:
-        nonlocal df, flushes
+    def flush(t: Transformer | None = None) -> None:
+        """Emit the batch as one select, then apply ``t`` unfused."""
+        nonlocal df
         if pending or replacing:
-            base = [
-                replacing[n].alias(n) if n in replacing else F.col(n)
-                for n in df.columns
-            ]
-            df = df.select(*base, *[c.alias(n) for n, c in pending.items()])
+            df = select_outputs(df, replacing, {n: p[0] for n, p in pending.items()})
             pending.clear()
             replacing.clear()
-            depth.clear()
-            reset_fields()
-            flushes += 1
-            if checkpoint_every and flushes % checkpoint_every == 0:
-                df = df.localCheckpoint(eager=True)
+        if t is not None:
+            before = set(df.columns)
+            df = t.transform(df)
+            added[id(t)] = [c for c in df.columns if c not in before]
+        fields.clear()
+        fields.update((f.name, f) for f in df.schema.fields)
 
     for t in transformers:
         ins = t.input_columns
@@ -251,37 +204,34 @@ def _fused_transform(
         # the CHILD (the pre-replacement value), never the lateral alias
         if any(c in replacing for c in ins):
             flush()
-        d = 1 + max((depth[c] for c in ins if c in depth), default=0)
+        d = 1 + max((pending[c][1] for c in ins if c in pending), default=0)
         # a window expression cannot reference a lateral alias
         # (LATERAL_COLUMN_ALIAS_IN_WINDOW): window stages whose inputs
         # (incl. partition/order keys) are pending force a flush first;
         # deep dependent chains flush to stay under the analyzer's
         # iterative-resolution budget
-        if any(c in pending for c in ins) and (
-            not getattr(t, "lca_fuse", True) or d > _MAX_LCA_DEPTH
-        ):
+        if d > 1 and (not getattr(t, "lca_fuse", True) or d > _MAX_LCA_DEPTH):
             flush()
             d = 1
-        if any(c in pending for c in ins):
-            ensure_types(ins)
-            vdf = minimal(ins)
-        else:
-            vdf = df
+        vdf = df
+        if d > 1:
+            for c in ins:
+                if c in pending and c not in fields:
+                    expr, _, frame = pending[c]
+                    fields[c] = frame.select(expr.alias(c)).schema[0]
+            known = [fields[c] for c in dict.fromkeys(ins) if c in fields]
+            vdf = spark.createDataFrame([], StructType(known))
         exprs = t.build(vdf)
-        if exprs is None:
-            flush()
-            before = set(df.columns)
-            df = t.transform(df)
-            added[id(t)] = [c for c in df.columns if c not in before]
+        if exprs is None or any(n in pending or n in replacing for n in exprs):
+            # a non-projection stage, or an output overwriting a column
+            # produced earlier in THIS batch: materialize the batch, then
+            # apply the stage on its own
+            flush(t)
             continue
-        if any(n in pending or n in replacing for n in exprs):
-            # output overwrites a column produced earlier in THIS batch:
-            # materialize the batch, then apply as a replacing select
-            flush()
-            df = t.transform(df)
-            continue
-        repl = {n: c for n, c in exprs.items() if n in df.columns}
-        if repl and any(c in pending for c in ins):
+        # no output is pending here, so an output in ``fields`` is a
+        # column of the current frame: an in-place replacement
+        repl = {n: c for n, c in exprs.items() if n in fields}
+        if repl and d > 1:
             # replacement exprs sit in the select's BASE position and
             # cannot forward-reference pending lateral aliases
             flush()
@@ -297,12 +247,8 @@ def _fused_transform(
         # hit the flush-on-read guard and see the new value.
         replacing.update(repl)
         appends = {n: c for n, c in exprs.items() if n not in repl}
-        pending.update(appends)
         added[id(t)] = list(appends)
-        for name in appends:
-            depth[name] = d
-            untyped[name] = None
-        untyped_ins.update(ins)
+        pending.update((n, (c, d, vdf)) for n, c in appends.items())
     flush()
     if canonical is not None and canonical != transformers:
         # hoisted execution order: restore the column order the canonical
@@ -339,26 +285,13 @@ class Pipeline(Stage):
         return flat
 
     def fit(self, df: DataFrame) -> "PipelineModel":
-        stages = _toposort(self.stages)
-        est_idx = [i for i, s in enumerate(stages) if isinstance(s, Estimator)]
-        ancestors = _ancestor_indices(stages, est_idx)
-        needed = set(est_idx) | ancestors  # stages to actually execute during fit
-
+        """Fit each estimator, in dependency order, on the output-pruned
+        transform of the stages fitted before it."""
         fitted: list[Transformer] = []
-        current = df
-        remaining_estimators = len(est_idx)
-        for i, s in enumerate(stages):
+        for s in _toposort(self.stages):
             if isinstance(s, Estimator):
-                model = s.fit(current)
-                fitted.append(model)
-                remaining_estimators -= 1
-                if remaining_estimators and i in ancestors:
-                    current = model.transform(current)
-            else:
-                assert isinstance(s, Transformer)
-                fitted.append(s)
-                if remaining_estimators and i in needed:
-                    current = s.transform(current)
+                s = s.fit(PipelineModel(fitted).transform(df, outputs=s.input_columns))
+            fitted.append(s)  # type: ignore[arg-type]
         return PipelineModel(fitted)
 
     def transform(self, df: DataFrame) -> DataFrame:
@@ -383,17 +316,11 @@ class PipelineModel(Stage):
         super().__init__()
         self.stages = stages
 
-    def transform(
-        self, df: DataFrame, outputs: list[str] | None = None,
-        checkpoint_every: int | None = None,
-    ) -> DataFrame:
+    def transform(self, df: DataFrame, outputs: list[str] | None = None) -> DataFrame:
         """Apply all stages; with ``outputs``, dead-stage-eliminate first:
         only stages whose outputs (transitively) feed a requested column
-        run (engine-level rule mirroring fit-time estimator-ancestor
-        pruning — Catalyst's column pruning cannot remove stages that
-        were never needed when later stages shuffle).
-        ``checkpoint_every``: see _fused_transform (lineage valve for
-        very long pipelines)."""
+        run (Catalyst's column pruning cannot remove stages that were
+        never needed when later stages shuffle)."""
         stages = _toposort(list(self.stages))
         if outputs is not None:
             targets = [
@@ -409,8 +336,7 @@ class PipelineModel(Stage):
         # column order restored by _fused_transform)
         hoisted = _toposort([s for s in stages], hoist=True)
         return _fused_transform(  # type: ignore[arg-type]
-            df, hoisted, checkpoint_every,
-            canonical=stages if hoisted != stages else None,
+            df, hoisted, canonical=stages if hoisted != stages else None,
         )
 
     def save(self, path: str) -> None:

@@ -117,16 +117,12 @@ class Transformer(Stage):
             raise NotImplementedError(
                 f"{type(self).__name__} must override transform() or build()"
             )
-        if any(name in df.columns for name in exprs):
-            # output_col == an existing column: in-place replacement,
-            # matching the reference's withColumn semantics
-            # (pipeline test valid_stages_with_uid_set_same_as_input)
-            base = [
-                exprs[n].alias(n) if n in exprs else F.col(n) for n in df.columns
-            ]
-            extra = [c.alias(n) for n, c in exprs.items() if n not in df.columns]
-            return df.select(*base, *extra)
-        return df.select("*", *[c.alias(name) for name, c in exprs.items()])
+        cols = set(df.columns)
+        return select_outputs(
+            df,
+            {n: c for n, c in exprs.items() if n in cols},
+            {n: c for n, c in exprs.items() if n not in cols},
+        )
 
     # -- helpers for subclasses -------------------------------------------
     def _validate(self, df: DataFrame) -> None:
@@ -160,6 +156,21 @@ class Transformer(Stage):
         if cast_to:
             expr = dt.nested_cast(expr, level, cast_to)
         return expr
+
+
+def select_outputs(
+    df: DataFrame, replacing: dict[str, Column], appends: dict[str, Column]
+) -> DataFrame:
+    """Apply stage outputs in one ``select``. ``replacing`` exprs overwrite
+    existing columns in place, keeping their positions (the reference's
+    withColumn semantics, pipeline test
+    valid_stages_with_uid_set_same_as_input); ``appends`` follow the
+    existing columns."""
+    tail = [c.alias(n) for n, c in appends.items()]
+    if not replacing:
+        return df.select("*", *tail)
+    base = [replacing[n].alias(n) if n in replacing else F.col(n) for n in df.columns]
+    return df.select(*base, *tail)
 
 
 class Estimator(Stage):

@@ -640,20 +640,10 @@ def simhash_neardup_pairs(
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def _cosine(a: Column, b: Column) -> Column:
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: (x * y).cast("double")),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double")))
-    return dot / (na * nb)
-
-
 def hyperplane_bits_udf(dim: int, n_bits: int = 8, seed: int = 42):
     """Arrow-vectorized random-hyperplane LSH key: one numpy matmul per
     batch against a seeded (n_bits, dim) hyperplane matrix captured in
-    the closure. This is the scale path — the pure-expr variant below
-    evaluates n_bits x dim INTERPRETED lambda steps per row (the same
-    trap the IVF assignment had)."""
+    the closure."""
     rng = np.random.RandomState(seed)
     W = rng.randn(n_bits, dim)
     powers = 1 << np.arange(n_bits, dtype=np.int64)
@@ -663,34 +653,6 @@ def hyperplane_bits_udf(dim: int, n_bits: int = 8, seed: int = 42):
         return pd.Series(((M @ W.T >= 0).astype(np.int64) @ powers))
 
     return pandas_udf(bits, "long", functionType=200)
-
-
-def hyperplane_bits(vec: Column, dim: int, n_bits: int = 8, seed: int = 42) -> Column:
-    """Deterministic random-hyperplane LSH key: sign bits of dot products
-    with pseudo-random (hash-derived) hyperplanes — pure expr, no model
-    state to broadcast. NOTE: interpreted per element; prefer
-    hyperplane_bits_udf in hot paths (kept for UDF-free contexts)."""
-    def bit(b: int) -> Column:
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(dim - 1)),
-                    lambda i: (
-                        F.pmod(F.xxhash64(F.concat_ws("_", F.lit(seed), F.lit(b), i)), F.lit(2000003))
-                        - 1000001
-                    ).cast("double"),
-                ),
-                lambda x, w: (x * w).cast("double"),
-            ),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-        return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2 ** b)
-
-    acc: Column = F.lit(0)
-    for b in range(n_bits):
-        acc = acc + bit(b)
-    return acc
 
 
 def embedding_neardup_pairs(

@@ -28,6 +28,7 @@ import time
 import uuid
 from typing import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,15 +129,23 @@ class CheckpointedFeatureWriter:
 
     # -- lineage ----------------------------------------------------------
     def completed_buckets(self, spark: SparkSession) -> set[int]:
+        """Buckets the lineage marks complete. Only a missing lineage
+        path means "nothing done"; any other read error (e.g. a corrupt
+        lineage file) raises rather than silently rewriting every bucket."""
+        path = spark._jvm.org.apache.hadoop.fs.Path(self.lineage_path)
+        if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+            return set()
         try:
             rows = (
                 spark.read.parquet(self.lineage_path)
                 .where(F.col("status") == "complete")
                 .select("bucket").distinct().collect()
             )
-            return {int(r["bucket"]) for r in rows}
-        except Exception:
-            return set()
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return set()  # removed after the existence check
+        return {int(r["bucket"]) for r in rows}
 
     def _append_lineage(self, spark: SparkSession, rows: list[dict]) -> None:
         if not rows:

@@ -141,3 +141,18 @@ def test_repartition_salted_skips_map_columns(spark):
     assert out.count() == 2
     out2 = repartition_salted(df, "conv_id", 4, salt=2, salt_cols=["id"])
     assert out2.count() == 2
+
+
+def test_corrupt_lineage_fails_the_run(spark, transcripts, tmp_path):
+    """Only a missing lineage path means "nothing done": an unreadable
+    lineage file must fail the run instead of silently rewriting every
+    bucket."""
+    import pytest
+
+    feat = _features(transcripts)
+    w = CheckpointedFeatureWriter(str(tmp_path / "corrupt"), n_buckets=4)
+    assert w.completed_buckets(spark) == set()
+    w.run(feat, job_id="first")
+    (tmp_path / "corrupt" / "lineage" / "part-corrupt.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        w.run(feat, job_id="second")

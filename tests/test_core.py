@@ -137,27 +137,6 @@ def test_transform_output_pruning(spark):
     assert calls == ["a", "b"]  # unrelated stage never built
 
 
-def test_checkpoint_every_long_chain(spark):
-    """A long DEPENDENT chain (each stage consumes the previous output,
-    so every stage is its own flush) produces identical results with and
-    without the localCheckpoint lineage valve."""
-    df = spark.range(50).select((F.col("id") * 1.0).alias("c0"))
-    stages = [
-        AddOne(input_col=f"c{i}", output_col=f"c{i + 1}") for i in range(60)
-    ]
-    plain = PipelineModel(stages).transform(df).select("c60").toPandas()
-    valved = (
-        PipelineModel(stages)
-        .transform(df, checkpoint_every=10)
-        .select("c60")
-        .toPandas()
-    )
-    pd.testing.assert_frame_equal(
-        plain.sort_values("c60").reset_index(drop=True),
-        valved.sort_values("c60").reset_index(drop=True),
-    )
-
-
 def test_pipeline_big_vocab_mid_dag(spark, tmp_path):
     """A big-vocab StringIndexTransformer (build() -> None, per-stage
     transform fallback) sitting BETWEEN fusible expression stages must
@@ -240,9 +219,9 @@ def test_500_stage_pipeline_analysis_bounded(spark):
 
     CHAIN: 500 dependent stages (each consumes the previous output —
     the analyzer-hostile shape) compile via lateral-column-alias
-    batches of _MAX_LCA_DEPTH. Cost is LINEAR (~0.1s/stage: py4j +
-    per-stage type resolution), vs O(n^2) pre-round-5 (110s+ and a
-    StackOverflowError through the old lazy-checkpoint valve). The
+    batches of _MAX_LCA_DEPTH. Cost is LINEAR: each stage builds on an
+    empty frame of its inputs, and each alias is typed once, on the
+    frame it was built on — vs O(n^2) for one select per stage. The
     ceiling below is generous for shared-host noise; the point is the
     scaling shape, which the breadth/chain contrast pins."""
     import time as _t
@@ -390,12 +369,11 @@ def test_asof_hoisted_early_keeps_canonical_schema_and_values(spark, transcripts
 
 
 def test_500_stage_pipeline_with_inplace_replacements_bounded(spark):
-    """VERDICT r5 #8: the analyzer-cost valve must hold when half the
-    stages are IN-PLACE replacements — each replacement flushes the
-    fused batch and applies as a replacing select (the unfused path), so
-    this pins that 250 flushes stay ceiling-bounded (with the eager-
-    checkpoint lineage valve) instead of regressing to the O(n^2)
-    analyzer wall."""
+    """VERDICT r5 #8: the analyzer-cost bound must hold when half the
+    stages are IN-PLACE replacements — replacements fuse into the base
+    position of the batched select, so 250 of them stay ceiling-bounded
+    instead of regressing to the O(n^2) analyzer wall of 250 sequential
+    replacing selects."""
     import time as _t
 
     from pyspark.sql import functions as F
@@ -412,10 +390,88 @@ def test_500_stage_pipeline_with_inplace_replacements_bounded(spark):
         stages.append(Sum(input_cols=["c0"], output_col=f"b{i}", constant=float(i)))
         stages.append(Sum(input_cols=[f"r{i}"], output_col=f"r{i}", constant=1.0))
     t0 = _t.perf_counter()
-    out = PipelineModel(stages).transform(df, checkpoint_every=25)
+    out = PipelineModel(stages).transform(df)
     row = out.orderBy("c0").select("c0", f"b{n-1}", f"r{n-1}", "r0").first()
     wall = _t.perf_counter() - t0
     assert row[f"b{n-1}"] == row["c0"] + float(n - 1)
     assert row[f"r{n-1}"] == float(n - 1) + 1.0
     assert row["r0"] == 1.0
     assert wall < 240.0, f"500-stage in-place pipeline took {wall:.1f}s"
+
+
+def test_pending_alias_read_with_column_from_non_projection_stage(spark):
+    """A stage reading both a pending alias and a column a non-projection
+    stage (ListAgg) added earlier: the column's type must come from the
+    frame as it is after that stage ran."""
+    from kamae_spark.operators.math import Sum
+    from kamae_spark.operators.windows import ListAgg
+
+    df = spark.createDataFrame(
+        [("c1", 1, 1.0), ("c1", 2, 2.0), ("c2", 1, 5.0)],
+        "conv_id string, t int, x double",
+    )
+    out = PipelineModel([
+        ListAgg(input_col="x", output_col="n", agg="count"),
+        Sum(input_cols=["x"], output_col="a", constant=1.0),
+        Sum(input_cols=["a", "n"], output_col="b"),
+    ]).transform(df)
+    rows = sorted(map(tuple, out.select("conv_id", "t", "b").collect()))
+    assert rows == [("c1", 1, 4.0), ("c1", 2, 5.0), ("c2", 1, 7.0)]
+
+
+def test_compile_typed_empty_frames_bounded(spark, transcripts, annotations, monkeypatch):
+    """Compile fence: typed empty frames made while compiling. Each
+    stage reading a pending alias builds on one empty frame of its
+    inputs; aliases are typed on the frame they were built on, so a
+    dependent chain makes at most one frame per stage, and stages that
+    read no pending alias make none."""
+    from pyspark.sql import SparkSession
+
+    from kamae_spark.operators.joins import AsOfJoin
+    from kamae_spark.operators.math import Sum
+    from kamae_spark.operators.windows import (
+        Backfill, ConditionalRollingCount, Lag, Lead, ListAgg, RollingAgg,
+        Sessionize,
+    )
+
+    made = []
+    create = SparkSession.createDataFrame
+
+    def counting(self, *args, **kwargs):
+        made.append(1)
+        return create(self, *args, **kwargs)
+
+    df = spark.createDataFrame([(float(i),) for i in range(10)], "c0 double")
+    monkeypatch.setattr(SparkSession, "createDataFrame", counting)
+
+    chain = [Sum(input_cols=[f"c{i}"], output_col=f"c{i + 1}", constant=1.0)
+             for i in range(40)]
+    PipelineModel(chain).transform(df)
+    assert len(made) <= 40, len(made)
+
+    made.clear()
+    wide = [Sum(input_cols=["c0"], output_col=f"b{i}", constant=float(i))
+            for i in range(500)]
+    PipelineModel(wide).transform(df)
+    assert made == []
+
+    order = ("ts", "turn_idx")
+    flagship = [
+        Lag(input_col="text", output_col="prev_text", order_by=order),
+        Lead(input_col="text", output_col="next_text", order_by=order),
+        Lag(input_col="ts", output_col="prev_ts", order_by=order),
+        RollingAgg(input_col="turn_idx", output_col="turns_5", agg="count",
+                   rows=5, order_by=order),
+        RollingAgg(input_col="turn_idx", output_col="mean_10", agg="mean",
+                   rows=10, order_by=order),
+        ConditionalRollingCount(input_col="role", output_col="role_freq_10",
+                                value="assistant", rows=10, order_by=order),
+        Backfill(input_col="tool", output_col="tool_ff", order_by=order),
+        Sessionize(ts_col="ts", output_col="session_idx", gap_seconds=1800,
+                   order_by=order, session_id_col="session_id"),
+        ListAgg(input_col="turn_idx", output_col="conv_len", agg="count"),
+        AsOfJoin(on=("conv_id",), right=annotations, strategy="union"),
+    ]
+    made.clear()
+    PipelineModel(flagship).transform(transcripts)
+    assert made == []
