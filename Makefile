@@ -1,4 +1,4 @@
-.PHONY: test tier1 test-fast contract bench scaling package
+.PHONY: test tier1 test-fast contract oracles bench scaling package
 
 test:
 	python -m pytest tests/ -q
@@ -13,6 +13,11 @@ test-fast:
 # driver-contract gate at the driver's scale (DuckDB oracles)
 contract:
 	KAMAE_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_driver_contract.py -q
+
+# every driver query against its DuckDB oracle, bit-level, at the
+# script's default scale (sf0.01)
+oracles:
+	python scripts/check_oracles.py
 
 bench:
 	python bench.py

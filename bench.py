@@ -52,7 +52,7 @@ def _pin_blas_single_thread() -> None:
 
 
 def _session():
-    """Tuned local-mode profile (measured in scripts/scaling_experiment.py):
+    """Tuned local-mode profile (measured by N->4N scaling runs):
     - shuffle partitions = 4x cores: enough tasks that every core stays
       busy through stage tails (2x lost ~10% scaling efficiency)
     - AQE on but coalescing OFF: coalescing merges the small window

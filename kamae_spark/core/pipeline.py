@@ -175,7 +175,6 @@ def _fused_transform(
     flush the batch and apply their own ``transform``."""
     spark = df.sparkSession
     base_cols = tuple(df.columns)
-    added: dict[int, list[str]] = {}  # id(stage) -> columns it added
     # pending alias -> (expr, lateral depth, frame it was built on)
     pending: dict[str, tuple[Column, int, DataFrame]] = {}
     replacing: dict[str, Column] = {}  # in-place replacements, fused (see loop)
@@ -190,9 +189,7 @@ def _fused_transform(
             pending.clear()
             replacing.clear()
         if t is not None:
-            before = set(df.columns)
             df = t.transform(df)
-            added[id(t)] = [c for c in df.columns if c not in before]
         fields.clear()
         fields.update((f.name, f) for f in df.schema.fields)
 
@@ -246,22 +243,17 @@ def _fused_transform(
         # value (they were declared earlier), consumers arriving after
         # hit the flush-on-read guard and see the new value.
         replacing.update(repl)
-        appends = {n: c for n, c in exprs.items() if n not in repl}
-        added[id(t)] = list(appends)
-        pending.update((n, (c, d, vdf)) for n, c in appends.items())
+        pending.update((n, (c, d, vdf)) for n, c in exprs.items() if n not in repl)
     flush()
     if canonical is not None and canonical != transformers:
         # hoisted execution order: restore the column order the canonical
         # (declared-topological) order would have produced, so callers see
-        # an identical schema regardless of scheduling
-        have = set(df.columns)
-        order = [c for c in base_cols if c in have]
-        order += [
-            c for s in canonical for c in added.get(id(s), ()) if c in have
-        ]
-        seen = set(order)
-        order += [c for c in df.columns if c not in seen]
-        if order != df.columns:
+        # an identical schema regardless of scheduling; columns a stage
+        # does not declare keep their frame order at the end
+        have = df.columns
+        declared = (c for s in canonical for c in s.output_columns)
+        order = [c for c in dict.fromkeys((*base_cols, *declared, *have)) if c in have]
+        if order != have:
             df = df.select(*order)
     return df
 

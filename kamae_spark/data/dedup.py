@@ -11,9 +11,11 @@ Five strategies, each with an explicit scale story:
   bucket self-join -> jaccard verification. The classic sub-quadratic
   near-dup path: only signatures shuffle, candidate pairs are bounded
   by band-bucket collisions.
-- simhash: 64-bit signature via an Arrow-vectorized pandas UDF (numpy
-  bit-unpack — the one op where per-bit Column exprs would be slower
-  than the Arrow hop); near-dups = hamming <= k within band buckets.
+- simhash: 64-bit signature, row-local in the ``SimHash`` stage via an
+  Arrow-vectorized pandas UDF (numpy bit-unpack — the one op where
+  per-bit Column exprs would be slower than the Arrow hop), and as a JVM
+  aggregate over exploded tokens in ``simhash_neardup_pairs``;
+  near-dups = hamming <= k within band buckets.
 - embedding_neardup_pairs: cosine >= tau among embedding vectors,
   bucketed by random-hyperplane LSH sign bits (deterministic seed).
 
@@ -487,7 +489,16 @@ def _simhash64(col: Column) -> Column:
 
 class SimHash(ElementwiseTransform):
     """64-bit simhash signature of a tokenized text column
-    (array<string> -> bigint). Arrow-vectorized pandas UDF."""
+    (array<string> -> bigint). Arrow-vectorized pandas UDF.
+
+    Why a second signature function next to ``simhash_signatures_jvm``:
+    this stage is row-local (one value per input row, fusible into a
+    pipeline ``select``), while the JVM path is an aggregate over
+    exploded tokens keyed by a document id — it cannot be a column
+    expression without a shuffle and a join back. The two use different
+    token hashes (FNV-1a here, xxhash64 there), so their signatures are
+    not interchangeable; no oracle depends on signature values, only on
+    the pairs they yield."""
 
     compatible_dtypes = ("string",)
 
@@ -507,14 +518,14 @@ def simhash_signatures_jvm(
     aggregates per doc (map-side partial agg; the shuffle carries
     docs x 64 longs) -> sign assembly into one bigint.
 
-    This is the corpus-scale path: the Arrow ``SimHash`` stage hashes
-    each token with a per-character Python FNV loop — fine for a
-    column-transformer stage on modest data, a Python-bound bottleneck
-    at 10^9 documents. Same simhash math (bit-majority of token
-    hashes), different token hash (xxhash64 vs FNV-1a), so signatures
-    are not interchangeable between the two paths. Docs with empty/null
-    token arrays produce no signature row (they cannot be near-dups of
-    anything by content)."""
+    This is the corpus-scale path: the Arrow ``SimHash`` stage is
+    numpy-vectorized (``_fnv1a64_tokens``) but still moves every token
+    across the Arrow boundary into Python — fine for a column-transformer
+    stage on modest data, a Python-bound cost at 10^9 documents. Same
+    simhash math (bit-majority of token hashes), different token hash
+    (xxhash64 vs FNV-1a), so signatures are not interchangeable between
+    the two paths. Docs with empty/null token arrays produce no signature
+    row (they cannot be near-dups of anything by content)."""
     t = ensure_scan_parallelism(df, id_col).select(
         F.col(id_col).alias("__id"), F.explode(tokens_col).alias("__t")
     )
@@ -528,9 +539,9 @@ def simhash_signatures_jvm(
     # optimization + codegen + JIT of the final stage a multi-second
     # one-time cost that landed nondeterministically inside single-pass
     # scaling measurements (the r5 simhash 0.677 at 4->16 decomposed to
-    # exactly this stage: scripts/simhash_decomp.py, sig_eff 0.39 with
-    # a fixed ~8.6s parallelism-independent component; steady-state
-    # passes scaled at ~0.99).
+    # exactly this stage: sig_eff 0.39 with a fixed ~8.6s
+    # parallelism-independent component; steady-state passes scaled at
+    # ~0.99).
     aggs = [
         F.sum(
             F.shiftrightunsigned(F.col("__h"), b).bitwiseAND(F.lit(1))
@@ -615,24 +626,13 @@ def simhash_pairs_from_sigs(
 
 def simhash_neardup_pairs(
     df: DataFrame, tokens_col: str, id_col: str, max_hamming: int = 3,
-    bands: int | None = None, signature: str = "jvm",
+    bands: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by simhash hamming distance with banded blocking
     whose band count is DERIVED from max_hamming (>= max_hamming + 1) so
     the candidate set provably contains every qualifying pair.
-
-    ``signature='jvm'`` (default, the scale path) derives signatures
-    via simhash_signatures_jvm — zero Python; ``'arrow'`` uses the
-    FNV-based pandas UDF (the SimHash stage's hash). Pair SETS agree in
-    distribution but not row-for-row (different token hashes)."""
-    if signature == "jvm":
-        sig = simhash_signatures_jvm(df, tokens_col, id_col)
-    elif signature == "arrow":
-        sig = ensure_scan_parallelism(df, id_col).select(
-            F.col(id_col).alias("__id"), _simhash64(F.col(tokens_col)).alias("__sig")
-        )
-    else:
-        raise ValueError("signature must be jvm|arrow")
+    Signatures come from simhash_signatures_jvm — zero Python."""
+    sig = simhash_signatures_jvm(df, tokens_col, id_col)
     return simhash_pairs_from_sigs(sig, "__sig", "__id", max_hamming, bands)
 
 

@@ -7,13 +7,14 @@ Re-engineered Spark-first versus the reference:
   map/reduceByKey (indexer_utils.py:100-129); frequency ties are broken
   by label ascending so vocab order is DETERMINISTIC (the reference's
   rdd.sortBy leaves ties ambiguous)
-- TRANSFORM is a pure Column expression: a map literal
-  (``F.map_from_arrays``) lookup plus an ``xxhash64`` OOV bucket —
-  replacing the reference's per-row Python UDF with its O(|V|)
+- TRANSFORM replaces the reference's per-row Python UDF with its O(|V|)
   ``labels.index()`` scan (user_defined_functions.py:46-102), the
-  reference's single worst hot path. At 100 TB this is the difference
-  between a broadcast hashmap probe in codegen and a Python process
-  boundary per row.
+  reference's single worst hot path. Up to ``VOCAB_JOIN_THRESHOLD``
+  labels it is a pure Column expression: a map literal
+  (``F.map_from_arrays``) lookup — still a per-row scan of the vocab,
+  but in codegen — plus an ``xxhash64`` OOV bucket. Past it, a broadcast
+  hash join (scalar columns) or a broadcast dict (array columns) probes
+  the vocab in constant time per element.
 - OOV hashing uses Spark's JVM-side xxhash64 rather than farmhash64
   (the reference chose farmhash for TensorFlow serving parity, which we
   do not target; pyfarmhash is unavailable here). Bucket layout is
@@ -37,12 +38,17 @@ from kamae_spark.core.stage import Estimator, keyword_params
 from kamae_spark.functions.arrays import flatten_nested
 from kamae_spark.operators.rowwise import ElementwiseTransform
 
-# Above this vocab size the literal map_from_arrays lookup stops being
-# free: the whole vocab is embedded in the PLAN of every stage (multi-MB
-# plans, analyzer cost per query) — switch scalar columns to a broadcast
-# hash join against a vocab DataFrame instead (same layout, same OOV
-# hashing; the join build side ships once per executor, not per plan).
-VOCAB_JOIN_THRESHOLD = 65536
+# Above this vocab size the literal map_from_arrays lookup loses: it is a
+# per-row linear scan of the vocab, and the whole vocab is embedded in
+# the PLAN (about 0.6 ms of build per label) — switch scalar columns to
+# a broadcast hash join against a vocab DataFrame and array columns to
+# the broadcast-dict lookup instead (same layout, same OOV hashing; the
+# vocab ships once per executor, not per plan). Measured on 4 cores: at
+# 128 labels the literal scan and the join cost the same per row (about
+# 0.16 s per million scalar rows), and the join adds about 0.25 s of
+# fixed cost; on 200k x 5-element arrays the literal map still wins at
+# 128 labels (0.58 s against 0.69 s) and loses from about 150 on.
+VOCAB_JOIN_THRESHOLD = 128
 
 # Default fit-side vocab bound: `collect_labels` materializes the vocab
 # on the driver, so an UNBOUNDED distinct over 100 TB of text (10^7+
@@ -135,7 +141,7 @@ def fallback_expr(x: Column, mask_token: str | None, num_oov_indices: int) -> Co
 class StringIndexTransformer(ElementwiseTransform):
     """Fitted vocab lookup (see module docstring for index layout).
 
-    Big-vocab path: when the vocab exceeds ``vocab_join_threshold``,
+    Big-vocab path: when the vocab exceeds ``VOCAB_JOIN_THRESHOLD``,
     scalar string columns switch from the literal-map expression to a
     BROADCAST HASH JOIN against a (label, index) vocab DataFrame —
     identical layout and OOV hashing (the OOV bucket is computed from
@@ -157,7 +163,6 @@ class StringIndexTransformer(ElementwiseTransform):
     def __init__(self, input_col: str, output_col: str,
                  labels: Sequence[str] = (), mask_token: str | None = None,
                  num_oov_indices: int = 1,
-                 vocab_join_threshold: int = VOCAB_JOIN_THRESHOLD,
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
@@ -173,8 +178,7 @@ class StringIndexTransformer(ElementwiseTransform):
 
     def _join_cols(self, df: DataFrame) -> dict[str, int]:
         """input columns taking a big-vocab path -> nesting level."""
-        threshold = getattr(self, "vocab_join_threshold", None) or VOCAB_JOIN_THRESHOLD
-        if len(self.labels) <= threshold:
+        if len(self.labels) <= VOCAB_JOIN_THRESHOLD:
             return {}
         return {c: column_info(df, c)[0] for c in self.input_columns}
 
@@ -191,7 +195,7 @@ class StringIndexTransformer(ElementwiseTransform):
         # the small-vocab map_from_arrays path raises on duplicate keys;
         # the join path would silently DUPLICATE input rows and the dict
         # path would silently last-wins — fail identically on both sides
-        # of the vocab_join_threshold boundary instead
+        # of the VOCAB_JOIN_THRESHOLD boundary instead
         if len(set(self.labels)) != len(self.labels):
             raise ValueError(
                 f"{type(self).__name__}: labels contain duplicate entries; "
@@ -290,7 +294,6 @@ class StringIndexEstimator(Estimator):
                  mask_token: str | None = None, num_oov_indices: int = 1,
                  max_num_labels: int | None = DEFAULT_MAX_LABELS,
                  sample_fraction: float | None = None, seed: int = 42,
-                 vocab_join_threshold: int = VOCAB_JOIN_THRESHOLD,
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
@@ -303,7 +306,6 @@ class StringIndexEstimator(Estimator):
             input_col=self.input_col, output_col=self.output_col,
             labels=labels, mask_token=self.mask_token,
             num_oov_indices=self.num_oov_indices,
-            vocab_join_threshold=self.vocab_join_threshold,
             input_dtype=self.input_dtype, output_dtype=self.output_dtype,
         )
 
@@ -317,8 +319,7 @@ class SharedStringIndexEstimator(Estimator):
                  string_order_type: str = "frequencyDesc",
                  mask_token: str | None = None, num_oov_indices: int = 1,
                  max_num_labels: int | None = DEFAULT_MAX_LABELS,
-                 sample_fraction: float | None = None, seed: int = 42,
-                 vocab_join_threshold: int = VOCAB_JOIN_THRESHOLD):
+                 sample_fraction: float | None = None, seed: int = 42):
         if len(input_cols) != len(output_cols):
             raise ValueError("input_cols and output_cols must align")
 
@@ -331,7 +332,6 @@ class SharedStringIndexEstimator(Estimator):
             input_cols=list(self.input_cols), output_cols=list(self.output_cols),
             labels=labels, mask_token=self.mask_token,
             num_oov_indices=self.num_oov_indices,
-            vocab_join_threshold=self.vocab_join_threshold,
         )
 
 
@@ -344,8 +344,7 @@ class SharedStringIndexTransformer(StringIndexTransformer):
     @keyword_params
     def __init__(self, input_cols: Sequence[str] = (), output_cols: Sequence[str] = (),
                  labels: Sequence[str] = (), mask_token: str | None = None,
-                 num_oov_indices: int = 1,
-                 vocab_join_threshold: int = VOCAB_JOIN_THRESHOLD):
+                 num_oov_indices: int = 1):
         pass
 
     def _col_pairs(self) -> list[tuple[str, str]]:

@@ -10,34 +10,43 @@ right row (annotation) with the same key and ``right.ts <= left.ts``
 ``merge_asof(direction="backward")`` semantics, leak-proof by
 construction.
 
-Two physical strategies, selectable per call:
+Whole-record rule: each annotation travels as ONE record,
+``struct(right_ts AS __ts, payload...)``, and a turn takes the latest
+record whole. A null payload field in the latest annotation stays null;
+it is never filled from an older annotation (filling each payload column
+separately would pair one annotation's ``label`` with another's
+``score``). Annotations with a null key or ts are dropped first: they
+match no turn, exactly as in an equi-join / SQL ``ASOF JOIN``. Both
+strategies below pick the record; one shared step then applies
+``tolerance_seconds`` (a record older than the bound is dropped whole)
+and unpacks the payload.
+
+Two physical strategies, selectable per call. Both stay because they
+scale in opposite directions: ``union`` shuffles the left side once and
+takes any right size; ``broadcast`` never shuffles the left side but
+needs the right side to fit in memory.
 
 - ``union`` (default, scales to any right size): tag both sides, union,
-  one window pass of ``last(payload, ignorenulls=True)`` over
-  (key) ordered by (ts, side) with an UNBOUNDED PRECEDING frame, filter
-  back to left rows. Cost: ONE shuffle of left+right on the key — no
-  join node at all, no row explosion, skew bounded by per-key group
-  size. This is the 100 TB path: a sort-merge join + groupwise filter
-  would shuffle the same bytes but also materialize match candidates.
+  one window pass of ``last(record, ignorenulls=True)`` over (key)
+  ordered by (ts, side) with an UNBOUNDED PRECEDING frame, filter back
+  to left rows. Cost: ONE shuffle of left+right on the key — no join
+  node at all, no row explosion, skew bounded by per-key group size.
+  This is the 100 TB path: a sort-merge join + groupwise filter would
+  shuffle the same bytes but also materialize match candidates.
 - ``broadcast``: the (small) right side is packed to one row per key
-  holding a ts-sorted ``array<struct>``, broadcast-equi-joined, and the
-  latest ``ts <= left.ts`` match picked by a pure array expression.
+  holding a ts-sorted ``array<record>``, broadcast-equi-joined, and the
+  latest ``ts <= left.ts`` record picked by a pure array expression.
   GENUINELY zero shuffle of the (huge) left side: no hash partitioning,
   no sort, no row explosion, no window (asserted by
   test_plan_quality.test_broadcast_asof_left_plan_is_exchange_free).
   Use when annotations are a small dimension.
-
-``tolerance_seconds`` bounds the lookback (rows older than the bound do
-not fill forward). Implemented in the union path by nulling payloads
-whose source ts is out of range after the fill — requires carrying the
-fill-source ts, one extra ``last`` over the same window (same shuffle).
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kamae_spark.core.stage import Transformer, keyword_params
@@ -53,7 +62,9 @@ class AsOfJoin(Transformer):
     The right side is supplied at construction (DataFrame) or via
     ``right_path`` (parquet path, for serializable pipelines).
     ``payload_cols`` are the right columns to attach (default: all
-    non-key, non-ts).
+    non-key, non-ts). The default is resolved once, here, from the right
+    side's schema (``right_path`` is read through the active session),
+    so ``output_columns`` is exact and a saved spec pins the payload.
     """
 
     # the pipeline schedules this stage as early as its deps allow: the
@@ -77,6 +88,11 @@ class AsOfJoin(Transformer):
     ):
         if strategy not in ("union", "broadcast"):
             raise ValueError("strategy must be union|broadcast")
+        if right is None and not right_path:
+            raise ValueError("AsOfJoin needs `right` DataFrame or `right_path`")
+        if payload_cols is None:
+            cols = self._right_df(SparkSession.active()).columns
+            self.payload_cols = [c for c in cols if c not in (*on, right_ts)]
 
     def params(self):
         p = super().params()
@@ -89,98 +105,63 @@ class AsOfJoin(Transformer):
 
     @property
     def output_columns(self):
-        if self.payload_cols is None:
-            return []  # unknown until transform time
         return [f"{c}{self.suffix}" for c in self.payload_cols]
 
-    def _right_df(self, df: DataFrame) -> DataFrame:
+    def _right_df(self, spark: SparkSession) -> DataFrame:
         if self.right is not None:
             return self.right
-        if self.right_path:
-            return df.sparkSession.read.parquet(self.right_path)
-        raise ValueError("AsOfJoin needs `right` DataFrame or `right_path`")
+        return spark.read.parquet(self.right_path)
 
     def transform(self, df: DataFrame) -> DataFrame:
-        right = self._right_df(df)
-        payload = list(
-            self.payload_cols
-            if self.payload_cols is not None
-            else [c for c in right.columns if c not in (*self.on, self.right_ts)]
+        right = self._right_df(df.sparkSession).dropna(subset=[*self.on, self.right_ts])
+        rec = F.struct(
+            F.col(self.right_ts).alias("__ts"), *[F.col(c) for c in self.payload_cols]
+        ).alias("__rec")
+        pick = self._broadcast if self.strategy == "broadcast" else self._union
+        picked = pick(df, right, rec)
+        latest = F.col("__rec")
+        if self.tolerance_seconds is not None:
+            age = epoch_seconds(F.col(self.left_ts)) - epoch_seconds(latest["__ts"])
+            latest = F.when(age <= int(self.tolerance_seconds), latest)
+        return picked.select(
+            *[F.col(c) for c in df.columns],
+            *[latest[c].alias(o) for c, o in zip(self.payload_cols, self.output_columns)],
         )
-        if self.strategy == "broadcast":
-            return self._broadcast(df, right, payload)
-        return self._union(df, right, payload)
 
     # -- broadcast packed-array path ---------------------------------------
-    def _broadcast(self, left: DataFrame, right: DataFrame, payload: list[str]) -> DataFrame:
+    def _broadcast(self, left: DataFrame, right: DataFrame, rec: Column) -> DataFrame:
         """Zero-shuffle-of-the-left plan: the (small) right side collapses
-        to one row per key holding a ts-sorted ``array<struct(ts,
-        payload...)>``, which broadcast-equi-joins onto the left; the
-        latest match with ``ts <= left.ts`` is then picked by a pure
-        array expression. The only exchanges in the plan are the
-        right-side aggregation (small by precondition) and the broadcast
-        itself — the huge left side is never hash-partitioned, sorted, or
-        row-exploded (a naive range join would duplicate each left row
-        per candidate and need a window to pick one back).
+        to one row per key holding a ts-sorted ``array<record>``, which
+        broadcast-equi-joins onto the left; the latest record with
+        ``ts <= left.ts`` is then picked by a pure array expression. The
+        only exchanges in the plan are the right-side aggregation (small
+        by precondition) and the broadcast itself — the huge left side
+        is never hash-partitioned, sorted, or row-exploded (a naive range
+        join would duplicate each left row per candidate and need a
+        window to pick one back).
         """
-        r = right.groupBy(*self.on).agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col(self.right_ts).alias("__ts"),
-                        *[F.col(c) for c in payload],
-                    )
-                )
-            ).alias("__ann")
-        )
+        r = right.groupBy(*self.on).agg(F.sort_array(F.collect_list(rec)).alias("__ann"))
         joined = left.join(F.broadcast(r), on=list(self.on), how="left")
         lts = F.col(self.left_ts)
-
-        def in_range(s: Column) -> Column:
-            ok = s["__ts"] <= lts
-            if self.tolerance_seconds is not None:
-                ok = ok & (
-                    epoch_seconds(lts) - epoch_seconds(s["__ts"])
-                    <= int(self.tolerance_seconds)
-                )
-            return ok
-
-        pick = F.try_element_at(F.filter(F.col("__ann"), in_range), F.lit(-1))
+        seen = F.filter(F.col("__ann"), lambda s: s["__ts"] <= lts)
+        # picked in its own select: the tolerance step and every payload
+        # field then read one column instead of re-evaluating the filter
         return joined.select(
             *[F.col(c) for c in left.columns],
-            *[pick[c].alias(f"{c}{self.suffix}") for c in payload],
+            F.try_element_at(seen, F.lit(-1)).alias("__rec"),
         )
 
     # -- union + window fill path (scale default) --------------------------
-    def _union(self, left: DataFrame, right: DataFrame, payload: list[str]) -> DataFrame:
-        out_cols = [f"{c}{self.suffix}" for c in payload]
-        lcols = [c for c in left.columns]
-        # common shape: left columns + payload outs + side tag + source ts
-        l_tagged = left.select(
-            *lcols,
-            *[F.lit(None).cast(right.schema[c].dataType).alias(o) for c, o in zip(payload, out_cols)],
-            F.lit(1).alias("__side"),
-            F.lit(None).cast(right.schema[self.right_ts].dataType).alias("__src_ts"),
-        )
+    def _union(self, left: DataFrame, right: DataFrame, rec: Column) -> DataFrame:
         r_tagged = right.select(
-            *[F.col(k) if k in right.columns else F.lit(None).alias(k) for k in self.on],
-            F.col(self.right_ts).alias(self.left_ts),
-            *[F.col(c).alias(o) for c, o in zip(payload, out_cols)],
-            F.lit(0).alias("__side"),
-            F.col(self.right_ts).alias("__src_ts"),
+            *self.on, F.col(self.right_ts).alias(self.left_ts), rec, F.lit(0).alias("__side")
         )
-        # fill missing left columns on the right side with typed nulls
-        missing = [c for c in lcols if c not in r_tagged.columns]
-        r_tagged = r_tagged.select(
-            *[
-                F.col(c) if c in r_tagged.columns else F.lit(None).cast(left.schema[c].dataType).alias(c)
-                for c in lcols
-            ],
-            *out_cols,
-            "__side",
-            "__src_ts",
+        # each side's missing columns (left: __rec, right: the other left
+        # columns) come in as typed nulls; a turn's null __rec is skipped
+        # by the fill, so only annotations are ever picked
+        u = left.select("*", F.lit(1).alias("__side")).unionByName(
+            r_tagged, allowMissingColumns=True
         )
-        u = l_tagged.unionByName(r_tagged)
         # annotation sorts before the turn at equal ts => tie goes to the annotation
         w = (
             Window.partitionBy(*self.on)
@@ -188,19 +169,8 @@ class AsOfJoin(Transformer):
             .rowsBetween(UNB, CUR)
         )
         filled = u.select(
-            "*",
-            *[F.last(o, ignorenulls=True).over(w).alias(f"__f_{o}") for o in out_cols],
-            F.last("__src_ts", ignorenulls=True).over(w).alias("__f_src_ts"),
+            *[F.col(c) for c in left.columns],
+            "__side",
+            F.last("__rec", ignorenulls=True).over(w).alias("__rec"),
         )
-        res = filled.where(F.col("__side") == 1)
-        keep: list[Column] = [F.col(c) for c in lcols]
-        for o in out_cols:
-            v = F.col(f"__f_{o}")
-            if self.tolerance_seconds is not None:
-                in_range = (
-                    epoch_seconds(F.col(self.left_ts)) - epoch_seconds(F.col("__f_src_ts"))
-                    <= int(self.tolerance_seconds)
-                )
-                v = F.when(in_range, v)
-            keep.append(v.alias(o))
-        return res.select(*keep)
+        return filled.where(F.col("__side") == 1)

@@ -76,3 +76,78 @@ def test_asof_tie_annotation_wins(spark):
     for strategy in ("union", "broadcast"):
         got = _got(AsOfJoin(on=("conv_id",), right=a, strategy=strategy).transform(t))
         assert got["label_asof"].tolist() == [None, "L"]
+
+
+def _ts_frame(spark, rows, ddl):
+    """Build a frame from rows whose ``ts`` is an ISO string."""
+    return spark.createDataFrame(rows, ddl.replace(" ts ", " ts_s ")).selectExpr(
+        "*", "cast(ts_s as timestamp) ts"
+    ).drop("ts_s")
+
+
+@pytest.mark.parametrize("strategy", ["union", "broadcast"])
+def test_asof_latest_annotation_is_taken_whole(spark, strategy):
+    """A null payload field in the latest annotation stays null: it is
+    never filled from an older annotation (merge_asof semantics)."""
+    left = _ts_frame(
+        spark,
+        [("c1", 1, "2025-01-01 00:00:10"), ("c1", 2, "2025-01-01 00:00:30")],
+        "conv_id string, turn_idx int, ts string",
+    )
+    right = _ts_frame(
+        spark,
+        [("c1", "2025-01-01 00:00:05", "A", 1.0), ("c1", "2025-01-01 00:00:20", None, 2.0)],
+        "conv_id string, ts string, label string, score double",
+    )
+    got = _got(AsOfJoin(on=("conv_id",), right=right, strategy=strategy).transform(left))
+    rows = list(zip(got["turn_idx"], got["label_asof"], got["score_asof"]))
+    assert rows == [(1, "A", 1.0), (2, None, 2.0)]
+    exp = pd.merge_asof(
+        left.toPandas().sort_values("ts"), right.toPandas().sort_values("ts"),
+        on="ts", by="conv_id", direction="backward",
+    )
+    assert exp["label"].tolist() == ["A", None]
+
+
+def test_asof_default_payload_is_declared(spark, transcripts, annotations):
+    """With ``payload_cols`` left at its default the outputs are known at
+    construction, so an estimator can read a payload column."""
+    from kamae_spark.core.pipeline import Pipeline
+    from kamae_spark.operators.scalers import StandardScaleEstimator
+
+    op = AsOfJoin(on=("conv_id",), right=annotations)
+    assert op.output_columns == ["label_asof", "score_asof"]
+    left = transcripts.select("conv_id", "turn_idx", "ts")
+    model = Pipeline(
+        [op, StandardScaleEstimator(input_col="score_asof", output_col="z")]
+    ).fit(left)
+    out = model.transform(left)
+    assert out.columns == ["conv_id", "turn_idx", "ts", "label_asof", "score_asof", "z"]
+    assert out.where("score_asof IS NOT NULL AND z IS NULL").count() == 0
+
+
+@pytest.mark.parametrize("strategy", ["union", "broadcast"])
+def test_asof_null_key_or_ts_annotations_match_nothing(spark, strategy):
+    """Annotations with a null key or a null ts are never picked, by
+    either strategy (as in a SQL ASOF JOIN)."""
+    left = _ts_frame(
+        spark,
+        [("c1", 1, "2025-01-01 00:00:10"), (None, 2, "2025-01-01 00:00:10")],
+        "conv_id string, turn_idx int, ts string",
+    )
+    right = _ts_frame(
+        spark,
+        [("c1", None, "A"), (None, "2025-01-01 00:00:05", "B")],
+        "conv_id string, ts string, label string",
+    )
+    got = _got(AsOfJoin(on=("conv_id",), right=right, strategy=strategy).transform(left))
+    assert got["label_asof"].tolist() == [None, None]
+
+
+def test_asof_right_without_join_key_raises(spark, transcripts, annotations):
+    from pyspark.errors import AnalysisException
+
+    op = AsOfJoin(on=("conv_id",), right=annotations.drop("conv_id"),
+                  payload_cols=("label",))
+    with pytest.raises(AnalysisException):
+        op.transform(transcripts)

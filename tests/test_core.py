@@ -137,15 +137,16 @@ def test_transform_output_pruning(spark):
     assert calls == ["a", "b"]  # unrelated stage never built
 
 
-def test_pipeline_big_vocab_mid_dag(spark, tmp_path):
+def test_pipeline_big_vocab_mid_dag(spark, tmp_path, monkeypatch):
     """A big-vocab StringIndexTransformer (build() -> None, per-stage
     transform fallback) sitting BETWEEN fusible expression stages must
     (a) produce the same values as the literal small-vocab path,
     (b) leave the surrounding stages fused (the plan shows the
     broadcast-join lookup, and downstream exprs still compute), and
-    (c) survive a fitted-pipeline save/load round trip including
-    vocab_join_threshold."""
+    (c) survive a fitted-pipeline save/load round trip, still taking
+    the join path."""
     from kamae_spark.core.pipeline import Pipeline, PipelineModel
+    from kamae_spark.operators import indexers
     from kamae_spark.operators.indexers import StringIndexEstimator
     from kamae_spark.operators.math import AbsoluteValue, Sum
 
@@ -153,39 +154,41 @@ def test_pipeline_big_vocab_mid_dag(spark, tmp_path):
         [(f"w{i % 7}", float(i), -float(i)) for i in range(40)],
         "s string, a double, b double",
     )
-    mk = lambda thr: Pipeline([
+    model = Pipeline([
         AbsoluteValue(input_col="b", output_col="b_abs"),
         StringIndexEstimator(
             input_col="s", output_col="s_idx",
             string_order_type="alphabeticalAsc",
-            vocab_join_threshold=thr,
         ),
         Sum(input_cols=["a", "b_abs"], output_col="a2"),
-    ])
-    # threshold 3 < 7 labels -> big-vocab join path; 100 -> literal map
-    big = mk(3).fit(df)
-    lit = mk(100).fit(df)
-    out_big = big.transform(df)
+    ]).fit(df)
+    cols = ("s_idx", "a2", "b_abs")
+    # threshold 100 -> literal map; 3 < 7 labels -> big-vocab join path
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 100)
+    rows_lit = sorted(map(tuple, model.transform(df).select(*cols).collect()))
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 3)
+    out_big = model.transform(df)
     plan = out_big._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
-    rows_big = sorted(map(tuple, out_big.select("s_idx", "a2", "b_abs").collect()))
-    rows_lit = sorted(map(tuple, lit.transform(df).select("s_idx", "a2", "b_abs").collect()))
+    rows_big = sorted(map(tuple, out_big.select(*cols).collect()))
     assert rows_big == rows_lit
 
     p = str(tmp_path / "bigvocab_model")
-    big.save(p)
-    reloaded = PipelineModel.load(p)
-    assert reloaded.stages[1].vocab_join_threshold == 3
-    rows_re = sorted(map(tuple, reloaded.transform(df).select("s_idx", "a2", "b_abs").collect()))
+    model.save(p)
+    out_re = PipelineModel.load(p).transform(df)
+    plan = out_re._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    rows_re = sorted(map(tuple, out_re.select(*cols).collect()))
     assert rows_re == rows_big
 
 
-def test_pipeline_fit_prunes_around_big_vocab(spark):
+def test_pipeline_fit_prunes_around_big_vocab(spark, monkeypatch):
     """Estimator-ancestor pruning + the big-vocab transform fallback
     interact: a second estimator DOWNSTREAM of a big-vocab indexer must
     fit on the indexed column's values (i.e. the fallback transform ran
     during fit), and the fitted model must transform correctly."""
     from kamae_spark.core.pipeline import Pipeline
+    from kamae_spark.operators import indexers
     from kamae_spark.operators.indexers import StringIndexEstimator
     from kamae_spark.operators.scalers import StandardScaleEstimator
 
@@ -193,10 +196,11 @@ def test_pipeline_fit_prunes_around_big_vocab(spark):
         [(f"k{i % 5}", float(i)) for i in range(20)],
         "s string, x double",
     )
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 2)
     model = Pipeline([
         StringIndexEstimator(
             input_col="s", output_col="s_idx",
-            string_order_type="alphabeticalAsc", vocab_join_threshold=2,
+            string_order_type="alphabeticalAsc",
         ),
         StandardScaleEstimator(input_col="s_idx", output_col="s_z",
                                input_dtype="double"),

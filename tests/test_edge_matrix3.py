@@ -19,6 +19,7 @@ from zoneinfo import ZoneInfo
 import pytest
 from pyspark.sql import functions as F
 
+from kamae_spark.operators import indexers
 from kamae_spark.operators.indexers import (
     OneHotEncodeEstimator,
     StringIndexEstimator,
@@ -113,30 +114,32 @@ def test_string_index_array_input_dtype_nested_cast(spark):
     assert row["i"][3] == 0  # null element -> 0
 
 
-def test_string_index_big_vocab_dict_path_with_input_dtype(spark):
+def test_string_index_big_vocab_dict_path_with_input_dtype(spark, monkeypatch):
     """The broadcast-dict (big-vocab, array column) path must probe with
-    the CASTED values — dtype cast and vocab_join_threshold interact."""
+    the CASTED values — dtype cast and VOCAB_JOIN_THRESHOLD interact."""
     df = spark.createDataFrame([([1, 2, 7],), ([3, None, 1],)], "x array<int>")
     kw = dict(input_col="x", output_col="i", labels=["1", "2", "3"],
               num_oov_indices=1, input_dtype="string")
-    big = StringIndexTransformer(vocab_join_threshold=2, **kw)
-    lit = StringIndexTransformer(vocab_join_threshold=100, **kw)
-    got_big = [r["i"] for r in big.transform(df).collect()]
-    got_lit = [r["i"] for r in lit.transform(df).collect()]
+    t = StringIndexTransformer(**kw)
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 2)
+    got_big = [r["i"] for r in t.transform(df).collect()]
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 100)
+    got_lit = [r["i"] for r in t.transform(df).collect()]
     assert got_big == got_lit
     assert got_big[0][:2] == [1, 2] and got_big[1][0] == 3
 
 
-def test_string_index_big_vocab_join_path_with_input_dtype(spark):
+def test_string_index_big_vocab_join_path_with_input_dtype(spark, monkeypatch):
     """The broadcast-JOIN (big-vocab, scalar column) path must join on
     the casted value and hash OOV from the casted value."""
     df = spark.createDataFrame([(1,), (2,), (7,), (None,)], "x int")
     kw = dict(input_col="x", output_col="i", labels=["1", "2", "3"],
               num_oov_indices=2, input_dtype="string")
-    big = StringIndexTransformer(vocab_join_threshold=2, **kw)
-    lit = StringIndexTransformer(vocab_join_threshold=100, **kw)
-    got_big = {r["x"]: r["i"] for r in big.transform(df).collect()}
-    got_lit = {r["x"]: r["i"] for r in lit.transform(df).collect()}
+    t = StringIndexTransformer(**kw)
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 2)
+    got_big = {r["x"]: r["i"] for r in t.transform(df).collect()}
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 100)
+    got_lit = {r["x"]: r["i"] for r in t.transform(df).collect()}
     assert got_big == got_lit  # incl. the hashed OOV bucket for 7
 
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kamae_spark.core.pipeline import Pipeline, PipelineModel
+from kamae_spark.operators import indexers
 from kamae_spark.operators.hashing import BloomEncode, HashIndex, MinHashIndex
 from kamae_spark.operators.indexers import (
     OneHotEncodeEstimator,
@@ -276,7 +277,7 @@ def test_conditional_scale_array_per_element(spark):
 # round 3: big-vocab broadcast-join lookup path
 # ---------------------------------------------------------------------------
 
-def test_big_vocab_broadcast_join_path(spark):
+def test_big_vocab_broadcast_join_path(spark, monkeypatch):
     """Past the vocab threshold the scalar lookup must be a broadcast
     hash join (no million-entry literal map in the plan) with the exact
     same index layout as the literal path."""
@@ -308,19 +309,17 @@ def test_big_vocab_broadcast_join_path(spark):
         input_col="w", output_col="idx", labels=labels[:10],
         mask_token="<mask>", num_oov_indices=2,
     )
-    big_forced = StringIndexTransformer(
-        input_col="w", output_col="idx", labels=labels[:10],
-        mask_token="<mask>", num_oov_indices=2, vocab_join_threshold=4,
-    )
     df2 = spark.createDataFrame(
         [("tok0000003",), ("nope",), (None,), ("<mask>",)], "w string"
     )
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 100)
     lit_rows = {r["w"]: r["idx"] for r in small.transform(df2).collect()}
-    join_rows = {r["w"]: r["idx"] for r in big_forced.transform(df2).collect()}
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 4)  # force join path
+    join_rows = {r["w"]: r["idx"] for r in small.transform(df2).collect()}
     assert lit_rows == join_rows
 
 
-def test_shared_big_vocab_join_path(spark):
+def test_shared_big_vocab_join_path(spark, monkeypatch):
     """SharedStringIndexTransformer takes the join path per scalar col."""
     from kamae_spark.operators.indexers import SharedStringIndexTransformer
 
@@ -329,7 +328,7 @@ def test_shared_big_vocab_join_path(spark):
         input_cols=["a", "b"], output_cols=["ia", "ib"], labels=labels,
         num_oov_indices=1,
     )
-    t.vocab_join_threshold = 10  # force join path
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 10)  # force join path
     df = spark.createDataFrame([("w0", "w49"), ("w5", "zz")], "a string, b string")
     out = t.transform(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -340,7 +339,7 @@ def test_shared_big_vocab_join_path(spark):
     assert rows[1]["ib"] == 0  # OOV with 1 oov index, no mask -> 0
 
 
-def test_array_big_vocab_dict_path(spark):
+def test_array_big_vocab_dict_path(spark, monkeypatch):
     """Past the vocab threshold, ARRAY columns switch to the
     broadcast-dict pandas-UDF lookup: no literal vocab map in the plan,
     and element-exact parity with the literal path (same OOV hashing,
@@ -356,21 +355,20 @@ def test_array_big_vocab_dict_path(spark):
         ([],),
     ]
     df = spark.createDataFrame(rows, "w array<string>")
-    lit_t = StringIndexTransformer(
+    t = StringIndexTransformer(
         input_col="w", output_col="idx", labels=labels,
         mask_token="<mask>", num_oov_indices=2,
     )
-    dict_t = StringIndexTransformer(
-        input_col="w", output_col="idx", labels=labels,
-        mask_token="<mask>", num_oov_indices=2, vocab_join_threshold=4,
-    )
-    out = dict_t.transform(df)
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 100)
+    lit = t.transform(df)
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 4)
+    out = t.transform(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan or "pythonUDF" in plan.lower()
     assert "map_from_arrays" not in plan
     assert "Exchange" not in plan  # row-local: no join, no shuffle
     got = [r["idx"] for r in out.collect()]
-    want = [r["idx"] for r in lit_t.transform(df).collect()]
+    want = [r["idx"] for r in lit.collect()]
     assert got == want
     # layout sanity independent of the parity check
     by_first = {
@@ -384,7 +382,7 @@ def test_array_big_vocab_dict_path(spark):
     assert [r["idx"] for r in out.where("w is null").collect()] == [None]
 
 
-def test_array_big_vocab_dict_path_no_oov(spark):
+def test_array_big_vocab_dict_path_no_oov(spark, monkeypatch):
     """num_oov_indices=0: unseen/null elements -> null, matching the
     literal path contract."""
     from kamae_spark.operators.indexers import StringIndexTransformer
@@ -393,19 +391,17 @@ def test_array_big_vocab_dict_path_no_oov(spark):
     df = spark.createDataFrame(
         [(["t0", "zz", None],)], "w array<string>"
     )
-    lit_t = StringIndexTransformer(
+    t = StringIndexTransformer(
         input_col="w", output_col="idx", labels=labels, num_oov_indices=0,
     )
-    dict_t = StringIndexTransformer(
-        input_col="w", output_col="idx", labels=labels, num_oov_indices=0,
-        vocab_join_threshold=4,
-    )
-    got = dict_t.transform(df).collect()[0]["idx"]
-    want = lit_t.transform(df).collect()[0]["idx"]
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 100)
+    want = t.transform(df).collect()[0]["idx"]
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 4)
+    got = t.transform(df).collect()[0]["idx"]
     assert got == want == [0, None, None]
 
 
-def test_nested_array_big_vocab_dict_path(spark):
+def test_nested_array_big_vocab_dict_path(spark, monkeypatch):
     """Level-2 nested arrays take the dict path with exact parity."""
     from kamae_spark.operators.indexers import StringIndexTransformer
 
@@ -414,20 +410,18 @@ def test_nested_array_big_vocab_dict_path(spark):
         [([["t0", "UNSEEN"], None, ["t29", None]],), (None,)],
         "w array<array<string>>",
     )
-    lit_t = StringIndexTransformer(
+    t = StringIndexTransformer(
         input_col="w", output_col="idx", labels=labels, num_oov_indices=1,
     )
-    dict_t = StringIndexTransformer(
-        input_col="w", output_col="idx", labels=labels, num_oov_indices=1,
-        vocab_join_threshold=4,
-    )
-    got = [r["idx"] for r in dict_t.transform(df).collect()]
-    want = [r["idx"] for r in lit_t.transform(df).collect()]
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 100)
+    want = [r["idx"] for r in t.transform(df).collect()]
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 4)
+    got = [r["idx"] for r in t.transform(df).collect()]
     assert got == want
     assert got[0][1] is None  # inner null array preserved
 
 
-def test_big_vocab_duplicate_labels_raise(spark):
+def test_big_vocab_duplicate_labels_raise(spark, monkeypatch):
     """The small-vocab map_from_arrays path raises on duplicate vocab
     keys; the big-vocab join/dict paths must fail the same way instead
     of silently duplicating rows (join) or last-wins (dict)."""
@@ -436,8 +430,9 @@ def test_big_vocab_duplicate_labels_raise(spark):
     df = spark.createDataFrame([("a",), ("b",)], "s string")
     t = StringIndexTransformer(
         input_col="s", output_col="i",
-        labels=["a", "b", "c", "a", "d", "e"], vocab_join_threshold=4,
+        labels=["a", "b", "c", "a", "d", "e"],
     )
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 4)
     with pytest.raises(ValueError, match="duplicate"):
         t.transform(df)
 

@@ -7,6 +7,8 @@ they fail before any benchmark notices."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -67,6 +69,39 @@ def test_flagship_exchange_budget(spark, transcripts, annotations):
     )
     plan = _executed(model.transform(transcripts))
     assert plan.count("Exchange hashpartitioning") <= 2, plan
+
+
+def _node_names(plan: str) -> list[str]:
+    """Operator name of each line of a plan tree string."""
+    return re.findall(r"(?m)^[\s:+-]*(?:\*\(\d+\) )?(\w+)", plan)
+
+
+def test_flagship_plan_fence(spark, transcripts, annotations):
+    """The ten flagship stages (the benchmark's list) on a re-spread
+    input, so the pipeline's own exchanges show: at most 5 Window nodes,
+    2 Sorts and 1 hash Exchange."""
+    order = ("ts", "turn_idx")
+    model = PipelineModel(
+        [
+            Lag(input_col="text", output_col="prev_text", order_by=order),
+            Lead(input_col="text", output_col="next_text", order_by=order),
+            Lag(input_col="ts", output_col="prev_ts", order_by=order),
+            RollingAgg(input_col="turn_idx", output_col="turns_5", agg="count", rows=5, order_by=order),
+            RollingAgg(input_col="turn_idx", output_col="mean_10", agg="mean", rows=10, order_by=order),
+            ConditionalRollingCount(input_col="role", output_col="role_freq_10", value="assistant",
+                                    rows=10, order_by=order),
+            Backfill(input_col="tool", output_col="tool_ff", order_by=order),
+            Sessionize(ts_col="ts", output_col="session_idx", gap_seconds=1800, order_by=order,
+                       session_id_col="session_id"),
+            ListAgg(input_col="turn_idx", output_col="conv_len", agg="count"),
+            AsOfJoin(on=("conv_id",), right=annotations, strategy="union"),
+        ]
+    )
+    plan = _executed(model.transform(transcripts.repartition(4)))
+    names = _node_names(plan)
+    assert names.count("Window") <= 5, plan
+    assert names.count("Sort") <= 2, plan
+    assert plan.count("Exchange hashpartitioning") <= 1, plan
 
 
 def test_broadcast_asof_left_plan_is_exchange_free(spark, transcripts, annotations):
