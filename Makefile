@@ -14,10 +14,10 @@ test-fast:
 contract:
 	KAMAE_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_driver_contract.py -q
 
-# every driver query against its DuckDB oracle, bit-level, at the
-# script's default scale (sf0.01)
+# every driver query against its DuckDB oracle, bit-level, at sf0.01;
+# Q="ann_topk ivf_topk" re-checks only the named queries
 oracles:
-	python scripts/check_oracles.py
+	python scripts/check_oracles.py /root/testdata/sf0.01 $(Q)
 
 bench:
 	python bench.py

@@ -39,6 +39,16 @@ from kamae_spark.data.partitioning import ensure_scan_parallelism
 from kamae_spark.data.text import Fingerprint
 from kamae_spark.operators.rowwise import ElementwiseTransform
 
+# Buckets holding more rows than this are split into chunk-pair tasks of
+# <= ~2x this many rows each (see _bucket_pairs).
+BUCKET_CHUNK_CAP = 4096
+# minhash verify: the candidate-id set is broadcast into the semi join
+# that prunes the re-shingled source while it has at most this many
+# pair ends (2 per candidate pair).
+BROADCAST_CAND_ROWS = 1_000_000
+# embedding near-dup: default LSH bits hold expected bucket occupancy
+# near this many rows.
+TARGET_BUCKET_ROWS = 128
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -169,18 +179,8 @@ def _signatures_from_grams(gsel: DataFrame, num_perm: int) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, num_perm: int = 64,
-    tokenizer: str = "char",
-) -> DataFrame:
-    gsel = df.select(
-        F.col(id_col).alias("__id"), shingles(F.col(text_col), n, tokenizer).alias("__g")
-    )
-    return _signatures_from_grams(gsel, num_perm)
-
-
 def _bucket_pairs(
-    band: DataFrame, payload: Sequence[str] = (), chunk_cap: int | None = 4096
+    band: DataFrame, payload: Sequence[str] = (), *, chunk_cap: int | None
 ) -> DataFrame:
     """(id_a, id_b[, payload_a/b]) candidate pairs from a (band, bucket)
     keyed table via groupBy + in-bucket pair explosion — measured ~2x
@@ -197,9 +197,9 @@ def _bucket_pairs(
     ~2*chunk_cap rows and the full pair set is still emitted — nothing
     is dropped (no silent caps). The k^2 COMPUTE for a mega-bucket is
     inherent to emitting its pairs; the guard bounds per-task memory
-    and spreads the work across the cluster. ``chunk_cap=None``
-    restores the single-pass unchunked plan (one fewer shuffle) for
-    corpora known to be well-bucketed.
+    and spreads the work across the cluster. ``chunk_cap=None`` gives
+    the single-pass unchunked plan, the reference the chunking tests
+    compare against.
     """
     from pyspark.sql import Window
 
@@ -308,7 +308,6 @@ def minhash_lsh_pairs(
     df: DataFrame, text_col: str, id_col: str,
     n: int = 3, num_perm: int = 64, bands: int | None = None,
     threshold: float = 0.5, tokenizer: str = "char",
-    chunk_cap: int | None = 4096, broadcast_cand_rows: int = 1_000_000,
 ) -> DataFrame:
     """shingle -> minhash -> band -> bucket pair-gen -> exact-jaccard
     verify, re-shingling ONLY the candidate docs.
@@ -321,7 +320,7 @@ def minhash_lsh_pairs(
     design and consumed twice — id extraction + verify join) so nothing
     stays persisted after the call returns, and the corpus-wide gram
     table is never cached NOR shuffled: when the candidate id set is
-    small (< ``broadcast_cand_rows`` pairs) the (id, text) source is
+    small (<= ``BROADCAST_CAND_ROWS`` pair ends) the (id, text) source is
     pruned by a BROADCAST semi join before re-shingling, so the verify
     join touches gram arrays for candidate docs only. Candidate volume
     is governed by bands/rows-per-band: P(collide) = 1-(1-j^r)^b; by
@@ -361,7 +360,7 @@ def minhash_lsh_pairs(
     # recomputing it would re-derive signatures + banding end-to-end
     # (measured 26s of a 29s run before round 2), and persist() would
     # leak cached blocks past the call in a long-lived session
-    cand = _bucket_pairs(band, chunk_cap=chunk_cap).localCheckpoint(eager=True)
+    cand = _bucket_pairs(band, chunk_cap=BUCKET_CHUNK_CAP).localCheckpoint(eager=True)
     n_cand = cand.count()
     # the distinct looks redundant (a LEFT SEMI probe dedups keys in its
     # hash build) but it is what BOUNDS the broadcast: without it the
@@ -389,7 +388,7 @@ def minhash_lsh_pairs(
         .repartition(n_parts, "__id")
         .dropDuplicates()
     )
-    if 2 * n_cand <= broadcast_cand_rows:
+    if 2 * n_cand <= BROADCAST_CAND_ROWS:
         cand_ids = F.broadcast(cand_ids)
     pruned = src.join(cand_ids, "__id", "left_semi")
     gsub = pruned.select(
@@ -617,7 +616,7 @@ def simhash_pairs_from_sigs(
         "__id", "__sig",
         F.col("bb.band").alias("band"), F.col("bb.key").alias("bucket"),
     )
-    cand = _bucket_pairs(banded, payload=("__sig",))
+    cand = _bucket_pairs(banded, payload=("__sig",), chunk_cap=BUCKET_CHUNK_CAP)
     return cand.select(
         "id_a", "id_b",
         hamming64(F.col("__sig_a"), F.col("__sig_b")).alias("hamming"),
@@ -658,21 +657,16 @@ def hyperplane_bits_udf(dim: int, n_bits: int = 8, seed: int = 42):
 def embedding_neardup_pairs(
     df: DataFrame, vec_col: str, id_col: str,
     threshold: float = 0.95, n_bits: int | None = None, seed: int = 42,
-    target_bucket_rows: int = 128, dim: int | None = None,
-    n_rows: int | None = None, chunk_cap: int | None = 4096,
 ) -> DataFrame:
     """Cosine >= threshold pairs, candidate-limited to equal LSH sign-bit
     buckets (high-threshold near-dups almost surely share all sign bits).
 
-    ``n_bits`` defaults to log2(corpus / target_bucket_rows): a FIXED
+    ``n_bits`` defaults to log2(corpus / TARGET_BUCKET_ROWS): a FIXED
     bucket count leaves quadratic mega-buckets once the corpus outgrows
     it, so the bucket count scales with the corpus to hold expected
     occupancy (and the per-bucket quadratic term) roughly constant.
-    Pass ``dim`` to skip the dimension-probe job (one row read) and
-    ``n_rows`` (approximate is fine — only log2 matters) to skip the
-    sizing count job. Null vectors are excluded up front (a null can
-    match nothing; the Arrow bucketing/rescoring batches require dense
-    rows). Candidate verification is an Arrow-batched numpy cosine, not
+    Null vectors are excluded up front (a null can match nothing; the
+    Arrow bucketing/rescoring batches require dense rows). Candidate verification is an Arrow-batched numpy cosine, not
     the interpreted Column fold — at corpus scale the verify runs over
     every candidate pair and dominates.
 
@@ -682,29 +676,28 @@ def embedding_neardup_pairs(
     that all share every sign bit — under a plain bucket self-join
     that is one hot join key whose k^2 candidate rows funnel through a
     single task pair. ``_bucket_pairs`` hash-splits any bucket larger
-    than ``chunk_cap`` into chunk-pair tasks of <= ~2*chunk_cap rows
-    each while still emitting the exact pair set (the vectors ride
+    than ``BUCKET_CHUNK_CAP`` into chunk-pair tasks of <= ~2x that many
+    rows each while still emitting the exact pair set (the vectors ride
     along as payload so the Arrow verify needs no join back)."""
     import math
 
     from kamae_spark.data.similarity import cosine_pairs_udf
 
     df = df.where(F.col(vec_col).isNotNull())
-    if dim is None:
-        dim_row = df.select(F.size(vec_col).alias("d")).limit(1).first()
-        if dim_row is None:
-            raise ValueError(f"cannot infer array dim of empty column {vec_col}")
-        dim = int(dim_row["d"])
+    dim_row = df.select(F.size(vec_col).alias("d")).limit(1).first()
+    if dim_row is None:
+        raise ValueError(f"cannot infer array dim of empty column {vec_col}")
+    dim = int(dim_row["d"])
     if n_bits is None:
-        n = df.count() if n_rows is None else int(n_rows)
-        n_bits = min(max(4, math.ceil(math.log2(max(n, 1) / target_bucket_rows))), 24)
+        n = df.count()
+        n_bits = min(max(4, math.ceil(math.log2(max(n, 1) / TARGET_BUCKET_ROWS))), 24)
     banded = df.select(
         F.lit(0).alias("band"),
         hyperplane_bits_udf(dim, n_bits, seed)(F.col(vec_col)).alias("bucket"),
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
     )
-    cand = _bucket_pairs(banded, payload=("__v",), chunk_cap=chunk_cap)
+    cand = _bucket_pairs(banded, payload=("__v",), chunk_cap=BUCKET_CHUNK_CAP)
     pairs = cand.select(
         "id_a", "id_b",
         cosine_pairs_udf()(F.col("__v_a"), F.col("__v_b")).alias("cosine"),

@@ -1,22 +1,38 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-- brute_force_topk: exact cosine top-k. The query set is broadcast
-  (it is small by construction); the corpus streams through one codegen
-  stage — no corpus shuffle at all except the final per-query top-k,
-  which shuffles only (n_queries x k x fanout) candidate rows because
-  a partial per-partition top-k runs map-side first.
-- ivf_topk: IVF-style two-stage search — assign corpus vectors to the
-  nearest of K deterministic centroids (a broadcast), then search only
-  the query's nprobe closest centroid buckets. The scale path: bucket
-  pruning turns a full scan into ~nprobe/K of the corpus.
+Both searches run as ONE scan: the query batch (small by construction)
+rides in the task closure, the corpus streams through a single
+mapInPandas pass that scores each Arrow batch and keeps the partition-
+local per-query top-k, and the final rank shuffles only
+partitions x queries x k candidate rows. No (corpus x queries) pair rows
+are materialized and the corpus is never shuffled. The two searches
+differ only in the scorer the scan runs:
+
+- brute_force_topk: exact cosine top-k against every query
+  (``_fold_scorer``).
+- ivf_topk: IVF-style two-stage search — assign each corpus vector to
+  the nearest of K deterministic centroids, then rescore it against only
+  the queries probing that bucket (``_bucket_scorer``). Bucket pruning
+  turns a full scan into ~nprobe/K of the pair work.
+
+Null vectors are excluded up front by both. A query batch larger than
+``MAX_SCAN_QUERIES`` cannot close over the tasks, so only then does a
+search fall back to its pair-join plan (a broadcast join that degrades
+gracefully instead of OOMing the driver on the bounded collect); the
+join plans give the scan's exact answer and tests use them as its
+reference.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-# NOTE: the scan strategies deliberately do NOT apply
+# NOTE: the scan deliberately does NOT apply
 # kamae_spark.data.partitioning.ensure_scan_parallelism to the corpus:
 # per-row work here is a handful of FLOPs per dimension, so a corpus
 # repartition would shuffle heavy vector payloads to parallelize cheap
@@ -24,25 +40,42 @@ from pyspark.sql import functions as F
 # file corpus) where the text/hash/shingle ops (high CPU per byte)
 # measure large wins from the same guard.
 
+# Above this many queries the query matrix no longer rides in the task
+# closure (nor passes through a driver toPandas): the pair-join plan runs.
+MAX_SCAN_QUERIES = 65536
+# A task compresses its candidate accumulator to per-query top-k once it
+# holds more than this many rows, so task memory is O(cap + batch)
+# regardless of partition size.
+SCAN_COMPRESS_ROWS = 4_000_000
+# Phase-1 fan-out of the two-phase per-query rank (see _topk_per_query).
+TOPK_SALT = 32
+# Scores are rounded to this many decimals before ranking (the oracles'
+# ROUND), so rounded ties break by neighbor id.
+SCORE_DP = 6
+
+
+def _stack(s) -> np.ndarray:
+    return np.stack([np.asarray(v, dtype=np.float64) for v in s])
+
+
+def _unit(M: np.ndarray) -> np.ndarray:
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
 
 def cosine_pairs_udf():
     """Arrow-vectorized pairwise cosine: one numpy matmul-shaped pass per
     batch over two aligned array columns. This is the SCALE path for
-    candidate rescoring (IVF top-k, embedding near-dup verify): the
-    pure-Column ``cosine`` below folds ``F.aggregate``/``zip_with``
+    candidate rescoring (IVF join fallback, embedding near-dup verify):
+    the pure-Column ``cosine`` below folds ``F.aggregate``/``zip_with``
     lambdas that Spark INTERPRETS per element — ~50x slower per row at
     corpus scale (measured for the same trap in dedup.py minhash).
 
     Null rows must be filtered upstream (np.stack raises on None);
     callers own that filter so the null policy stays visible in the
     plan."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        B = np.stack([np.asarray(v, dtype=np.float64) for v in b])
+        A, B = _stack(a), _stack(b)
         dots = np.einsum("ij,ij->i", A, B)
         na = np.sqrt(np.einsum("ij,ij->i", A, A))
         nb = np.sqrt(np.einsum("ij,ij->i", B, B))
@@ -67,11 +100,12 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _topk_per_query(scored: DataFrame, k: int, salt_partitions: int = 32) -> DataFrame:
+def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """Deterministic per-query top-k of a (query_id, neighbor_id, score)
-    table, in TWO phases: phase 1 takes top-k within (query_id, salt)
-    groups — parallelism = n_queries x salt_partitions — and phase 2
-    ranks the surviving n_queries x salt x k rows globally per query.
+    table, ranked on the score rounded to ``SCORE_DP`` decimals, in TWO
+    phases: phase 1 takes top-k within (query_id, salt) groups —
+    parallelism = n_queries x TOPK_SALT — and phase 2 ranks the surviving
+    n_queries x salt x k rows globally per query.
 
     Why: a single `Window.partitionBy(query_id)` ranks the ENTIRE scored
     table on n_queries reducers — a hard parallelism ceiling when the
@@ -81,10 +115,13 @@ def _topk_per_query(scored: DataFrame, k: int, salt_partitions: int = 32) -> Dat
     retries must be deterministic), ordering keys are identical in both
     phases, so the result is bit-identical to the single-window plan
     (the global top-k is contained in the union of per-salt top-ks).
-    ``salt_partitions <= 1`` restores the single-window plan."""
+    ``TOPK_SALT <= 1`` gives the single-window plan."""
+    scored = scored.select(
+        "query_id", "neighbor_id", F.round("score", SCORE_DP).alias("score")
+    )
     order = (F.col("score").desc(), F.col("neighbor_id").asc())
-    if salt_partitions and salt_partitions > 1:
-        salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(int(salt_partitions)))
+    if TOPK_SALT > 1:
+        salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(TOPK_SALT))
         w1 = Window.partitionBy("query_id", salt.alias("__salt")).orderBy(*order)
         scored = (
             scored.select("*", F.row_number().over(w1).alias("__rn"))
@@ -98,155 +135,139 @@ def _topk_per_query(scored: DataFrame, k: int, salt_partitions: int = 32) -> Dat
     )
 
 
-def _bf_scan_fn(Qraw, qn, qids, k: int, round_dp: int | None,
-                compress_cap: int):
-    """mapInPandas generator for the brute-force scan strategy: score
-    every corpus vector in the partition against the (small) query
-    matrix riding in the closure, keep the partition-local per-query
-    top-k. Floating-point parity with the pure-Column fold it replaces
-    is STRUCTURAL: dot products and norms accumulate dimension-by-
-    dimension left-to-right (one vectorized += per dimension), i.e. the
-    exact operation sequence of ``F.aggregate(zip_with(...))`` per pair
-    — scores are bit-identical, not merely close (the driver hash-
-    compares them against the DuckDB oracle)."""
-    import numpy as np
-    import pandas as pd
+def _select_topk_np(qi, nid, sc, k: int):
+    """Vectorized per-query top-k of flat (query_idx, neighbor_id, score)
+    arrays. Ordering matches the plan-side rank exactly: score rounded
+    HALF-AWAY-FROM-ZERO to ``SCORE_DP`` decimals (Spark/DuckDB ROUND
+    semantics) descending, then neighbor_id ascending — rounding BEFORE
+    selection so a rounded-tie winner by id cannot be dropped by a
+    raw-score cut."""
+    p = 10.0 ** SCORE_DP
+    r = np.copysign(np.floor(np.abs(sc) * p + 0.5) / p, sc)
+    order = np.lexsort((nid, -r, qi))
+    qs = qi[order]
+    starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+    sizes = np.diff(np.r_[starts, len(qs)])
+    rank = np.arange(len(qs)) - np.repeat(starts, sizes)
+    keep = order[rank < k]
+    return qi[keep], nid[keep], sc[keep]
 
-    m = len(qids)
+
+def _local_topk(score, qids, k: int):
+    """mapInPandas generator: feed each Arrow batch of (id, vector) rows
+    to ``score(ids, V)``, which yields (query index, neighbor id, score)
+    candidate arrays, and emit the partition-local per-query top-k. The
+    candidate state is compressed to per-query top-k whenever it exceeds
+    ``SCAN_COMPRESS_ROWS`` rows."""
+    cap = SCAN_COMPRESS_ROWS
 
     def fn(batches):
-        acc_q, acc_n, acc_s, acc_rows = [], [], [], 0
-
-        def compress():
-            nonlocal acc_q, acc_n, acc_s, acc_rows
-            qi = np.concatenate(acc_q)
-            ni = np.concatenate(acc_n)
-            sc = np.concatenate(acc_s)
-            qi, ni, sc = _select_topk_np(qi, ni, sc, k, round_dp)
-            acc_q, acc_n, acc_s, acc_rows = [qi], [ni], [sc], len(qi)
-
+        parts, rows = [], 0
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf.iloc[:, 0].to_numpy()
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf.iloc[:, 1]])
-            n, d = V.shape
-            D = np.zeros((n, m))
-            nv = np.zeros(n)
-            for j in range(d):  # left-to-right fold, matches F.aggregate
-                D += V[:, j, None] * Qraw[None, :, j]
-                nv += V[:, j] * V[:, j]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = D / (np.sqrt(nv)[:, None] * qn[None, :])
-            ok = ids[:, None] != qids[None, :]  # no self-match
-            ridx, cidx = np.nonzero(ok)
-            acc_q.append(cidx)
-            acc_n.append(ids[ridx])
-            acc_s.append(S[ridx, cidx])
-            acc_rows += len(ridx)
-            if acc_rows > compress_cap:
-                compress()
-        if acc_rows:
-            compress()
-            yield pd.DataFrame(
-                {"query_id": qids[acc_q[0]], "neighbor_id": acc_n[0],
-                 "score": acc_s[0]}
-            )
+            for part in score(pdf.iloc[:, 0].to_numpy(), _stack(pdf.iloc[:, 1])):
+                parts.append(part)
+                rows += len(part[0])
+            if rows > cap:
+                parts = [_select_topk_np(*map(np.concatenate, zip(*parts)), k)]
+                rows = len(parts[0][0])
+        if rows:
+            qi, ni, sc = _select_topk_np(*map(np.concatenate, zip(*parts)), k)
+            yield pd.DataFrame({"query_id": qids[qi], "neighbor_id": ni, "score": sc})
 
     return fn
 
 
-def fold_norms(Q):
-    """Per-row L2 norms with left-to-right dimension accumulation (the
-    same operation order as ``_norm``'s fold — see _bf_scan_fn)."""
-    import numpy as np
+def _scan_topk(
+    corpus: DataFrame, queries: DataFrame, vec_col: str, id_col: str, k: int,
+    scorer,
+) -> DataFrame | None:
+    """The one scan plan: collect the (non-null) query batch, close the
+    query matrix over ``scorer(Q, qids)``, stream the corpus through
+    ``_local_topk`` and rank. Returns None when the batch exceeds
+    ``MAX_SCAN_QUERIES`` (bounded collect: never a silent driver OOM)."""
+    qp = (
+        queries.select(id_col, vec_col)
+        .limit(MAX_SCAN_QUERIES + 1)
+        .toPandas()
+    )
+    if len(qp) > MAX_SCAN_QUERIES:
+        return None
+    out_schema = StructType([
+        StructField("query_id", queries.schema[id_col].dataType),
+        StructField("neighbor_id", corpus.schema[id_col].dataType),
+        StructField("score", DoubleType()),
+    ])
+    if not len(qp):
+        scored = corpus.sparkSession.createDataFrame([], out_schema)
+    else:
+        Q, qids = _stack(qp[vec_col]), qp[id_col].to_numpy()
+        fn = _local_topk(scorer(Q, qids), qids, k)
+        scored = corpus.select(id_col, vec_col).mapInPandas(fn, out_schema)
+    return _topk_per_query(scored, k)
 
-    nq = np.zeros(len(Q))
+
+def _fold_scorer(Q, qids):
+    """Exact cosine of each corpus vector against every query. Floating-
+    point parity with the pure-Column ``cosine`` fold is STRUCTURAL: dot
+    products and norms accumulate dimension-by-dimension left-to-right
+    (one vectorized += per dimension), i.e. the exact operation sequence
+    of ``F.aggregate(zip_with(...))`` per pair — scores are bit-identical,
+    not merely close (the driver hash-compares them against the DuckDB
+    oracle)."""
+    qn = np.zeros(len(Q))
     for j in range(Q.shape[1]):
-        nq += Q[:, j] * Q[:, j]
-    return np.sqrt(nq)
+        qn += Q[:, j] * Q[:, j]
+    qn = np.sqrt(qn)
+
+    def score(ids, V):
+        D = np.zeros((len(V), len(Q)))
+        nv = np.zeros(len(V))
+        for j in range(V.shape[1]):  # left-to-right fold, matches F.aggregate
+            D += V[:, j, None] * Q[None, :, j]
+            nv += V[:, j] * V[:, j]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            S = D / (np.sqrt(nv)[:, None] * qn[None, :])
+        ridx, cidx = np.nonzero(ids[:, None] != qids[None, :])  # no self-match
+        yield cidx, ids[ridx], S[ridx, cidx]
+
+    return score
 
 
 def brute_force_topk(
     corpus: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
-    k: int = 10, round_scores: int | None = 6, salt_partitions: int = 32,
-    strategy: str = "scan", max_query_rows: int = 65536,
-    compress_cap: int = 4_000_000,
+    k: int = 10,
 ) -> DataFrame:
     """Exact cosine top-k of `queries` (small, broadcast-shaped) against
-    `corpus`. Returns (query_id, neighbor_id, score, rank); self-matches
-    excluded; rank deterministic via (rounded score desc, neighbor asc).
+    `corpus`. Returns (query_id, neighbor_id, score, rank); null vectors
+    on either side excluded; self-matches excluded; rank deterministic
+    via (rounded score desc, neighbor asc).
 
-    ``strategy="scan"`` (default, the scale path): the corpus streams
-    through ONE Arrow pass that scores each vector against the query
-    matrix riding in the task closure and emits the partition-local
-    per-query top-k — no (corpus x queries) pair rows are ever
-    materialized, vs the ``join`` strategy which builds corpus x m rows
-    and evaluates the cosine fold INTERPRETED per element per row
-    (guide §4.1/§4.2; measured ~4x on the sf1.0 corpus). Scores are
-    bit-identical to the join path (see _bf_scan_fn). The query batch
-    is bounded: more than ``max_query_rows`` queries falls back to the
-    join strategy instead of silently OOMing the driver/task closure.
-    Null query/corpus vectors are excluded up front in the scan path
-    (they can match nothing).
-
-    The ranking runs through the salted two-phase top-k (see
-    _topk_per_query) so small query batches don't serialize the rank
-    stage onto n_queries cores."""
-    if strategy not in ("scan", "join"):
-        raise ValueError("strategy must be 'scan' or 'join'")
-    if strategy == "scan":
-        qp = (
-            queries.select(id_col, vec_col)
-            .where(F.col(vec_col).isNotNull())
-            .limit(max_query_rows + 1)
-            .toPandas()
-        )
-        if len(qp) > max_query_rows:
-            strategy = "join"  # bounded fallback, never a silent OOM
-    if strategy == "scan":
-        import numpy as np
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        spark = corpus.sparkSession
-        out_schema = StructType([
-            StructField("query_id", queries.schema[id_col].dataType),
-            StructField("neighbor_id", corpus.schema[id_col].dataType),
-            StructField("score", DoubleType()),
-        ])
-        if not len(qp):
-            scored = spark.createDataFrame([], out_schema)
-        else:
-            Qraw = np.stack([np.asarray(v, dtype=np.float64) for v in qp[vec_col]])
-            fn = _bf_scan_fn(
-                Qraw, fold_norms(Qraw), qp[id_col].to_numpy(), k,
-                round_scores, compress_cap,
-            )
-            scored = (
-                corpus.where(F.col(vec_col).isNotNull())
-                .select(id_col, vec_col)
-                .mapInPandas(fn, out_schema)
-            )
-        score = F.col("score")
-        if round_scores is not None:
-            score = F.round(score, round_scores)
-        scored = scored.select("query_id", "neighbor_id", score.alias("score"))
-        return _topk_per_query(scored, k, salt_partitions)
-
+    Runs as the one scan (module docstring) with ``_fold_scorer``;
+    measured ~4x over the pair join on the sf1.0 corpus, which builds
+    corpus x m rows and evaluates the cosine fold INTERPRETED per element
+    per row. That join, with bit-identical scores, runs only above
+    ``MAX_SCAN_QUERIES`` queries. The ranking runs through the salted
+    two-phase top-k (see _topk_per_query) so small query batches don't
+    serialize the rank stage onto n_queries cores."""
+    corpus = corpus.where(F.col(vec_col).isNotNull())
+    queries = queries.where(F.col(vec_col).isNotNull())
+    out = _scan_topk(corpus, queries, vec_col, id_col, k, _fold_scorer)
+    if out is not None:
+        return out
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     )
-    score = cosine(F.col("__qv"), F.col("__cv"))
-    if round_scores is not None:
-        score = F.round(score, round_scores)
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", score.alias("score"))
+        .select("query_id", "neighbor_id",
+                cosine(F.col("__qv"), F.col("__cv")).alias("score"))
     )
-    return _topk_per_query(scored, k, salt_partitions)
+    return _topk_per_query(scored, k)
 
 
 def fit_centroids(
@@ -259,8 +280,6 @@ def fit_centroids(
     xxhash64 of the vector — a map-side partial top-N, no full sort)
     of <= sample_rows vectors reaches the driver; Lloyd iterations run
     in numpy there. Returns a (K, dim) unit-row ndarray."""
-    import numpy as np
-
     rows = (
         corpus.select(F.col(vec_col).alias("v"))
         .where(F.col("v").isNotNull())
@@ -272,8 +291,7 @@ def fit_centroids(
         raise ValueError(
             f"cannot fit centroids: column {vec_col!r} has no non-null vectors"
         )
-    X = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit(np.asarray([list(r["v"]) for r in rows], dtype=np.float64))
     k = min(int(n_centroids), len(X))
     rng = np.random.RandomState(seed)
     # kmeans++-style seeding on the sample. The best-similarity vector
@@ -296,106 +314,32 @@ def fit_centroids(
             m = X[assign == j]
             if len(m):
                 C[j] = m.mean(axis=0)
-        C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+        C = _unit(C)
     return C
 
 
-def _bucket_udfs(cents):
-    """Arrow-vectorized centroid assignment: one numpy matmul per batch
-    (the round-1 version scored every centroid through interpreted
-    F.transform/F.aggregate lambdas — per-element Python-free but
-    interpreted per ROW per CENTROID in the JVM, the dominant cost of
-    the assignment pass at corpus scale)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = cents  # (K, d), unit rows; captured by value in the closure
-
-    def _unit(s: pd.Series):
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in s])
-        return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-
-    def assign1(s):
-        return pd.Series(np.argmax(_unit(s) @ C.T, axis=1).astype(np.int32))
-
-    def topn_factory(n: int):
-        def topn(s):
-            sims = _unit(s) @ C.T
-            idx = np.argsort(-sims, axis=1, kind="stable")[:, :n]
-            return pd.Series(list(idx.astype(np.int32)))
-
-        return topn
-
-    # explicit SCALAR eval type: `from __future__ import annotations`
-    # stringifies hints, which pyspark's hint inference cannot resolve
-    return (
-        pandas_udf(assign1, "int", functionType=200),
-        lambda n: pandas_udf(topn_factory(n), "array<int>", functionType=200),
-    )
+def _probe(Q, cents, nprobe: int):
+    """Each query's ``nprobe`` closest centroid buckets (stable order)."""
+    return np.argsort(-(_unit(Q) @ cents.T), axis=1, kind="stable")[:, :nprobe]
 
 
-def _select_topk_np(qi, nid, sc, k: int, round_dp: int | None = 6):
-    """Vectorized per-query top-k of flat (query_idx, neighbor_id, score)
-    arrays. Ordering matches the plan-side rank exactly: score rounded
-    HALF-AWAY-FROM-ZERO to ``round_dp`` decimals (Spark/DuckDB ROUND
-    semantics) descending, then neighbor_id ascending — rounding BEFORE
-    selection so a rounded-tie winner by id cannot be dropped by a
-    raw-score cut. ``round_dp=None`` ranks on raw scores."""
-    import numpy as np
+def _bucket_scorer(cents, nprobe: int):
+    """IVF scorer factory: assign each corpus vector of a batch to its
+    centroid bucket (one matmul) and rescore it against only the queries
+    probing that bucket (one matmul per bucket-group)."""
 
-    if round_dp is None:
-        r = sc
-    else:
-        p = 10.0 ** round_dp
-        r = np.copysign(np.floor(np.abs(sc) * p + 0.5) / p, sc)
-    order = np.lexsort((nid, -r, qi))
-    qs = qi[order]
-    starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-    sizes = np.diff(np.r_[starts, len(qs)])
-    rank = np.arange(len(qs)) - np.repeat(starts, sizes)
-    keep = order[rank < k]
-    return qi[keep], nid[keep], sc[keep]
+    def scorer(Q, qids):
+        qn = np.linalg.norm(Q, axis=1)
+        # invert probe lists: bucket -> query indices (driver-side, tiny)
+        bq: dict[int, list] = {}
+        for j, buckets in enumerate(_probe(Q, cents, nprobe)):
+            for b in buckets:
+                bq.setdefault(int(b), []).append(j)
+        bq = {b: np.asarray(js, dtype=np.int64) for b, js in bq.items()}
 
-
-def _scan_topk_fn(cents, Qraw, qn, qids, probe, k: int, compress_cap: int):
-    """mapInPandas generator: per PARTITION, assign each corpus vector to
-    its centroid bucket, rescore it against only the queries probing that
-    bucket, and emit the partition-local per-query top-k. One Arrow pass
-    over the corpus, no join, no corpus shuffle; candidate state is
-    compressed to per-query top-k whenever it exceeds ``compress_cap``
-    rows, so task memory is O(cap + batch) regardless of partition size."""
-    import numpy as np
-    import pandas as pd
-
-    C = cents
-    m = len(qids)
-    # invert probe lists: bucket -> query indices (driver-side, tiny)
-    bq: dict[int, object] = {}
-    for j in range(m):
-        for b in probe[j]:
-            bq.setdefault(int(b), []).append(j)
-    bq = {b: np.asarray(js, dtype=np.int64) for b, js in bq.items()}
-
-    def fn(batches):
-        acc_q, acc_n, acc_s, acc_rows = [], [], [], 0
-
-        def compress():
-            nonlocal acc_q, acc_n, acc_s, acc_rows
-            qi = np.concatenate(acc_q)
-            ni = np.concatenate(acc_n)
-            sc = np.concatenate(acc_s)
-            qi, ni, sc = _select_topk_np(qi, ni, sc, k)
-            acc_q, acc_n, acc_s, acc_rows = [qi], [ni], [sc], len(qi)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf.iloc[:, 0].to_numpy()
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf.iloc[:, 1]])
+        def score(ids, V):
             vn = np.linalg.norm(V, axis=1)
-            Vu = V / np.maximum(vn[:, None], 1e-12)
-            assign = np.argmax(Vu @ C.T, axis=1)
+            assign = np.argmax(_unit(V) @ cents.T, axis=1)
             order = np.argsort(assign, kind="stable")
             sa = assign[order]
             bounds = np.flatnonzero(np.r_[True, sa[1:] != sa[:-1]])
@@ -404,129 +348,79 @@ def _scan_topk_fn(cents, Qraw, qn, qids, probe, k: int, compress_cap: int):
                 if js is None:
                     continue
                 rows = order[s:e]
-                S = (V[rows] @ Qraw[js].T) / np.maximum(
+                S = (V[rows] @ Q[js].T) / np.maximum(
                     np.outer(vn[rows], qn[js]), 1e-300
                 )
                 ok = ids[rows][:, None] != qids[js][None, :]  # no self-match
                 ridx, cidx = np.nonzero(ok)
-                acc_q.append(js[cidx])
-                acc_n.append(ids[rows][ridx])
-                acc_s.append(S[ridx, cidx])
-                acc_rows += len(ridx)
-            if acc_rows > compress_cap:
-                compress()
-        if acc_rows:
-            compress()
-            qi, ni, sc = acc_q[0], acc_n[0], acc_s[0]
-            yield pd.DataFrame(
-                {"query_id": qids[qi], "neighbor_id": ni, "score": sc}
-            )
+                yield js[cidx], ids[rows][ridx], S[ridx, cidx]
 
-    return fn
+        return score
+
+    return scorer
+
+
+def _bucket_udfs(cents, nprobe: int):
+    """The IVF join fallback's Arrow-vectorized bucket assignment and
+    probe selection — the same numpy as ``_bucket_scorer``, one matmul
+    per batch (the round-1 version scored every centroid through
+    interpreted F.transform/F.aggregate lambdas, the dominant cost of
+    the assignment pass at corpus scale)."""
+
+    def assign(s):
+        return pd.Series(np.argmax(_unit(_stack(s)) @ cents.T, axis=1).astype(np.int32))
+
+    def probe(s):
+        return pd.Series(list(_probe(_stack(s), cents, nprobe).astype(np.int32)))
+
+    # explicit SCALAR eval type: `from __future__ import annotations`
+    # stringifies hints, which pyspark's hint inference cannot resolve
+    return (
+        pandas_udf(assign, "int", functionType=200),
+        pandas_udf(probe, "array<int>", functionType=200),
+    )
 
 
 def ivf_topk(
     corpus: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
     k: int = 10, n_centroids: int = 16, nprobe: int = 4, seed: int = 42,
-    vectorized_rescore: bool = True, salt_partitions: int = 32,
-    strategy: str = "scan", compress_cap: int = 4_000_000,
-    max_query_rows: int = 65536,
 ) -> DataFrame:
     """IVF-bucketed ANN: seeded spherical-k-means centroids (fit on a
     bounded driver sample), bucket-pruned cosine search: each query
     scans only its `nprobe` closest centroid buckets (~nprobe/K of the
     corpus). Null vectors on either side are excluded up front.
 
-    ``strategy="scan"`` (default, the scale path): the query matrix +
-    per-bucket probe lists ride in the task closure (the query batch is
-    small and broadcast-shaped by construction — same bound as the
-    ``join`` path's broadcast) and the corpus streams through ONE
-    mapInPandas pass that assigns buckets, rescores each vector against
-    only the queries probing its bucket (numpy matmul per bucket-group),
-    and emits the partition-local per-query top-k. No join, no corpus
-    shuffle, and the final rank sees only partitions x queries x k rows
-    — vs the ``join`` strategy, which materializes every
-    (candidate, query) pair as a row (corpus x m x nprobe/K pairs, both
-    vectors serialized through Arrow per pair) and shuffles all of them
-    into the rank window. At a 1536-query batch over 8M vectors that is
-    ~96M pair rows / ~100 GB of Arrow traffic vs ~4 GB for the scan.
-
-    ``strategy="join"`` keeps the pair-join plan (assignment UDF +
-    broadcast bucket join + Arrow pair rescore; ``vectorized_rescore``
-    applies only there). Local top-k ordering in the scan path rounds
-    scores to 6 dp half-away-from-zero (Spark ROUND) before selection so
-    its tie-breaks agree with the plan-side rank; emitted scores are
-    rounded by the plan's ``F.round`` itself."""
-    if strategy not in ("scan", "join"):
-        raise ValueError("strategy must be 'scan' or 'join'")
+    Runs as the one scan (module docstring) with ``_bucket_scorer``: the
+    query matrix and per-bucket probe lists ride in the task closure,
+    and the final rank sees only partitions x queries x k rows. Above
+    ``MAX_SCAN_QUERIES`` queries the pair join runs instead (assignment
+    UDF + broadcast bucket join + Arrow pair rescore), which materializes
+    every (candidate, query) pair as a row and shuffles all of them into
+    the rank window: at a 1536-query batch over 8M vectors that is ~96M
+    pair rows / ~100 GB of Arrow traffic vs ~4 GB for the scan."""
     corpus = corpus.where(F.col(vec_col).isNotNull())
     queries = queries.where(F.col(vec_col).isNotNull())
     cents = fit_centroids(corpus, vec_col, n_centroids, seed=seed)
-
-    if strategy == "scan":
-        # bounded collect (advice r5): the scan strategy ships the query
-        # matrix in every task closure — a huge query set must fall back
-        # to the join plan, which degrades gracefully, instead of
-        # silently OOMing the driver on toPandas
-        qp = (
-            queries.select(id_col, vec_col)
-            .limit(int(max_query_rows) + 1)
-            .toPandas()
-        )
-        if len(qp) > max_query_rows:
-            strategy = "join"
-
-    if strategy == "scan":
-        import numpy as np
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        spark = corpus.sparkSession
-        out_schema = StructType([
-            StructField("query_id", queries.schema[id_col].dataType),
-            StructField("neighbor_id", corpus.schema[id_col].dataType),
-            StructField("score", DoubleType()),
-        ])
-        if not len(qp):
-            scored = spark.createDataFrame([], out_schema)
-        else:
-            Qraw = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in qp[vec_col]]
-            )
-            qn = np.linalg.norm(Qraw, axis=1)
-            Qu = Qraw / np.maximum(qn[:, None], 1e-12)
-            # same probe selection as the join path's topn udf
-            sims = Qu @ cents.T
-            probe = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-            fn = _scan_topk_fn(
-                cents, Qraw, qn, qp[id_col].to_numpy(), probe, k, compress_cap
-            )
-            scored = corpus.select(id_col, vec_col).mapInPandas(fn, out_schema)
-        scored = scored.select(
-            "query_id", "neighbor_id", F.round("score", 6).alias("score")
-        )
-        return _topk_per_query(scored, k, salt_partitions)
-
-    assign1, topn = _bucket_udfs(cents)
+    out = _scan_topk(
+        corpus, queries, vec_col, id_col, k, _bucket_scorer(cents, nprobe)
+    )
+    if out is not None:
+        return out
+    assign, probe = _bucket_udfs(cents, nprobe)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
-        assign1(F.col(vec_col)).alias("bucket"),
+        assign(F.col(vec_col)).alias("bucket"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
-        F.explode(topn(nprobe)(F.col(vec_col))).alias("bucket"),
+        F.explode(probe(F.col(vec_col))).alias("bucket"),
     )
-    if vectorized_rescore:
-        score = cosine_pairs_udf()(F.col("__qv"), F.col("__cv"))
-    else:
-        score = cosine(F.col("__qv"), F.col("__cv"))
     scored = (
         c.join(F.broadcast(q), ["bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(score, 6).alias("score"),
-        )
+        .select("query_id", "neighbor_id",
+                cosine_pairs_udf()(F.col("__qv"), F.col("__cv")).alias("score"))
     )
-    return _topk_per_query(scored, k, salt_partitions)
+    return _topk_per_query(scored, k)

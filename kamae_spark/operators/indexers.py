@@ -99,18 +99,31 @@ def collect_labels(
     return [r["v"] for r in ordered.select("v").collect()]
 
 
-def index_expr(x: Column, labels: Sequence[str], mask_token: str | None,
-               num_oov_indices: int) -> Column:
-    """The vocab-lookup expression (see module docstring for layout)."""
-    start = 1 if mask_token is not None else 0
-    offset = start + num_oov_indices
+def vocab_offset(mask_token: str | None, num_oov_indices: int) -> int:
+    """Index of the first vocab label: after the mask slot and the OOV
+    buckets."""
+    return (1 if mask_token is not None else 0) + num_oov_indices
+
+
+def literal_lookup(x: Column, labels: Sequence[str], offset: int) -> Column:
+    """Small-vocab lookup: a ``map_from_arrays`` literal probe, null for
+    unseen labels."""
     labels = list(labels)
-    lookup = F.try_element_at(
+    return F.try_element_at(
         F.map_from_arrays(
             F.lit(labels), F.lit(list(range(offset, offset + len(labels))))
         ),
         x,
     )
+
+
+def index_expr(x: Column, lookup: Column, mask_token: str | None,
+               num_oov_indices: int) -> Column:
+    """The one index layout (see module docstring) around a vocab
+    ``lookup`` that is null for unseen labels. Every tier wraps its own
+    lookup: the literal tier ``literal_lookup``, the join tier the
+    joined index column, ``fallback_expr`` a typed null."""
+    start = 1 if mask_token is not None else 0
     if num_oov_indices > 0:
         oov = (F.pmod(F.xxhash64(x), F.lit(num_oov_indices)) + start).cast("int")
         expr = F.coalesce(lookup, oov)
@@ -123,19 +136,11 @@ def index_expr(x: Column, labels: Sequence[str], mask_token: str | None,
 
 
 def fallback_expr(x: Column, mask_token: str | None, num_oov_indices: int) -> Column:
-    """``index_expr`` minus the vocab lookup: the value an element gets
+    """``index_expr`` with an empty vocab: the value an element gets
     when it is NOT in the vocab (null -> 0, mask -> 0, else OOV hash
     bucket; null when num_oov_indices == 0). Computed JVM-side so the
     big-vocab dict path shares the literal path's exact OOV hashing."""
-    start = 1 if mask_token is not None else 0
-    if num_oov_indices > 0:
-        oov = (F.pmod(F.xxhash64(x), F.lit(num_oov_indices)) + start).cast("int")
-        expr = F.when(x.isNull(), F.lit(0)).otherwise(oov)
-    else:
-        expr = F.lit(None).cast("int")
-    if mask_token is not None:
-        expr = F.when(x == F.lit(mask_token), F.lit(0)).otherwise(expr)
-    return expr.cast("int")
+    return index_expr(x, F.lit(None).cast("int"), mask_token, num_oov_indices)
 
 
 class StringIndexTransformer(ElementwiseTransform):
@@ -167,7 +172,9 @@ class StringIndexTransformer(ElementwiseTransform):
         pass
 
     def _index_expr(self, x: Column) -> Column:
-        return index_expr(x, self.labels, self.mask_token, self.num_oov_indices)
+        offset = vocab_offset(self.mask_token, self.num_oov_indices)
+        return index_expr(x, literal_lookup(x, self.labels, offset),
+                          self.mask_token, self.num_oov_indices)
 
     def fn(self, x: Column) -> Column:
         return self._index_expr(x)
@@ -212,8 +219,7 @@ class StringIndexTransformer(ElementwiseTransform):
         import pandas as pd
 
         spark = df.sparkSession
-        start = 1 if self.mask_token is not None else 0
-        offset = start + self.num_oov_indices
+        offset = vocab_offset(self.mask_token, self.num_oov_indices)
         vocab = spark.createDataFrame(
             pd.DataFrame(
                 {
@@ -226,15 +232,8 @@ class StringIndexTransformer(ElementwiseTransform):
         )
         x = self._in(df, in_c)
         joined = df.join(F.broadcast(vocab), x == F.col("__label"), "left")
-        if self.num_oov_indices > 0:
-            oov = (F.pmod(F.xxhash64(x), F.lit(self.num_oov_indices)) + start).cast("int")
-            expr = F.coalesce(F.col("__vidx").cast("int"), oov)
-            expr = F.when(x.isNull(), F.lit(0)).otherwise(expr)
-        else:
-            expr = F.col("__vidx").cast("int")  # unseen/null -> null
-        if self.mask_token is not None:
-            expr = F.when(x == F.lit(self.mask_token), F.lit(0)).otherwise(expr)
-        return joined.select(*df.columns, self._out(df, expr.cast("int")).alias(out_c))
+        expr = index_expr(x, F.col("__vidx"), self.mask_token, self.num_oov_indices)
+        return joined.select(*df.columns, self._out(df, expr).alias(out_c))
 
     def _dict_lookup(self, df: DataFrame, in_c: str, out_c: str, level: int) -> DataFrame:
         """Big-vocab lookup for (nested) array columns: broadcast the
@@ -249,8 +248,7 @@ class StringIndexTransformer(ElementwiseTransform):
 
         import pandas as pd
 
-        start = 1 if self.mask_token is not None else 0
-        offset = start + self.num_oov_indices
+        offset = vocab_offset(self.mask_token, self.num_oov_indices)
         bc = df.sparkSession.sparkContext.broadcast(
             {lab: i for i, lab in enumerate(self.labels, offset)}
         )
@@ -376,9 +374,9 @@ class OneHotTransformer(ElementwiseTransform):
         pass
 
     def fn(self, x: Column) -> Column:
-        idx = index_expr(x, self.labels, self.mask_token, self.num_oov_indices)
-        start = 1 if self.mask_token is not None else 0
-        offset = start + self.num_oov_indices
+        offset = vocab_offset(self.mask_token, self.num_oov_indices)
+        idx = index_expr(x, literal_lookup(x, self.labels, offset),
+                         self.mask_token, self.num_oov_indices)
         if self.drop_unseen:
             n = len(self.labels)
             target = idx - offset

@@ -19,8 +19,8 @@ Scale design:
 - deterministic ordering: order specs should include a unique
   tie-breaker (e.g. ``["ts", "turn_idx"]``) per SURVEY.md §7 risk 2
 - skew: conversations are bounded (≤ ~10^4 turns) so per-key state fits
-  an executor; hot-key salting applies to associative rolling stats only
-  and is provided by ``kamae_spark.sources.io.repartition_salted``
+  an executor; hot keys are not salted, because a window needs all rows
+  of its key in one partition
 """
 
 from __future__ import annotations

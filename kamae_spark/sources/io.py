@@ -78,37 +78,6 @@ def bucket_expr(key_cols: Sequence[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
-def repartition_salted(
-    df: DataFrame, key: str, num_partitions: int, salt: int = 8,
-    salt_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Spread hot keys across `salt` sub-partitions for associative
-    downstream work (writes, partial aggregates). NOT for window
-    operators — those need all rows of a key together (SURVEY.md §7
-    risk 3); their skew relief is AQE + per-conversation length bounds.
-
-    The salt derives from ROW CONTENT (hash of ``salt_cols``, default:
-    every non-map column — xxhash64 cannot hash map types), never from
-    F.rand: a random expression is re-evaluated with different values
-    when a map task is recomputed after a fetch failure, migrating rows
-    between partitions across retries — the classic duplicate/lost-row
-    hazard in downstream shuffles and writes. Limitation of content
-    salting: rows that are IDENTICAL in ``salt_cols`` all land in one
-    sub-partition, so a hot key made of exact-duplicate rows gets no
-    relief — pass a higher-cardinality ``salt_cols`` subset (e.g. a
-    unique id) when that matters."""
-    from pyspark.sql.types import MapType
-
-    if salt_cols is None:
-        salt_cols = [
-            f.name for f in df.schema.fields if not isinstance(f.dataType, MapType)
-        ]
-    if not salt_cols:
-        raise ValueError("repartition_salted: no hashable salt columns")
-    content_salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(salt))
-    return df.repartition(num_partitions, F.col(key), content_salt)
-
-
 class CheckpointedFeatureWriter:
     """Resumable partition-scoped feature-table writer.
 

@@ -80,29 +80,6 @@ def test_bucket_pruning_in_plan(spark, transcripts, tmp_path):
     assert "PushedFilters" in plan or "Filter" in plan
 
 
-def test_repartition_salted_balances_hot_keys(spark):
-    """A pathologically hot key must spread across partitions after
-    salted repartitioning (associative downstream work only)."""
-    from pyspark.sql import functions as F
-
-    from kamae_spark.sources.io import repartition_salted
-
-    hot = spark.range(10000).select(F.lit("hot_conv").alias("conv_id"), "id")
-    cold = spark.range(1000).select(
-        F.concat(F.lit("c"), F.col("id").cast("string")).alias("conv_id"), "id"
-    )
-    df = hot.unionByName(cold)
-    out = repartition_salted(df, "conv_id", 8, salt=8)
-    sizes = [
-        r["n"]
-        for r in out.groupBy(F.spark_partition_id().alias("p")).agg(
-            F.count("*").alias("n")
-        ).collect()
-    ]
-    assert len(sizes) == 8
-    assert max(sizes) < 11000 * 0.5  # hot key no longer on one partition
-
-
 def test_read_write_table_parquet_roundtrip(spark, tmp_path):
     from kamae_spark.sources.io import read_table, write_table
 
@@ -126,21 +103,6 @@ def test_read_table_time_travel_requires_iceberg(spark):
 
     with pytest.raises(ValueError, match="time travel"):
         read_table(spark, "/nonexistent", fmt="parquet", snapshot_id=1)
-
-
-def test_repartition_salted_skips_map_columns(spark):
-    """xxhash64 cannot hash map columns; the default salt subset must
-    exclude them (and salt_cols lets callers pick the subset)."""
-    from kamae_spark.sources.io import repartition_salted
-
-    df = spark.createDataFrame(
-        [(1, "a", {"k": "v"}), (2, "b", {"k": "w"})],
-        "id long, conv_id string, meta map<string,string>",
-    )
-    out = repartition_salted(df, "conv_id", 4, salt=2)
-    assert out.count() == 2
-    out2 = repartition_salted(df, "conv_id", 4, salt=2, salt_cols=["id"])
-    assert out2.count() == 2
 
 
 def test_corrupt_lineage_fails_the_run(spark, transcripts, tmp_path):

@@ -17,6 +17,7 @@ from kamae_spark.data.dedup import (
     ngram_jaccard_pairs,
     simhash_neardup_pairs,
 )
+from kamae_spark.data import dedup, similarity
 from kamae_spark.data.multimodal import extract_features, frame_sample_plan, synthesize_assets
 from kamae_spark.data.similarity import brute_force_topk, ivf_topk
 from kamae_spark.data.text import Fingerprint, LanguageId, QualityScore, TokenCount
@@ -290,16 +291,17 @@ def test_bucket_pairs_no_self_pairs_on_duplicate_ids(spark):
         assert set(zip(got["id_a"], got["id_b"])) == {(7, 8)}
 
 
-def test_minhash_adversarial_identical_docs(spark):
+def test_minhash_adversarial_identical_docs(spark, monkeypatch):
     """An all-identical corpus = one mega-bucket per band. The chunk
     guard must bound per-task state while still emitting every pair."""
+    monkeypatch.setattr(dedup, "BUCKET_CHUNK_CAP", 16)
     n = 120
     df = spark.createDataFrame(
         [(i, "exactly the same boilerplate header text") for i in range(n)],
         "id long, text string",
     )
     got = minhash_lsh_pairs(
-        df, "text", "id", num_perm=16, bands=4, threshold=0.9, chunk_cap=16
+        df, "text", "id", num_perm=16, bands=4, threshold=0.9
     ).toPandas()
     assert len(got) == n * (n - 1) // 2
     assert (got["jaccard"] == 1.0).all()
@@ -350,49 +352,34 @@ def test_vectorized_cosine_matches_column_fold(spark):
     assert np.allclose(got["fold"], got["vec"], atol=1e-12)
 
 
-def test_ivf_vectorized_rescore_matches_fold_path(embeddings):
-    """The vectorized rescoring must rank identically to the fold path."""
-    q = embeddings.where(F.col("vec_id") < 4)
-    a = ivf_topk(embeddings, q, "embedding", "vec_id", k=5, n_centroids=8,
-                 nprobe=8, vectorized_rescore=True).toPandas()
-    b = ivf_topk(embeddings, q, "embedding", "vec_id", k=5, n_centroids=8,
-                 nprobe=8, vectorized_rescore=False).toPandas()
-    key = ["query_id", "rank"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert a["neighbor_id"].tolist() == b["neighbor_id"].tolist()
-    assert np.allclose(a["score"], b["score"], atol=1e-6)
-
-
-def test_salted_topk_identical_to_single_window(embeddings):
+def test_salted_topk_identical_to_single_window(embeddings, monkeypatch):
     """The two-phase salted top-k must be bit-identical to the plain
     per-query window for both the exact and IVF paths."""
     q = embeddings.where(F.col("vec_id") < 5)
-    a = brute_force_topk(embeddings, q, "embedding", "vec_id", k=7,
-                         salt_partitions=32).toPandas()
-    b = brute_force_topk(embeddings, q, "embedding", "vec_id", k=7,
-                         salt_partitions=0).toPandas()
+    a = brute_force_topk(embeddings, q, "embedding", "vec_id", k=7).toPandas()
+    ia = ivf_topk(embeddings, q, "embedding", "vec_id", k=7, n_centroids=8,
+                  nprobe=8).toPandas()
+    monkeypatch.setattr(similarity, "TOPK_SALT", 0)
+    b = brute_force_topk(embeddings, q, "embedding", "vec_id", k=7).toPandas()
+    ib = ivf_topk(embeddings, q, "embedding", "vec_id", k=7, n_centroids=8,
+                  nprobe=8).toPandas()
     key = ["query_id", "rank"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)
     assert a.equals(b)
 
-    ia = ivf_topk(embeddings, q, "embedding", "vec_id", k=7, n_centroids=8,
-                  nprobe=8, salt_partitions=32).toPandas()
-    ib = ivf_topk(embeddings, q, "embedding", "vec_id", k=7, n_centroids=8,
-                  nprobe=8, salt_partitions=0).toPandas()
     ia = ia.sort_values(key).reset_index(drop=True)
     ib = ib.sort_values(key).reset_index(drop=True)
     assert ia.equals(ib)
 
 
-def test_salted_topk_plan_has_two_rank_stages(embeddings):
+def test_salted_topk_plan_has_two_rank_stages(embeddings, monkeypatch):
     """Regression fence: the salted path must rank in two window stages
     (parallelism n_queries x salt, then n_queries over salt*k rows) —
     not one giant per-query window."""
+    monkeypatch.setattr(similarity, "TOPK_SALT", 16)
     q = embeddings.where(F.col("vec_id") < 3)
-    out = brute_force_topk(embeddings, q, "embedding", "vec_id", k=5,
-                           salt_partitions=16)
+    out = brute_force_topk(embeddings, q, "embedding", "vec_id", k=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Window") >= 2, plan
 
@@ -504,7 +491,7 @@ def test_simhash_vectorized_batch_parity():
     assert (got == exp).all()
 
 
-def test_embedding_neardup_adversarial_identical_vectors(spark):
+def test_embedding_neardup_adversarial_identical_vectors(spark, monkeypatch):
     """A cluster of identical vectors collapses into ONE bucket — the
     normal shape of a dedup corpus. The chunk-guarded candidate path
     must (a) emit the exact full pair set and (b) contain NO join at
@@ -516,7 +503,8 @@ def test_embedding_neardup_adversarial_identical_vectors(spark):
     df = spark.createDataFrame(
         [(i, vec) for i in range(n)] + extra, "id long, vec array<double>"
     )
-    q = embedding_neardup_pairs(df, "vec", "id", threshold=0.999, n_bits=4, chunk_cap=16)
+    monkeypatch.setattr(dedup, "BUCKET_CHUNK_CAP", 16)
+    q = embedding_neardup_pairs(df, "vec", "id", threshold=0.999, n_bits=4)
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
     got = q.toPandas()
@@ -526,7 +514,7 @@ def test_embedding_neardup_adversarial_identical_vectors(spark):
     assert int(got[["id_a", "id_b"]].max().max()) < n + 1
 
 
-def test_embedding_neardup_chunked_equals_unchunked(spark):
+def test_embedding_neardup_chunked_equals_unchunked(spark, monkeypatch):
     """Chunk guard must not change the emitted pair set on random data."""
     rng = np.random.RandomState(5)
     base = rng.randn(12, 6)
@@ -537,9 +525,11 @@ def test_embedding_neardup_chunked_equals_unchunked(spark):
             rows.append((rid, (b + rng.randn(6) * 0.003).tolist()))
             rid += 1
     df = spark.createDataFrame(rows, "id long, vec array<double>")
-    kw = dict(threshold=0.98, n_bits=5, n_rows=len(rows), dim=6)
-    a = embedding_neardup_pairs(df, "vec", "id", chunk_cap=4, **kw).toPandas()
-    b = embedding_neardup_pairs(df, "vec", "id", chunk_cap=None, **kw).toPandas()
+    kw = dict(threshold=0.98, n_bits=5)
+    monkeypatch.setattr(dedup, "BUCKET_CHUNK_CAP", 4)
+    a = embedding_neardup_pairs(df, "vec", "id", **kw).toPandas()
+    monkeypatch.setattr(dedup, "BUCKET_CHUNK_CAP", None)
+    b = embedding_neardup_pairs(df, "vec", "id", **kw).toPandas()
     key = lambda t: set(zip(t["id_a"], t["id_b"]))
     assert key(a) == key(b) and len(a) == len(b)
 
@@ -584,44 +574,71 @@ def _ivf_corpus(spark):
     )
 
 
-def test_ivf_scan_equals_join_strategy(_ivf_corpus):
+def _rows(t):
+    return sorted(map(tuple, t.toPandas()[
+        ["query_id", "neighbor_id", "score", "rank"]].values.tolist()))
+
+
+def test_ivf_scan_equals_join_strategy(_ivf_corpus, monkeypatch):
     """The partition-local scan plan must return EXACTLY the join plan's
     result (same candidates by construction: same centroids, same probe
     selection, same rounding/tie order) — including mid-stream top-k
-    compression (compress_cap small enough to trigger per batch)."""
+    compression (SCAN_COMPRESS_ROWS small enough to trigger per batch)."""
     q = _ivf_corpus.where(F.col("vec_id") < 40)
     kw = dict(k=10, n_centroids=12, nprobe=5)
-    ref = ivf_topk(_ivf_corpus, q, "embedding", "vec_id", strategy="join", **kw)
-    ref = sorted(map(tuple, ref.toPandas()[
-        ["query_id", "neighbor_id", "score", "rank"]].values.tolist()))
-    for extra in ({}, {"compress_cap": 50}):
-        got = ivf_topk(_ivf_corpus, q, "embedding", "vec_id",
-                       strategy="scan", **kw, **extra)
-        got = sorted(map(tuple, got.toPandas()[
-            ["query_id", "neighbor_id", "score", "rank"]].values.tolist()))
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "MAX_SCAN_QUERIES", 0)  # forces the join plan
+        ref = _rows(ivf_topk(_ivf_corpus, q, "embedding", "vec_id", **kw))
+    for cap in (similarity.SCAN_COMPRESS_ROWS, 50):
+        monkeypatch.setattr(similarity, "SCAN_COMPRESS_ROWS", cap)
+        got = _rows(ivf_topk(_ivf_corpus, q, "embedding", "vec_id", **kw))
         assert got == ref and len(got) == 400
+
+
+@pytest.mark.parametrize("search", ["brute_force", "ivf"])
+def test_scan_equals_join_with_null_vectors(spark, monkeypatch, search):
+    """Both plans give one answer when nulls are present: a null query
+    vector gets no row and a null corpus vector is nobody's neighbour."""
+    rng = np.random.RandomState(5)
+    rows = [(i, rng.randn(8).tolist()) for i in range(40)]
+    rows += [(40, None), (41, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.where(F.col("vec_id").isin(0, 1, 2, 41))
+
+    def run():
+        if search == "brute_force":
+            return brute_force_topk(df, q, "embedding", "vec_id", k=5)
+        return ivf_topk(df, q, "embedding", "vec_id", k=5, n_centroids=4, nprobe=2)
+
+    scan = _rows(run())
+    monkeypatch.setattr(similarity, "MAX_SCAN_QUERIES", 0)
+    join = _rows(run())
+    assert scan == join and len(scan) == 15
+    assert {r[0] for r in scan} == {0, 1, 2}
+    assert not {40, 41} & {r[1] for r in scan}
 
 
 def test_ivf_scan_degenerate_equals_brute_force(_ivf_corpus):
     """nprobe == K probes every bucket -> scan must equal exact top-k."""
     q = _ivf_corpus.where(F.col("vec_id") < 8)
     a = ivf_topk(_ivf_corpus, q, "embedding", "vec_id", k=10,
-                 n_centroids=8, nprobe=8, strategy="scan").toPandas()
+                 n_centroids=8, nprobe=8).toPandas()
     b = brute_force_topk(_ivf_corpus, q, "embedding", "vec_id", k=10).toPandas()
     key = lambda t: sorted(map(tuple, t[["query_id", "neighbor_id", "rank"]].values.tolist()))
     assert key(a) == key(b)
 
 
-def test_ivf_scan_string_ids(spark):
+def test_ivf_scan_string_ids(spark, monkeypatch):
     rng = np.random.RandomState(11)
     rows = [(f"id_{i:04d}", rng.randn(8).tolist()) for i in range(400)]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>").cache()
     q = df.where(F.col("vec_id") < "id_0005")
     key = lambda t: sorted(map(tuple, t[["query_id", "neighbor_id", "score", "rank"]].values.tolist()))
-    a = ivf_topk(df, q, "embedding", "vec_id", k=5, n_centroids=6, nprobe=6,
-                 strategy="scan").toPandas()
-    b = ivf_topk(df, q, "embedding", "vec_id", k=5, n_centroids=6, nprobe=6,
-                 strategy="join").toPandas()
+    a = ivf_topk(df, q, "embedding", "vec_id", k=5, n_centroids=6,
+                 nprobe=6).toPandas()
+    monkeypatch.setattr(similarity, "MAX_SCAN_QUERIES", 0)
+    b = ivf_topk(df, q, "embedding", "vec_id", k=5, n_centroids=6,
+                 nprobe=6).toPandas()
     assert key(a) == key(b) and len(a) == 25
 
 
@@ -633,7 +650,7 @@ def test_ivf_scan_plan_no_join_no_corpus_shuffle(_ivf_corpus):
 
     q = _ivf_corpus.where(F.col("vec_id") < 10)
     out = ivf_topk(_ivf_corpus, q, "embedding", "vec_id", k=10,
-                   n_centroids=12, nprobe=5, strategy="scan")
+                   n_centroids=12, nprobe=5)
     assert out.count() == 100
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
@@ -644,7 +661,7 @@ def test_ivf_scan_plan_no_join_no_corpus_shuffle(_ivf_corpus):
 def test_ivf_scan_empty_queries(_ivf_corpus):
     q = _ivf_corpus.where("vec_id < -1")
     out = ivf_topk(_ivf_corpus, q, "embedding", "vec_id", k=5,
-                   n_centroids=8, strategy="scan")
+                   n_centroids=8)
     assert out.count() == 0
 
 

@@ -177,11 +177,12 @@ def test_bucketize_and_math2_chain_stays_codegen(spark, scalar_features):
     assert "*(1)" in plan, plan
 
 
-def test_ivf_corpus_side_is_one_arrow_pass(spark):
+def test_ivf_corpus_side_is_one_arrow_pass(spark, monkeypatch):
     """IVF corpus side must be ONE Arrow pass over the corpus scan —
-    scan strategy: a single MapInPandas (assign+rescore+local top-k
-    fused), no join node at all; join strategy: a single ArrowEvalPython
+    scan plan: a single MapInPandas (assign+rescore+local top-k
+    fused), no join node at all; join fallback: a single ArrowEvalPython
     assignment. Neither may fall back to row-at-a-time Python."""
+    from kamae_spark.data import similarity
     from kamae_spark.data.similarity import ivf_topk
     from kamae_spark.sources.synth import embeddings_table
 
@@ -189,13 +190,12 @@ def test_ivf_corpus_side_is_one_arrow_pass(spark):
     emb.count()
     q = emb.where(F.col("vec_id") < 2)
     kw = dict(k=5, n_centroids=4, nprobe=2)
-    plan = _executed(ivf_topk(emb, q, "embedding", "vec_id",
-                              strategy="scan", **kw))
+    plan = _executed(ivf_topk(emb, q, "embedding", "vec_id", **kw))
     assert "MapInPandas" in plan, plan
     assert "Join" not in plan, plan
     assert "BatchEvalPython" not in plan, plan  # no row-at-a-time Python
-    plan = _executed(ivf_topk(emb, q, "embedding", "vec_id",
-                              strategy="join", **kw))
+    monkeypatch.setattr(similarity, "MAX_SCAN_QUERIES", 0)  # join fallback
+    plan = _executed(ivf_topk(emb, q, "embedding", "vec_id", **kw))
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan, plan
     emb.unpersist()
