@@ -1,4 +1,4 @@
-.PHONY: test tier1 test-fast contract oracles bench scaling package
+.PHONY: test tier1 test-fast contract oracles bench scaling package loc
 
 test:
 	python -m pytest tests/ -q
@@ -28,3 +28,7 @@ scaling:
 
 package:
 	python scripts/package.py
+
+# code lines per kamae_spark/ module and the total (no blanks, comments or docstrings)
+loc:
+	python scripts/loc.py

@@ -15,12 +15,12 @@ differ only in the scorer the scan runs:
   the queries probing that bucket (``_bucket_scorer``). Bucket pruning
   turns a full scan into ~nprobe/K of the pair work.
 
-Null vectors are excluded up front by both. A query batch larger than
-``MAX_SCAN_QUERIES`` cannot close over the tasks, so only then does a
-search fall back to its pair-join plan (a broadcast join that degrades
-gracefully instead of OOMing the driver on the bounded collect); the
-join plans give the scan's exact answer and tests use them as its
-reference.
+Null and zero-norm vectors are excluded up front by both. A query
+batch larger than ``MAX_SCAN_QUERIES`` cannot close over the tasks, so
+only then does a search fall back to its pair-join plan (a broadcast
+join that degrades gracefully instead of OOMing the driver on the
+bounded collect); the join plans give the scan's exact answer and tests
+use them as its reference.
 """
 
 from __future__ import annotations
@@ -98,6 +98,14 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _scorable(df: DataFrame, vec_col: str) -> DataFrame:
+    """Rows with a cosine to score: null and all-zero (zero-norm)
+    vectors are dropped, so neither plan ever sees one as a query or
+    a neighbour."""
+    v = F.col(vec_col)
+    return df.where(v.isNotNull() & F.exists(v, lambda x: x != 0))
 
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -240,9 +248,9 @@ def brute_force_topk(
     k: int = 10,
 ) -> DataFrame:
     """Exact cosine top-k of `queries` (small, broadcast-shaped) against
-    `corpus`. Returns (query_id, neighbor_id, score, rank); null vectors
-    on either side excluded; self-matches excluded; rank deterministic
-    via (rounded score desc, neighbor asc).
+    `corpus`. Returns (query_id, neighbor_id, score, rank); null and
+    zero-norm vectors on either side excluded; self-matches excluded;
+    rank deterministic via (rounded score desc, neighbor asc).
 
     Runs as the one scan (module docstring) with ``_fold_scorer``;
     measured ~4x over the pair join on the sf1.0 corpus, which builds
@@ -251,8 +259,7 @@ def brute_force_topk(
     ``MAX_SCAN_QUERIES`` queries. The ranking runs through the salted
     two-phase top-k (see _topk_per_query) so small query batches don't
     serialize the rank stage onto n_queries cores."""
-    corpus = corpus.where(F.col(vec_col).isNotNull())
-    queries = queries.where(F.col(vec_col).isNotNull())
+    corpus, queries = _scorable(corpus, vec_col), _scorable(queries, vec_col)
     out = _scan_topk(corpus, queries, vec_col, id_col, k, _fold_scorer)
     if out is not None:
         return out
@@ -388,7 +395,8 @@ def ivf_topk(
     """IVF-bucketed ANN: seeded spherical-k-means centroids (fit on a
     bounded driver sample), bucket-pruned cosine search: each query
     scans only its `nprobe` closest centroid buckets (~nprobe/K of the
-    corpus). Null vectors on either side are excluded up front.
+    corpus). Null and zero-norm vectors on either side are excluded up
+    front.
 
     Runs as the one scan (module docstring) with ``_bucket_scorer``: the
     query matrix and per-bucket probe lists ride in the task closure,
@@ -398,8 +406,7 @@ def ivf_topk(
     every (candidate, query) pair as a row and shuffles all of them into
     the rank window: at a 1536-query batch over 8M vectors that is ~96M
     pair rows / ~100 GB of Arrow traffic vs ~4 GB for the scan."""
-    corpus = corpus.where(F.col(vec_col).isNotNull())
-    queries = queries.where(F.col(vec_col).isNotNull())
+    corpus, queries = _scorable(corpus, vec_col), _scorable(queries, vec_col)
     cents = fit_centroids(corpus, vec_col, n_centroids, seed=seed)
     out = _scan_topk(
         corpus, queries, vec_col, id_col, k, _bucket_scorer(cents, nprobe)

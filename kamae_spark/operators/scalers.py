@@ -1,17 +1,28 @@
 """Scalers & imputation (reference SURVEY.md §2.7).
 
+The reference keeps standard, min-max and conditional standard scaling
+in separate files; here they are one affine scaler, ``(x - shift) /
+scale`` with a pass-through value. ``_AffineScale.build`` is the only
+scaling expression: a subclass supplies ``(shift, scale)`` as scalars
+or per-index lists, the pass-through value (``mask_value``, or 0.0
+under ``skip_zeros``) and an optional ``log10`` on the way in. List
+stats on a scalar column raise ``TypeError``.
+
 Fits are single-pass ``df.agg`` jobs (reference estimators/standard_scale.py:
-100-163, min_max_scale.py:102, impute.py:110-162). Per-dimension stats on
-flat array columns use one agg over ``element_at`` projections — a map-side
-partial aggregate that collapses to one row, no shuffle. NESTED (level>=2)
-inputs flatten + explode first so per-innermost-index stats pool across rows
-and outer dims (reference nested goldens); the explode feeds the same
-partial aggregate, still no shuffle beyond the final single-row collect.
+100-163, min_max_scale.py:102, impute.py:110-162), and ``_fit_pairs`` is
+the one fit the three affine estimators share: two statistics over the
+double-cast value, on a scalar column directly, and on an array column
+per innermost index through ``element_at`` projections — a map-side
+partial aggregate that collapses to one row, no shuffle. NESTED
+(level>=2) inputs flatten + explode first so per-innermost-index stats
+pool across rows and outer dims (reference nested goldens); the explode
+feeds the same partial aggregate, still no shuffle beyond the final
+single-row collect.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,11 +64,73 @@ def _vector_rows(src: DataFrame, col: Column, level: int) -> tuple[DataFrame, Co
     return src, col, int(row["n"])
 
 
-class StandardScaleTransformer(ElementwiseTransform):
-    """(x - mean) / stddev, per element for array inputs; mask values
-    pass through unscaled (reference transformers/standard_scale.py:99)."""
+def _fit_pairs(
+    src: DataFrame, col: Column, level: int,
+    stats: Callable[[Column], tuple[Column, Column]],
+    post: Callable[[float, float], tuple[float, float]] | None = None,
+):
+    """Fit ``stats(v) -> (Column, Column)`` on the double-cast value in one
+    agg and map each fitted pair through ``post``. A scalar column gives
+    one (a, b) pair of floats; an array column gives ([a_i], [b_i]) per
+    innermost index (``_vector_rows``)."""
+    post = post or (lambda a, b: (a, b))
+    if level == 0:
+        a, b = stats(col.cast("double"))
+        row = src.agg(a.alias("a"), b.alias("b")).first()
+        return post(_f(row["a"]), _f(row["b"]))
+    src, col, dim = _vector_rows(src, col, level)
+    aggs = []
+    for i in range(dim):
+        a, b = stats(F.element_at(col, i + 1).cast("double"))
+        aggs += [a.alias(f"a{i}"), b.alias(f"b{i}")]
+    row = src.agg(*aggs).first()
+    pairs = [post(_f(row[f"a{i}"]), _f(row[f"b{i}"])) for i in range(dim)]
+    return [a for a, _ in pairs], [b for _, b in pairs]
+
+
+class _AffineScale(ElementwiseTransform):
+    """``(pre(x) - shift) / scale``, per element for array inputs; x equal
+    to the ``_keep()`` value passes through unscaled. Scalar stats apply
+    at every nesting level, per-index lists to the innermost arrays."""
 
     compatible_dtypes = NUMERIC
+
+    def _affine(self) -> tuple:  # pragma: no cover - abstract
+        raise NotImplementedError
+
+    def _keep(self) -> float | None:
+        return self.mask_value
+
+    def _pre(self, x: Column) -> Column:
+        return x
+
+    def build(self, df: DataFrame):
+        self._validate(df)
+        level, _ = column_info(df, self.input_col)
+        col = self._in(df, self.input_col)
+        shift, scale = self._affine()
+        keep = self._keep()
+
+        def affine(x: Column, m: Column, s: Column) -> Column:
+            out = F.try_divide(self._pre(x) - m, s)
+            return out if keep is None else F.when(x == F.lit(keep), x).otherwise(out)
+
+        if not isinstance(shift, (list, tuple)):
+            m, s = F.lit(float(shift)), F.lit(float(scale))
+            expr = nested_transform(col, lambda x: affine(x, m, s), level)
+        else:
+            if level < 1:
+                raise TypeError("per-element stats require an array input column")
+            ms, ss = (F.lit([float(v) for v in a]) for a in (shift, scale))
+            expr = nested_transform(col, lambda arr: F.transform(
+                arr, lambda x, i: affine(x, F.element_at(ms, i + 1), F.element_at(ss, i + 1))
+            ), level - 1)
+        return {self.output_col: self._out(df, expr, level)}
+
+
+class StandardScaleTransformer(_AffineScale):
+    """(x - mean) / stddev, per element for array inputs; mask values
+    pass through unscaled (reference transformers/standard_scale.py:99)."""
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -67,39 +140,8 @@ class StandardScaleTransformer(ElementwiseTransform):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
-    def build(self, df: DataFrame):
-        self._validate(df)
-        level, _ = column_info(df, self.input_col)
-        col = self._in(df, self.input_col)
-        scalar_stats = not isinstance(self.mean, (list, tuple))
-
-        if scalar_stats:
-            m, s = F.lit(float(self.mean)), F.lit(float(self.stddev))
-
-            def scale(x: Column) -> Column:
-                out = F.try_divide(x - m, s)
-                if self.mask_value is not None:
-                    return F.when(x == F.lit(self.mask_value), x).otherwise(out)
-                return out
-
-            expr = nested_transform(col, scale, level)
-        else:
-            means = F.lit([float(v) for v in self.mean])
-            stds = F.lit([float(v) for v in self.stddev])
-            if level < 1:
-                raise TypeError("per-element stats require an array input column")
-
-            def scale_arr(arr: Column) -> Column:
-                def at(x: Column, i: Column) -> Column:
-                    out = F.try_divide(x - F.element_at(means, i + 1), F.element_at(stds, i + 1))
-                    if self.mask_value is not None:
-                        return F.when(x == F.lit(self.mask_value), x).otherwise(out)
-                    return out
-
-                return F.transform(arr, at)
-
-            expr = nested_transform(col, scale_arr, level - 1)
-        return {self.output_col: self._out(df, expr, level)}
+    def _affine(self):
+        return self.mean, self.stddev
 
 
 class StandardScaleEstimator(Estimator):
@@ -113,23 +155,14 @@ class StandardScaleEstimator(Estimator):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
+    def _stats(self, v: Column) -> tuple[Column, Column]:
+        v = _masked(v, self.mask_value)
+        return F.mean(v), F.stddev_pop(v)
+
     def fit(self, df: DataFrame) -> StandardScaleTransformer:
         src = self._fit_input(df)
         level, _ = column_info(df, self.input_col)
-        c = self._fit_col(src, self.input_col)
-        if level == 0:
-            v = _masked(c.cast("double"), self.mask_value)
-            row = src.agg(F.mean(v).alias("m"), F.stddev_pop(v).alias("s")).first()
-            mean, std = _f(row["m"]), _f(row["s"])
-        else:
-            src, c, dim = _vector_rows(src, c, level)
-            aggs = []
-            for i in range(dim):
-                e = _masked(F.element_at(c, i + 1).cast("double"), self.mask_value)
-                aggs += [F.mean(e).alias(f"m{i}"), F.stddev_pop(e).alias(f"s{i}")]
-            row = src.agg(*aggs).first()
-            mean = [_f(row[f"m{i}"]) for i in range(dim)]
-            std = [_f(row[f"s{i}"]) for i in range(dim)]
+        mean, std = _fit_pairs(src, self._fit_col(src, self.input_col), level, self._stats)
         return StandardScaleTransformer(
             input_col=self.input_col, output_col=self.output_col,
             mean=mean, stddev=std, mask_value=self.mask_value,
@@ -180,11 +213,10 @@ class SingleFeatureArrayStandardScaleEstimator(Estimator):
         )
 
 
-class MinMaxScaleTransformer(ElementwiseTransform):
+class MinMaxScaleTransformer(_AffineScale):
     """(x - min) / (max - min), per element for arrays (reference
-    transformers/min_max_scale.py:163)."""
-
-    compatible_dtypes = NUMERIC
+    transformers/min_max_scale.py:163). ``max - min`` is computed once
+    here: the same IEEE subtraction Spark would do per row."""
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -194,38 +226,10 @@ class MinMaxScaleTransformer(ElementwiseTransform):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
-    def build(self, df: DataFrame):
-        self._validate(df)
-        level, _ = column_info(df, self.input_col)
-        col = self._in(df, self.input_col)
-        scalar_stats = not isinstance(self.min, (list, tuple))
-        if scalar_stats:
-            lo, hi = F.lit(float(self.min)), F.lit(float(self.max))
-
-            def scale(x: Column) -> Column:
-                out = F.try_divide(x - lo, hi - lo)
-                if self.mask_value is not None:
-                    return F.when(x == F.lit(self.mask_value), x).otherwise(out)
-                return out
-
-            expr = nested_transform(col, scale, level)
-        else:
-            los = F.lit([float(v) for v in self.min])
-            his = F.lit([float(v) for v in self.max])
-
-            def scale_arr(arr: Column) -> Column:
-                def at(x: Column, i: Column) -> Column:
-                    lo = F.element_at(los, i + 1)
-                    hi = F.element_at(his, i + 1)
-                    out = F.try_divide(x - lo, hi - lo)
-                    if self.mask_value is not None:
-                        return F.when(x == F.lit(self.mask_value), x).otherwise(out)
-                    return out
-
-                return F.transform(arr, at)
-
-            expr = nested_transform(col, scale_arr, level - 1)
-        return {self.output_col: self._out(df, expr, level)}
+    def _affine(self):
+        if isinstance(self.min, (list, tuple)):
+            return self.min, [float(h) - float(lo) for lo, h in zip(self.min, self.max)]
+        return self.min, float(self.max) - float(self.min)
 
 
 class MinMaxScaleEstimator(Estimator):
@@ -238,23 +242,14 @@ class MinMaxScaleEstimator(Estimator):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
+    def _stats(self, v: Column) -> tuple[Column, Column]:
+        v = _masked(v, self.mask_value)
+        return F.min(v), F.max(v)
+
     def fit(self, df: DataFrame) -> MinMaxScaleTransformer:
         src = self._fit_input(df)
         level, _ = column_info(df, self.input_col)
-        c = self._fit_col(src, self.input_col)
-        if level == 0:
-            v = _masked(c.cast("double"), self.mask_value)
-            row = src.agg(F.min(v).alias("lo"), F.max(v).alias("hi")).first()
-            lo, hi = _f(row["lo"]), _f(row["hi"])
-        else:
-            src, c, dim = _vector_rows(src, c, level)
-            aggs = []
-            for i in range(dim):
-                e = _masked(F.element_at(c, i + 1).cast("double"), self.mask_value)
-                aggs += [F.min(e).alias(f"lo{i}"), F.max(e).alias(f"hi{i}")]
-            row = src.agg(*aggs).first()
-            lo = [_f(row[f"lo{i}"]) for i in range(dim)]
-            hi = [_f(row[f"hi{i}"]) for i in range(dim)]
+        lo, hi = _fit_pairs(src, self._fit_col(src, self.input_col), level, self._stats)
         return MinMaxScaleTransformer(
             input_col=self.input_col, output_col=self.output_col,
             min=lo, max=hi, mask_value=self.mask_value,
@@ -267,12 +262,16 @@ class ConditionalStandardScaleEstimator(Estimator):
     optionally excluding zeros, log10-transforming first, or using the
     reference's 'binary' moments — a Spark-first re-expression of the
     mask-predicate scaler (conditional_standard_scale.py:352-481).
+    Array inputs fit per-element moments (reference :398-540
+    element_struct aggs); nested inputs pool per innermost index.
 
     scaling='binary' (reference _fit_binary :398-470) treats the input
     as a binary indicator and a relevance label: with
     n = count(x == 1) and f = count(x == 1 AND relevance > 0),
     mean = 1 - f/n and stddev = sqrt((f(1-f/n)^2 + (n-f)(f/n)^2)/(n-1));
-    requires ``relevance_col``."""
+    requires ``relevance_col`` and a scalar or flat array input (the
+    counts need the row-aligned relevance, which a nested explode loses;
+    the reference only exercises level<=1)."""
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -294,88 +293,44 @@ class ConditionalStandardScaleEstimator(Estimator):
         var = (f * (1.0 - p) ** 2 + (n - f) * p**2) / (n - 1.0)
         return mean, max(var, 0.0) ** 0.5
 
+    def _stats(self, v: Column) -> tuple[Column, Column]:
+        if self.scaling == "binary":
+            one = v == 1.0
+            rel = F.col(self.relevance_col) > 0
+            return (
+                F.sum(F.when(one, 1).otherwise(0)).cast("double"),
+                F.sum(F.when(one & rel, 1).otherwise(0)).cast("double"),
+            )
+        if self.skip_zeros:
+            v = F.when(v != 0.0, v)
+        if self.scaling == "log10":
+            v = F.log10(v)
+        return F.mean(v), F.stddev_pop(v)
+
     def fit(self, df: DataFrame) -> "ConditionalStandardScaleTransformer":
         src = self._fit_input(df)
         if self.filter_expr:
             src = src.where(self.filter_expr)
         level, _ = column_info(df, self.input_col)
-
-        src_col = F.col(self.input_col)
-        if level >= 2 and self.scaling != "binary":
-            # nested inputs: pool per-innermost-index stats across rows
-            # and outer dims (row filter already applied above). Binary
-            # scaling keeps the row frame — it needs the row-aligned
-            # relevance column, and the reference only exercises it on
-            # level<=1 inputs.
-            src, src_col, _ = _vector_rows(src, src_col, level)
-            level = 1
-
-        def elem(i: int | None) -> Column:
-            c = src_col
-            v = (c if i is None else F.element_at(c, i + 1)).cast("double")
-            return v
-
-        def moments(i: int | None) -> tuple[Column, Column]:
-            if self.scaling == "binary":
-                one = elem(i) == 1.0
-                rel = F.col(self.relevance_col) > 0
-                return (
-                    F.sum(F.when(one, 1).otherwise(0)).cast("double"),
-                    F.sum(F.when(one & rel, 1).otherwise(0)).cast("double"),
-                )
-            v = elem(i)
-            if self.skip_zeros:
-                v = F.when(v != 0.0, v)
-            if self.scaling == "log10":
-                v = F.log10(v)
-            return F.mean(v), F.stddev_pop(v)
-
-        if level == 0:
-            a, b = moments(None)
-            row = src.agg(a.alias("a"), b.alias("b")).first()
-            if self.scaling == "binary":
-                mean, std = self._binary_moments(_f(row["a"]), _f(row["b"]))
-            else:
-                mean, std = _f(row["a"]), _f(row["b"])
-        else:
-            # per-element moments over src_col (the input column, or the
-            # exploded innermost vectors for nested non-binary inputs;
-            # reference conditional_standard_scale.py:398-540
-            # element_struct aggs)
-            row0 = (
-                src.select(F.size(src_col).alias("n"))
-                .where(src_col.isNotNull()).first()
-            )
-            if row0 is None:
-                raise ValueError("cannot infer array dim of empty fit column")
-            dim = int(row0["n"])
-            aggs = []
-            for i in range(dim):
-                a, b = moments(i)
-                aggs += [a.alias(f"a{i}"), b.alias(f"b{i}")]
-            row = src.agg(*aggs).first()
-            if self.scaling == "binary":
-                pairs = [
-                    self._binary_moments(_f(row[f"a{i}"]), _f(row[f"b{i}"]))
-                    for i in range(dim)
-                ]
-                mean = [m for m, _ in pairs]
-                std = [s for _, s in pairs]
-            else:
-                mean = [_f(row[f"a{i}"]) for i in range(dim)]
-                std = [_f(row[f"b{i}"]) for i in range(dim)]
+        binary = self.scaling == "binary"
+        if binary and level >= 2:
+            raise ValueError("binary scaling needs a scalar or flat array input column")
+        mean, std = _fit_pairs(
+            src, F.col(self.input_col), level, self._stats,
+            self._binary_moments if binary else None,
+        )
         return ConditionalStandardScaleTransformer(
             input_col=self.input_col, output_col=self.output_col,
             mean=mean, stddev=std,
-            scaling="standard" if self.scaling == "binary" else self.scaling,
+            scaling="standard" if binary else self.scaling,
             skip_zeros=self.skip_zeros,
         )
 
 
-class ConditionalStandardScaleTransformer(ElementwiseTransform):
-    """Scalar or per-element (list mean/stddev) conditional scaling."""
-
-    compatible_dtypes = NUMERIC
+class ConditionalStandardScaleTransformer(_AffineScale):
+    """Scalar or per-element (list mean/stddev) conditional scaling:
+    (log10?(x) - mean) / stddev, zeros passing through under
+    ``skip_zeros``."""
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -384,36 +339,14 @@ class ConditionalStandardScaleTransformer(ElementwiseTransform):
                  scaling: str = "standard", skip_zeros: bool = False):
         pass
 
-    def _scale1(self, x: Column, m: Column, s: Column) -> Column:
-        v = F.log10(x) if self.scaling == "log10" else x
-        out = F.try_divide(v - m, s)
-        if self.skip_zeros:
-            return F.when(x == 0.0, x).otherwise(out)
-        return out
+    def _affine(self):
+        return self.mean, self.stddev
 
-    def build(self, df: DataFrame):
-        self._validate(df)
-        level, _ = column_info(df, self.input_col)
-        col = self._in(df, self.input_col)
-        if not isinstance(self.mean, (list, tuple)):
-            m, s = F.lit(float(self.mean)), F.lit(float(self.stddev))
-            expr = nested_transform(col, lambda x: self._scale1(x, m, s), level)
-        else:
-            if level < 1:
-                raise TypeError("per-element stats require an array input column")
-            means = F.lit([float(v) for v in self.mean])
-            stds = F.lit([float(v) for v in self.stddev])
+    def _keep(self) -> float | None:
+        return 0.0 if self.skip_zeros else None
 
-            def scale_arr(arr: Column) -> Column:
-                return F.transform(
-                    arr,
-                    lambda x, i: self._scale1(
-                        x, F.element_at(means, i + 1), F.element_at(stds, i + 1)
-                    ),
-                )
-
-            expr = nested_transform(col, scale_arr, level - 1)
-        return {self.output_col: self._out(df, expr, level)}
+    def _pre(self, x: Column) -> Column:
+        return F.log10(x) if self.scaling == "log10" else x
 
 
 class ImputeTransformer(ElementwiseTransform):

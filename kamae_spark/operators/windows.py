@@ -252,7 +252,9 @@ class Sessionize(Transformer):
     ``session_id_col`` is set, a string id ``{conv_id}#{idx}``. Two window
     passes (gap flag via lag, then cumulative sum) — Spark forbids nesting
     a window inside a window aggregate, but both passes share one
-    partitioning so AQE plans a single Exchange.
+    partitioning so AQE plans a single Exchange. The lag reads the raw
+    timestamp column, so Catalyst merges it into an earlier window batch
+    on the same spec.
     """
 
     @keyword_params
@@ -280,8 +282,10 @@ class Sessionize(Transformer):
 
     def transform(self, df: DataFrame) -> DataFrame:
         w = make_window(self.partition_by, self.order_by)
-        ts = epoch_fractional(F.col(self.ts_col))
-        gap = ts - F.lag(ts).over(w)
+        # lag the raw column: a window over plain input columns collapses
+        # into the preceding window batch on the same spec
+        prev = F.lag(self.ts_col).over(w)
+        gap = epoch_fractional(F.col(self.ts_col)) - epoch_fractional(prev)
         flag = F.when(gap > F.lit(float(self.gap_seconds)), 1).otherwise(0)
         tmp = f"__gap_flag_{self.output_col}"
         df = df.select("*", flag.alias(tmp))
@@ -306,6 +310,10 @@ class ListAgg(Transformer):
     ``min_filter_value`` — only values ≥ threshold contribute; rows
     outside the gate still RECEIVE the statistic. ``nan_fill`` replaces
     null/NaN results. agg ∈ count/sum/mean/min/max/stddev/median.
+
+    ``median`` is Spark's exact ``median`` (percentile 0.5) window
+    aggregate, the reference's midpoint (even n -> mean of the two
+    middles): one Window node, no value-ordered rank pass.
     """
 
     @keyword_params
@@ -361,46 +369,10 @@ class ListAgg(Transformer):
     def transform(self, df: DataFrame) -> DataFrame:
         w = Window.partitionBy(*self._partition_cols())
         df, value, tmp = self._gated_value(df)
-        if self.agg == "median":
-            # exact midpoint, reference list_median.py:156-183 semantics
-            # (even n -> mean of the two middles) — computed by RANK
-            # PICKING instead of the previous collect_list + per-row
-            # sort_array, which materialized and re-sorted the whole
-            # group's array FOR EVERY ROW (O(g^2 log g) work and O(g^2)
-            # allocation per group; the dominant cost and GC source of
-            # the list-stats query, guide §1.2/§5). One row_number pass
-            # ordered by value (nulls last, so ranks 1..n are exactly
-            # the non-null values in sorted order) plus partition-window
-            # picks of the two middle ranks; same exchange, one extra
-            # in-partition sort, zero array materialization.
-            rn_tmp = f"__mrn_{self.output_col}"
-            n_tmp = f"__mn_{self.output_col}"
-            vo = make_window(self._partition_cols(), ()).orderBy(
-                value.asc_nulls_last()
-            )
-            df = df.select(
-                "*",
-                F.row_number().over(vo).alias(rn_tmp),
-                F.count(value).over(w).alias(n_tmp),
-            )
-            n = F.col(n_tmp)
-            lo = ((n + 1) / 2).cast("int")
-            hi = (n / 2).cast("int") + 1
-            rn = F.col(rn_tmp)
-            vlo = F.max(F.when(rn == lo, value)).over(w)
-            vhi = F.max(F.when(rn == hi, value)).over(w)
-            res = F.when(n % 2 == 1, vhi.cast("double")).otherwise(
-                (vlo + vhi) / 2.0
-            )
-            res = F.when(n > 0, res)
-            if self.nan_fill is not None:
-                res = F.when(
-                    res.isNull() | F.isnan(res.cast("double")),
-                    F.lit(self.nan_fill),
-                ).otherwise(res)
-            df = df.select("*", res.alias(self.output_col)).drop(rn_tmp, n_tmp)
-            return df.drop(tmp) if tmp else df
-        res = _AGGS[self.agg](value).over(w)
+        # median: Spark's exact percentile(0.5), the reference's midpoint
+        # (list_median.py:156-183: even n -> mean of the two middles)
+        agg = F.median if self.agg == "median" else _AGGS[self.agg]
+        res = agg(value).over(w)
         if self.nan_fill is not None:
             res = F.when(res.isNull() | F.isnan(res.cast("double")), F.lit(self.nan_fill)).otherwise(res)
         df = df.select("*", res.alias(self.output_col))

@@ -595,6 +595,20 @@ def test_ivf_scan_equals_join_strategy(_ivf_corpus, monkeypatch):
         assert got == ref and len(got) == 400
 
 
+def _scan_and_join(df, q, search, monkeypatch):
+    """One search's scan result, then the same search with its pair-join
+    fallback forced."""
+
+    def run():
+        if search == "brute_force":
+            return brute_force_topk(df, q, "embedding", "vec_id", k=5)
+        return ivf_topk(df, q, "embedding", "vec_id", k=5, n_centroids=4, nprobe=2)
+
+    scan = _rows(run())
+    monkeypatch.setattr(similarity, "MAX_SCAN_QUERIES", 0)
+    return scan, _rows(run())
+
+
 @pytest.mark.parametrize("search", ["brute_force", "ivf"])
 def test_scan_equals_join_with_null_vectors(spark, monkeypatch, search):
     """Both plans give one answer when nulls are present: a null query
@@ -604,18 +618,24 @@ def test_scan_equals_join_with_null_vectors(spark, monkeypatch, search):
     rows += [(40, None), (41, None)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.where(F.col("vec_id").isin(0, 1, 2, 41))
-
-    def run():
-        if search == "brute_force":
-            return brute_force_topk(df, q, "embedding", "vec_id", k=5)
-        return ivf_topk(df, q, "embedding", "vec_id", k=5, n_centroids=4, nprobe=2)
-
-    scan = _rows(run())
-    monkeypatch.setattr(similarity, "MAX_SCAN_QUERIES", 0)
-    join = _rows(run())
+    scan, join = _scan_and_join(df, q, search, monkeypatch)
     assert scan == join and len(scan) == 15
     assert {r[0] for r in scan} == {0, 1, 2}
     assert not {40, 41} & {r[1] for r in scan}
+
+
+@pytest.mark.parametrize("search", ["brute_force", "ivf"])
+def test_scan_equals_join_with_zero_vectors(spark, monkeypatch, search):
+    """A zero-norm vector has no cosine: both plans drop it, so a zero
+    query gets no row and a zero corpus vector is nobody's neighbour."""
+    rng = np.random.RandomState(7)
+    rows = [(i, rng.randn(8).tolist()) for i in range(40)] + [(40, [0.0] * 8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.where(F.col("vec_id").isin(0, 1, 2, 40))
+    scan, join = _scan_and_join(df, q, search, monkeypatch)
+    assert scan == join and len(scan) == 15
+    assert {r[0] for r in scan} == {0, 1, 2}
+    assert 40 not in {r[1] for r in scan}
 
 
 def test_ivf_scan_degenerate_equals_brute_force(_ivf_corpus):

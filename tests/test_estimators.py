@@ -18,10 +18,13 @@ from kamae_spark.operators.indexers import (
 )
 from kamae_spark.operators.scalers import (
     ConditionalStandardScaleEstimator,
+    ConditionalStandardScaleTransformer,
     ImputeEstimator,
     MinMaxScaleEstimator,
+    MinMaxScaleTransformer,
     SingleFeatureArrayStandardScaleEstimator,
     StandardScaleEstimator,
+    StandardScaleTransformer,
 )
 
 
@@ -134,6 +137,31 @@ def test_conditional_standard_scale(spark):
     assert abs(model.mean - 2.0) < 1e-9  # only 1.0 and 3.0 contribute
     got = {r["x"]: r["z"] for r in model.transform(df).collect()}
     assert got[0.0] == 0.0  # skip_zeros passthrough
+
+
+@pytest.mark.parametrize("make", [
+    lambda: StandardScaleTransformer(input_col="x", output_col="z",
+                                     mean=[0.0, 1.0], stddev=[1.0, 2.0]),
+    lambda: MinMaxScaleTransformer(input_col="x", output_col="z",
+                                   min=[0.0, 1.0], max=[1.0, 2.0]),
+    lambda: ConditionalStandardScaleTransformer(input_col="x", output_col="z",
+                                                mean=[0.0, 1.0], stddev=[1.0, 2.0]),
+], ids=["standard", "min_max", "conditional"])
+def test_affine_list_stats_on_scalar_column_raise(spark, make):
+    df = spark.createDataFrame([(1.0,)], "x double")
+    with pytest.raises(TypeError, match="array input column"):
+        make().transform(df)
+
+
+def test_conditional_binary_rejects_nested_input(spark):
+    df = spark.createDataFrame(
+        [([[1.0, 0.0]], 1.0), ([[0.0, 1.0]], 0.0)], "v array<array<double>>, rel double"
+    )
+    est = ConditionalStandardScaleEstimator(
+        input_col="v", output_col="z", scaling="binary", relevance_col="rel"
+    )
+    with pytest.raises(ValueError, match="binary scaling"):
+        est.fit(df)
 
 
 def test_impute_mean_and_median(spark):
