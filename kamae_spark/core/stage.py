@@ -88,6 +88,19 @@ class Stage:
                 cols.extend(v)
         return cols
 
+    def _in(self, df: DataFrame, col: str) -> Column:
+        """Input column with the optional elementwise ``input_dtype``
+        cast. An estimator fits on the same cast values (reference
+        estimators/base.py:40-56): fitted stats must be computed over
+        exactly the values the fitted transformer will later see — e.g.
+        a double->float narrowing changes the mean the fit records."""
+        c = F.col(col)
+        cast_to = getattr(self, "input_dtype", None)
+        if cast_to:
+            level, src = dt.column_info(df, col)
+            c = dt.nested_cast(c, level, cast_to, src=src)
+        return c
+
 
 class Transformer(Stage):
     """A stage that appends output column(s) to a DataFrame.
@@ -141,15 +154,6 @@ class Transformer(Stage):
             df, self.input_columns, self.compatible_dtypes, type(self).__name__
         )
 
-    def _in(self, df: DataFrame, col: str) -> Column:
-        """Input column with optional elementwise input_dtype cast."""
-        c = F.col(col)
-        cast_to = getattr(self, "input_dtype", None)
-        if cast_to:
-            level, src = dt.column_info(df, col)
-            c = dt.nested_cast(c, level, cast_to, src=src)
-        return c
-
     def _out(self, df: DataFrame, expr: Column, level: int = 0) -> Column:
         """Apply optional elementwise output_dtype cast to the result."""
         cast_to = getattr(self, "output_dtype", None)
@@ -186,19 +190,6 @@ class Estimator(Stage):
         if frac is not None and 0.0 < frac < 1.0:
             return df.sample(fraction=frac, seed=getattr(self, "seed", 42))
         return df
-
-    def _fit_col(self, df: DataFrame, col: str) -> Column:
-        """Input column for fitting, with the optional ``input_dtype`` cast
-        applied BEFORE statistics are computed (reference estimators/
-        base.py:40-56): fitted stats must be computed over exactly the
-        values the fitted transformer will later see post-cast — e.g. a
-        double->float narrowing changes the mean the fit should record."""
-        c = F.col(col)
-        cast_to = getattr(self, "input_dtype", None)
-        if cast_to:
-            level, src = dt.column_info(df, col)
-            c = dt.nested_cast(c, level, cast_to, src=src)
-        return c
 
     def fit(self, df: DataFrame) -> Transformer:
         raise NotImplementedError

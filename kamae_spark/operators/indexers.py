@@ -28,6 +28,7 @@ Index layout (reference user_defined_functions.py:46-102):
 
 from __future__ import annotations
 
+import inspect
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -283,8 +284,26 @@ class StringIndexTransformer(ElementwiseTransform):
         return df.select("*", self._out(df, expr, level).alias(out_c))
 
 
-class StringIndexEstimator(Estimator):
+class _VocabEstimator(Estimator):
+    """Fit one vocab over every input column, then hand the labels, plus
+    each of this estimator's params that the ``fitted`` transformer's
+    constructor takes, to that transformer."""
+
+    fitted: type
+
+    def fit(self, df: DataFrame) -> ElementwiseTransform:
+        labels = collect_labels(
+            self._fit_input(df), self.input_columns, self.string_order_type,
+            self.mask_token, self.max_num_labels,
+        )
+        takes = inspect.signature(self.fitted).parameters
+        return self.fitted(labels=labels, **{k: v for k, v in self.params().items() if k in takes})
+
+
+class StringIndexEstimator(_VocabEstimator):
     """Fit an ordered vocab (reference estimators/string_index.py:104-136)."""
+
+    fitted = StringIndexTransformer
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -294,43 +313,6 @@ class StringIndexEstimator(Estimator):
                  sample_fraction: float | None = None, seed: int = 42,
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
-
-    def fit(self, df: DataFrame) -> StringIndexTransformer:
-        labels = collect_labels(
-            self._fit_input(df), [self.input_col], self.string_order_type,
-            self.mask_token, self.max_num_labels,
-        )
-        return StringIndexTransformer(
-            input_col=self.input_col, output_col=self.output_col,
-            labels=labels, mask_token=self.mask_token,
-            num_oov_indices=self.num_oov_indices,
-            input_dtype=self.input_dtype, output_dtype=self.output_dtype,
-        )
-
-
-class SharedStringIndexEstimator(Estimator):
-    """One vocab across N columns (reference shared_string_index.py:105);
-    yields one transformer per column sharing the fitted labels."""
-
-    @keyword_params
-    def __init__(self, input_cols: Sequence[str] = (), output_cols: Sequence[str] = (),
-                 string_order_type: str = "frequencyDesc",
-                 mask_token: str | None = None, num_oov_indices: int = 1,
-                 max_num_labels: int | None = DEFAULT_MAX_LABELS,
-                 sample_fraction: float | None = None, seed: int = 42):
-        if len(input_cols) != len(output_cols):
-            raise ValueError("input_cols and output_cols must align")
-
-    def fit(self, df: DataFrame) -> "SharedStringIndexTransformer":
-        labels = collect_labels(
-            self._fit_input(df), list(self.input_cols), self.string_order_type,
-            self.mask_token, self.max_num_labels,
-        )
-        return SharedStringIndexTransformer(
-            input_cols=list(self.input_cols), output_cols=list(self.output_cols),
-            labels=labels, mask_token=self.mask_token,
-            num_oov_indices=self.num_oov_indices,
-        )
 
 
 class SharedStringIndexTransformer(StringIndexTransformer):
@@ -358,6 +340,22 @@ class SharedStringIndexTransformer(StringIndexTransformer):
             expr, _ = elementwise(df, [in_c], self._index_expr)
             out[out_c] = expr
         return out
+
+
+class SharedStringIndexEstimator(_VocabEstimator):
+    """One vocab across N columns (reference shared_string_index.py:105);
+    yields one transformer per column sharing the fitted labels."""
+
+    fitted = SharedStringIndexTransformer
+
+    @keyword_params
+    def __init__(self, input_cols: Sequence[str] = (), output_cols: Sequence[str] = (),
+                 string_order_type: str = "frequencyDesc",
+                 mask_token: str | None = None, num_oov_indices: int = 1,
+                 max_num_labels: int | None = DEFAULT_MAX_LABELS,
+                 sample_fraction: float | None = None, seed: int = 42):
+        if len(input_cols) != len(output_cols):
+            raise ValueError("input_cols and output_cols must align")
 
 
 class OneHotTransformer(ElementwiseTransform):
@@ -409,9 +407,11 @@ class SharedOneHotTransformer(OneHotTransformer):
         return out
 
 
-class SharedOneHotEncodeEstimator(Estimator):
+class SharedOneHotEncodeEstimator(_VocabEstimator):
     """One shared vocab, one-hot per column (reference
     estimators/shared_one_hot_encode.py:117)."""
+
+    fitted = SharedOneHotTransformer
 
     @keyword_params
     def __init__(self, input_cols: Sequence[str] = (), output_cols: Sequence[str] = (),
@@ -422,20 +422,11 @@ class SharedOneHotEncodeEstimator(Estimator):
         if len(input_cols) != len(output_cols):
             raise ValueError("input_cols and output_cols must align")
 
-    def fit(self, df: DataFrame) -> SharedOneHotTransformer:
-        labels = collect_labels(
-            self._fit_input(df), list(self.input_cols), self.string_order_type,
-            self.mask_token, self.max_num_labels,
-        )
-        return SharedOneHotTransformer(
-            input_cols=list(self.input_cols), output_cols=list(self.output_cols),
-            labels=labels, mask_token=self.mask_token,
-            num_oov_indices=self.num_oov_indices, drop_unseen=self.drop_unseen,
-        )
 
-
-class OneHotEncodeEstimator(Estimator):
+class OneHotEncodeEstimator(_VocabEstimator):
     """Fit vocab then one-hot (reference estimators/one_hot_encode.py:117)."""
+
+    fitted = OneHotTransformer
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -445,15 +436,3 @@ class OneHotEncodeEstimator(Estimator):
                  sample_fraction: float | None = None, seed: int = 42,
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
-
-    def fit(self, df: DataFrame) -> OneHotTransformer:
-        labels = collect_labels(
-            self._fit_input(df), [self.input_col], self.string_order_type,
-            self.mask_token, self.max_num_labels,
-        )
-        return OneHotTransformer(
-            input_col=self.input_col, output_col=self.output_col,
-            labels=labels, mask_token=self.mask_token,
-            num_oov_indices=self.num_oov_indices, drop_unseen=self.drop_unseen,
-            input_dtype=self.input_dtype, output_dtype=self.output_dtype,
-        )

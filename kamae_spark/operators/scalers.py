@@ -162,7 +162,7 @@ class StandardScaleEstimator(Estimator):
     def fit(self, df: DataFrame) -> StandardScaleTransformer:
         src = self._fit_input(df)
         level, _ = column_info(df, self.input_col)
-        mean, std = _fit_pairs(src, self._fit_col(src, self.input_col), level, self._stats)
+        mean, std = _fit_pairs(src, self._in(src, self.input_col), level, self._stats)
         return StandardScaleTransformer(
             input_col=self.input_col, output_col=self.output_col,
             mean=mean, stddev=std, mask_value=self.mask_value,
@@ -249,7 +249,7 @@ class MinMaxScaleEstimator(Estimator):
     def fit(self, df: DataFrame) -> MinMaxScaleTransformer:
         src = self._fit_input(df)
         level, _ = column_info(df, self.input_col)
-        lo, hi = _fit_pairs(src, self._fit_col(src, self.input_col), level, self._stats)
+        lo, hi = _fit_pairs(src, self._in(src, self.input_col), level, self._stats)
         return MinMaxScaleTransformer(
             input_col=self.input_col, output_col=self.output_col,
             min=lo, max=hi, mask_value=self.mask_value,
@@ -386,7 +386,7 @@ class ImputeEstimator(Estimator):
     def fit(self, df: DataFrame) -> ImputeTransformer:
         src = self._fit_input(df)
         level, _ = column_info(df, self.input_col)
-        c = self._fit_col(src, self.input_col)
+        c = self._in(src, self.input_col)
         if level > 0:
             # one scalar statistic pooled over EVERY element of a
             # (possibly nested) array column (reference estimators/

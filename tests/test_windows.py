@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from kamae_spark.core.pipeline import Pipeline, PipelineModel
 from kamae_spark.operators.windows import (
@@ -184,3 +185,57 @@ def test_temporal_leakage_invariance(spark, transcripts):
     a = full.select(cols).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     b = trunc.select(cols).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        pytest.param(lambda: Lag(input_col="x", output_col="y", offset=-1), id="lag_offset_-1"),
+        pytest.param(lambda: Lag(input_col="x", output_col="y", offset=0), id="lag_offset_0"),
+        pytest.param(lambda: Lead(input_col="x", output_col="y", offset=0), id="lead_offset_0"),
+        pytest.param(lambda: RollingAgg(input_col="x", output_col="y", rows=0), id="rolling_rows_0"),
+        pytest.param(
+            lambda: ConditionalRollingCount(input_col="x", output_col="y", value="a", rows=0),
+            id="conditional_rows_0",
+        ),
+        pytest.param(
+            lambda: RollingAgg(input_col="x", output_col="y", order_by=("ts",), range_seconds=-3600),
+            id="rolling_range_-3600",
+        ),
+        pytest.param(lambda: ListAgg(input_col="x", output_col="y", top_n=2), id="listagg_top_n_no_sort_by"),
+    ],
+)
+def test_point_in_time_frames_checked_at_construction(make):
+    """A frame that would read the current-or-later row, or no row at
+    all, is refused when the stage is built, not silently turned into
+    leaked or all-null values at transform."""
+    with pytest.raises(ValueError):
+        make()
+
+
+@pytest.mark.parametrize(
+    "cls, kw, key, name",
+    [
+        (RollingAgg, dict(input_col="turn_idx", output_col="n_1h", order_by=("ts",),
+                          range_seconds=3600), "partition_by", "conv_id"),
+        (RollingAgg, dict(input_col="turn_idx", output_col="n_1h", range_seconds=3600),
+         "order_by", "ts"),
+        (Sessionize, dict(ts_col="ts", output_col="s", session_id_col="sid"),
+         "partition_by", "conv_id"),
+        (ListAgg, dict(input_col="turn_idx", output_col="m"), "group_cols", "conv_id"),
+    ],
+    ids=["rolling_range_partition", "rolling_range_order", "sessionize_partition", "listagg_group"],
+)
+def test_bare_string_key_is_one_key(transcripts, cls, kw, key, name):
+    """A bare column name is one key, the same as a one-element tuple,
+    never a sequence of single-letter columns."""
+    bare, one = cls(**kw, **{key: name}), cls(**kw, **{key: (name,)})
+    assert not [c for c in bare.input_columns if len(c) == 1]
+    assert bare.input_columns == one.input_columns
+
+    def rows(stage):
+        out = stage.transform(transcripts)
+        cols = ["conv_id", "turn_idx", *stage.output_columns]
+        return out.select(cols).orderBy("conv_id", "turn_idx").collect()
+
+    assert rows(bare) == rows(one)
