@@ -9,6 +9,7 @@ no maps, no structs in the public data model.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 # kamae name -> Spark type (reference dtype_enum.py:31-54)
@@ -68,6 +69,20 @@ def check_compatible(df, cols, compatible: tuple[str, ...] | None, stage: str) -
                 f"{stage}: column {c!r} has element dtype {name!r}; "
                 f"expected one of {compatible}"
             )
+
+
+def empty_frame(spark, schema: T.StructType) -> DataFrame:
+    """An empty DataFrame typed by ``schema``, built on the JVM as a
+    ``LocalRelation``.
+
+    ``spark.createDataFrame([], schema)`` sends even an empty list
+    through a Python RDD (``parallelize``, ``_to_java_object_rdd``,
+    ``applySchemaToPythonRDD``): about 47 py4j calls per frame. The
+    JVM's ``createDataFrame(java.util.List[Row], StructType)`` makes a
+    frame with the same schema, nullability included, in three calls
+    (py4j converts the empty Python list to a ``java.util.List``)."""
+    jss = spark._jsparkSession
+    return DataFrame(jss.createDataFrame([], jss.parseDataType(schema.json())), spark)
 
 
 def nested_cast(col, level: int, dtype: str, src: str | None = None):

@@ -17,7 +17,11 @@ without the networkx dependency:
   O(n^2) avoidance; Catalyst CollapseProject + whole-stage codegen then
   see one flat projection). A stage reading a pending alias builds
   against an empty frame of just its inputs, so per-stage validation
-  never re-analyzes the accumulated plan.
+  never re-analyzes the accumulated plan. That frame is a JVM
+  ``LocalRelation`` (``dtypes.empty_frame``), not ``createDataFrame([])``,
+  which would build a Python RDD for every such stage.
+- compile decisions (each flush and its reason, each hoisted stage) are
+  logged at DEBUG on the ``kamae_spark`` logger
 - save/load: one JSON spec per pipeline (stages + params, including
   fitted state such as vocab arrays / means), reference analogue:
   pipeline.py:193-239, pipeline_model.py:62-79
@@ -26,13 +30,17 @@ without the networkx dependency:
 from __future__ import annotations
 
 import json
+import logging
 import os
 from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import StructType
 
+from kamae_spark.core import dtypes as dt
 from kamae_spark.core.stage import Estimator, Stage, Transformer, select_outputs
+
+_log = logging.getLogger("kamae_spark")
 
 
 def _toposort(stages: list[Stage], hoist: bool = False) -> list[Stage]:
@@ -155,10 +163,14 @@ def _fused_transform(
     cost stays O(|stage inputs|): building on ``df`` would re-analyze
     the growing lateral-alias plan once per stage, and a full-schema
     frame would pay O(|all columns|) schema serialization per stage —
-    both the O(n^2) wall this function exists to avoid. A pending alias is typed lazily, the first time
-    a later stage reads it, by one ``select(expr.alias(name)).schema``
-    on the frame it was built on; its type then joins ``fields``. A
-    breadth-only pipeline never types an alias nor makes an empty frame.
+    both the O(n^2) wall this function exists to avoid. The empty frame
+    is a JVM ``LocalRelation`` made by ``dtypes.empty_frame``: three
+    py4j calls, where ``createDataFrame([], schema)`` would build and
+    ship an empty Python RDD (about 47 calls) for every such stage. A
+    pending alias is typed lazily, the first time a later stage reads
+    it, by one ``select(expr.alias(name)).schema`` on the frame it was
+    built on; its type then joins ``fields``. A breadth-only pipeline
+    never types an alias nor makes an empty frame.
     Builds may only reference columns they declare in
     ``input_columns`` — already the pipeline's dependency contract
     (toposort runs on the same declaration).
@@ -172,8 +184,10 @@ def _fused_transform(
     unanalyzable select.
 
     Non-projection stages (``build`` returns None: joins, Python paths)
-    flush the batch and apply their own ``transform``."""
+    flush the batch and apply their own ``transform``. Each flush that
+    emits anything is logged at DEBUG with its reason."""
     spark = df.sparkSession
+    debug = _log.isEnabledFor(logging.DEBUG)
     base_cols = tuple(df.columns)
     # pending alias -> (expr, lateral depth, frame it was built on)
     pending: dict[str, tuple[Column, int, DataFrame]] = {}
@@ -181,9 +195,14 @@ def _fused_transform(
     # types of the current frame's columns, plus pending aliases once typed
     fields = {f.name: f for f in df.schema.fields}
 
-    def flush(t: Transformer | None = None) -> None:
+    def flush(reason: str, t: Transformer | None = None) -> None:
         """Emit the batch as one select, then apply ``t`` unfused."""
         nonlocal df
+        if debug and (pending or replacing or t is not None):
+            _log.debug(
+                "flush (%s): %d appended, %d replaced%s", reason, len(pending),
+                len(replacing), f", then {type(t).__name__}" if t is not None else "",
+            )
         if pending or replacing:
             df = select_outputs(df, replacing, {n: p[0] for n, p in pending.items()})
             pending.clear()
@@ -200,15 +219,16 @@ def _fused_transform(
         # reference to a name that exists in the child resolves against
         # the CHILD (the pre-replacement value), never the lateral alias
         if any(c in replacing for c in ins):
-            flush()
+            flush("in-place replacement")
         d = 1 + max((pending[c][1] for c in ins if c in pending), default=0)
         # a window expression cannot reference a lateral alias
         # (LATERAL_COLUMN_ALIAS_IN_WINDOW): window stages whose inputs
         # (incl. partition/order keys) are pending force a flush first;
         # deep dependent chains flush to stay under the analyzer's
         # iterative-resolution budget
-        if d > 1 and (not getattr(t, "lca_fuse", True) or d > _MAX_LCA_DEPTH):
-            flush()
+        lca = getattr(t, "lca_fuse", True)
+        if d > 1 and (not lca or d > _MAX_LCA_DEPTH):
+            flush("LCA depth cap" if lca else "window stage")
             d = 1
         vdf = df
         if d > 1:
@@ -217,13 +237,13 @@ def _fused_transform(
                     expr, _, frame = pending[c]
                     fields[c] = frame.select(expr.alias(c)).schema[0]
             known = [fields[c] for c in dict.fromkeys(ins) if c in fields]
-            vdf = spark.createDataFrame([], StructType(known))
+            vdf = dt.empty_frame(spark, StructType(known))
         exprs = t.build(vdf)
         if exprs is None or any(n in pending or n in replacing for n in exprs):
             # a non-projection stage, or an output overwriting a column
             # produced earlier in THIS batch: materialize the batch, then
             # apply the stage on its own
-            flush(t)
+            flush("non-projection stage" if exprs is None else "in-place replacement", t)
             continue
         # no output is pending here, so an output in ``fields`` is a
         # column of the current frame: an in-place replacement
@@ -231,7 +251,7 @@ def _fused_transform(
         if repl and d > 1:
             # replacement exprs sit in the select's BASE position and
             # cannot forward-reference pending lateral aliases
-            flush()
+            flush("in-place replacement")
             d = 1
         # in-place replacements FUSE into the batch (r6): they rewrite
         # the base position of the next flushed select instead of each
@@ -244,7 +264,7 @@ def _fused_transform(
         # hit the flush-on-read guard and see the new value.
         replacing.update(repl)
         pending.update((n, (c, d, vdf)) for n, c in exprs.items() if n not in repl)
-    flush()
+    flush("end of pipeline")
     if canonical is not None and canonical != transformers:
         # hoisted execution order: restore the column order the canonical
         # (declared-topological) order would have produced, so callers see
@@ -327,6 +347,11 @@ class PipelineModel(Stage):
         # reuse the partitioning (values identical in any topo order;
         # column order restored by _fused_transform)
         hoisted = _toposort([s for s in stages], hoist=True)
+        if hoisted != stages and _log.isEnabledFor(logging.DEBUG):
+            was = {id(s): i for i, s in enumerate(stages)}
+            for i, s in enumerate(hoisted):
+                if getattr(s, "schedule_early", False) and i < was[id(s)]:
+                    _log.debug("hoisted %s from stage %d to %d", type(s).__name__, was[id(s)], i)
         return _fused_transform(  # type: ignore[arg-type]
             df, hoisted, canonical=stages if hoisted != stages else None,
         )

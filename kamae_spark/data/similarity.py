@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from kamae_spark.core.dtypes import empty_frame
+
 # NOTE: the scan deliberately does NOT apply
 # kamae_spark.data.partitioning.ensure_scan_parallelism to the corpus:
 # per-row work here is a handful of FLOPs per dimension, so a corpus
@@ -208,7 +210,7 @@ def _scan_topk(
         StructField("score", DoubleType()),
     ])
     if not len(qp):
-        scored = corpus.sparkSession.createDataFrame([], out_schema)
+        scored = empty_frame(corpus.sparkSession, out_schema)
     else:
         Q, qids = _stack(qp[vec_col]), qp[id_col].to_numpy()
         fn = _local_topk(scorer(Q, qids), qids, k)

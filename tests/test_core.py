@@ -423,44 +423,16 @@ def test_pending_alias_read_with_column_from_non_projection_stage(spark):
     assert rows == [("c1", 1, 4.0), ("c1", 2, 5.0), ("c2", 1, 7.0)]
 
 
-def test_compile_typed_empty_frames_bounded(spark, transcripts, annotations, monkeypatch):
-    """Compile fence: typed empty frames made while compiling. Each
-    stage reading a pending alias builds on one empty frame of its
-    inputs; aliases are typed on the frame they were built on, so a
-    dependent chain makes at most one frame per stage, and stages that
-    read no pending alias make none."""
-    from pyspark.sql import SparkSession
-
+def _flagship_stages(annotations) -> list:
+    """The ten flagship feature stages (perfbench's flagship workload)."""
     from kamae_spark.operators.joins import AsOfJoin
-    from kamae_spark.operators.math import Sum
     from kamae_spark.operators.windows import (
         Backfill, ConditionalRollingCount, Lag, Lead, ListAgg, RollingAgg,
         Sessionize,
     )
 
-    made = []
-    create = SparkSession.createDataFrame
-
-    def counting(self, *args, **kwargs):
-        made.append(1)
-        return create(self, *args, **kwargs)
-
-    df = spark.createDataFrame([(float(i),) for i in range(10)], "c0 double")
-    monkeypatch.setattr(SparkSession, "createDataFrame", counting)
-
-    chain = [Sum(input_cols=[f"c{i}"], output_col=f"c{i + 1}", constant=1.0)
-             for i in range(40)]
-    PipelineModel(chain).transform(df)
-    assert len(made) <= 40, len(made)
-
-    made.clear()
-    wide = [Sum(input_cols=["c0"], output_col=f"b{i}", constant=float(i))
-            for i in range(500)]
-    PipelineModel(wide).transform(df)
-    assert made == []
-
     order = ("ts", "turn_idx")
-    flagship = [
+    return [
         Lag(input_col="text", output_col="prev_text", order_by=order),
         Lead(input_col="text", output_col="next_text", order_by=order),
         Lag(input_col="ts", output_col="prev_ts", order_by=order),
@@ -476,6 +448,114 @@ def test_compile_typed_empty_frames_bounded(spark, transcripts, annotations, mon
         ListAgg(input_col="turn_idx", output_col="conv_len", agg="count"),
         AsOfJoin(on=("conv_id",), right=annotations, strategy="union"),
     ]
-    made.clear()
-    PipelineModel(flagship).transform(transcripts)
-    assert made == []
+
+
+def _sum_chain(n: int) -> list:
+    """c_k = c_{k-1} + 1 for k = 1..n: every stage reads a pending alias."""
+    from kamae_spark.operators.math import Sum
+
+    return [Sum(input_cols=[f"c{i}"], output_col=f"c{i + 1}", constant=1.0)
+            for i in range(n)]
+
+
+def test_compile_typed_empty_frames_bounded(spark, transcripts, annotations, monkeypatch):
+    """Compile fence: typed empty frames made while compiling. Each
+    stage reading a pending alias builds on one empty frame of its
+    inputs, made by ``dtypes.empty_frame``; aliases are typed on the
+    frame they were built on, so a dependent chain makes at most one
+    frame per stage, and stages that read no pending alias make none.
+
+    The frames are counted at the helper, and the chain must make at
+    least one, so the bound cannot pass on a counter that sees nothing.
+    ``SparkSession.createDataFrame`` must not run during any compile:
+    even for an empty list it builds a Python RDD (about 47 py4j calls
+    against the helper's three), so a compile path that fell back to it
+    would go unseen by the helper count alone."""
+    from pyspark.sql import SparkSession
+
+    from kamae_spark.core import dtypes
+    from kamae_spark.operators.math import Sum
+
+    frames, creates = [], []
+    empty, create = dtypes.empty_frame, SparkSession.createDataFrame
+
+    def counting_empty(*args, **kwargs):
+        frames.append(1)
+        return empty(*args, **kwargs)
+
+    def counting_create(self, *args, **kwargs):
+        creates.append(1)
+        return create(self, *args, **kwargs)
+
+    df = spark.createDataFrame([(float(i),) for i in range(10)], "c0 double")
+    monkeypatch.setattr(dtypes, "empty_frame", counting_empty)
+    monkeypatch.setattr(SparkSession, "createDataFrame", counting_create)
+
+    def compile_counts(stages, frame) -> tuple[int, int]:
+        frames.clear()
+        creates.clear()
+        PipelineModel(stages).transform(frame)
+        return len(frames), len(creates)
+
+    made, created = compile_counts(_sum_chain(40), df)
+    assert 0 < made <= 40 and created == 0, (made, created)
+
+    wide = [Sum(input_cols=["c0"], output_col=f"b{i}", constant=float(i))
+            for i in range(500)]
+    assert compile_counts(wide, df) == (0, 0)
+    assert compile_counts(_flagship_stages(annotations), transcripts) == (0, 0)
+
+
+def test_fused_chain_schema_matches_stagewise(spark):
+    """A fused dependent chain over mixed dtypes types every alias on an
+    empty frame of its inputs. Its output schema (names, types,
+    nullability) and rows must equal those of applying each stage's
+    ``transform`` in turn on the full frame, so the empty frame cannot
+    drift a type or a nullability."""
+    from pyspark.sql import types as T
+
+    from kamae_spark.operators.math import AbsoluteValue, Multiply, Sum
+    from kamae_spark.operators.strings import StringAffix, StringCase
+
+    schema = T.StructType([
+        T.StructField("i", T.IntegerType(), False),
+        T.StructField("a", T.ArrayType(T.DoubleType(), True), True),
+        T.StructField("s", T.StringType(), True),
+    ])
+    df = spark.createDataFrame(
+        [(1, [1.5, -2.0], "ab"), (2, [None, 3.0], None), (3, None, "Cd"), (4, [], "")],
+        schema,
+    )
+    stages = [
+        Sum(input_cols=["i"], output_col="i1", constant=1.0),
+        Sum(input_cols=["i1"], output_col="i2", constant=1.0),
+        Multiply(input_cols=["a"], output_col="a1", constant=-2.0),
+        AbsoluteValue(input_col="a1", output_col="a2"),
+        StringCase(input_col="s", output_col="s1", case="upper"),
+        StringAffix(input_col="s1", output_col="s2", prefix="<", suffix=">"),
+        Sum(input_cols=["i2", "i1", "i"], output_col="i3"),
+    ]
+    fused = PipelineModel(stages).transform(df)
+    staged = df
+    for s in stages:
+        staged = s.transform(staged)
+    assert fused.schema == staged.schema  # StructField equality includes nullability
+    assert fused.orderBy("i").collect() == staged.orderBy("i").collect()
+
+
+def test_compile_decisions_logged(spark, transcripts, annotations, caplog):
+    """Compile decisions are logged at DEBUG on the ``kamae_spark``
+    logger: the 40-stage chain fuses into one select, flushed once at the
+    end of the pipeline, and the flagship compile hoists its AsOfJoin."""
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="kamae_spark")
+    df = spark.createDataFrame([(float(i),) for i in range(10)], "c0 double")
+    PipelineModel(_sum_chain(40)).transform(df)
+    flushes = [m for m in caplog.messages if m.startswith("flush")]
+    assert flushes == ["flush (end of pipeline): 40 appended, 0 replaced"], flushes
+
+    caplog.clear()
+    PipelineModel(_flagship_stages(annotations)).transform(transcripts)
+    hoisted = [m for m in caplog.messages if m.startswith("hoisted")]
+    assert hoisted == ["hoisted AsOfJoin from stage 9 to 0"], hoisted
