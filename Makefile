@@ -29,6 +29,7 @@ scaling:
 package:
 	python scripts/package.py
 
-# code lines per kamae_spark/ module and the total (no blanks, comments or docstrings)
+# code lines per kamae_spark/ module and the total, then one total each for
+# bench.py, scripts/ and tests/ (no blanks, comments or docstrings)
 loc:
-	python scripts/loc.py
+	python scripts/loc.py kamae_spark bench.py scripts tests

@@ -178,38 +178,10 @@ def _time_best(df, name: str = "?", n: int | None = None) -> float:
     return round(walls[len(walls) // 2], 3)
 
 
-def _feature_model(ann):
-    from kamae_spark.core.pipeline import PipelineModel
-    from kamae_spark.operators.joins import AsOfJoin
-    from kamae_spark.operators.windows import (
-        Backfill,
-        ConditionalRollingCount,
-        Lag,
-        Lead,
-        ListAgg,
-        RollingAgg,
-        Sessionize,
-    )
-
-    order = ("ts", "turn_idx")
-    return PipelineModel(
-        [
-            Lag(input_col="text", output_col="prev_text", order_by=order),
-            Lead(input_col="text", output_col="next_text", order_by=order),
-            Lag(input_col="ts", output_col="prev_ts", order_by=order),
-            RollingAgg(input_col="turn_idx", output_col="turns_5", agg="count", rows=5, order_by=order),
-            RollingAgg(input_col="turn_idx", output_col="mean_10", agg="mean", rows=10, order_by=order),
-            ConditionalRollingCount(input_col="role", output_col="role_freq_10", value="assistant", rows=10, order_by=order),
-            Backfill(input_col="tool", output_col="tool_ff", order_by=order),
-            Sessionize(ts_col="ts", output_col="session_idx", gap_seconds=1800, order_by=order, session_id_col="session_id"),
-            ListAgg(input_col="turn_idx", output_col="conv_len", agg="count"),
-            AsOfJoin(on=("conv_id",), right=ann, strategy="union"),
-        ]
-    )
-
-
 def main() -> None:
     import __spark_entry__ as entrymod
+    from kamae_spark.core.pipeline import PipelineModel
+    from kamae_spark.features import transcript_features
     from kamae_spark.sources.synth import annotations_table, transcripts_table
 
     spark = _session()
@@ -247,8 +219,7 @@ def main() -> None:
         t = entrymod._transcripts(spark, SF_DIR).cache()
         n_events = t.count()
         ann = entrymod._annotations(spark, SF_DIR)
-        model = _feature_model(ann)
-        out = model.transform(t)
+        out = PipelineModel(transcript_features(ann)).transform(t)
         _force(out)  # warm
         queries["feature_pipeline_events"] = _time_best(out, "feature_pipeline_events")
         extras["events_turns"] = n_events
@@ -355,7 +326,7 @@ def main() -> None:
         synth = transcripts_table(spark, n_convs=SYNTH_CONVS).cache()
         n_synth = synth.count()
         ann_s = annotations_table(spark, synth)
-        out_s = _feature_model(ann_s).transform(synth)
+        out_s = PipelineModel(transcript_features(ann_s)).transform(synth)
         _force(out_s)  # warm (JIT, cache residency)
         dt = _time_best(out_s, "feature_pipeline_synth")
         queries["feature_pipeline_synth"] = dt

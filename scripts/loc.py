@@ -1,11 +1,13 @@
-"""Count code lines per module of ``kamae_spark/``.
+"""Count code lines per module of ``kamae_spark/``, and in other roots.
 
 A code line holds at least one token that is not a comment, blank or
-docstring. Prints one ``<lines>  <module>`` row per module, largest
-first, then the package total.
+docstring. Each root is a directory (every ``.py`` file under it) or one
+``.py`` file. For the first root (default ``kamae_spark``) prints one
+``<lines>  <module>`` row per module, largest first, then its total;
+each further root gets one ``<lines>  total  <root>`` line.
 
-    python scripts/loc.py            # or: make loc
-    python scripts/loc.py path/to/pkg
+    python scripts/loc.py                                   # kamae_spark/ only
+    python scripts/loc.py kamae_spark bench.py scripts tests  # or: make loc
 """
 
 from __future__ import annotations
@@ -42,12 +44,18 @@ def code_lines(path: Path) -> int:
     return len(lines - docs)
 
 
-def main(root: str = "kamae_spark") -> None:
-    base = Path(root)
-    counts = {p.relative_to(base.parent): code_lines(p) for p in sorted(base.rglob("*.py"))}
+def sources(root: Path) -> list[Path]:
+    return [root] if root.is_file() else sorted(root.rglob("*.py"))
+
+
+def main(first: str = "kamae_spark", *rest: str) -> None:
+    base = Path(first)
+    counts = {p.relative_to(base.parent): code_lines(p) for p in sources(base)}
     for p, n in sorted(counts.items(), key=lambda kv: -kv[1]):
         print(f"{n:6d}  {p}")
     print(f"{sum(counts.values()):6d}  total")
+    for root in rest:
+        print(f"{sum(map(code_lines, sources(Path(root)))):6d}  total  {root}")
 
 
 if __name__ == "__main__":

@@ -2,9 +2,10 @@
 """Flagship feature-pipeline job for spark-submit --py-files execution.
 
 Reads a transcript table (+ optional annotations), computes the
-point-in-time feature set (lag/lead, rolling aggregates, role
-frequency, backfill, sessionization, as-of join), and writes a
-checkpointed, resumable feature table with lineage + metrics.
+point-in-time feature set of ``kamae_spark.features.transcript_features``
+(lag/lead, rolling aggregates, role frequency, backfill, sessionization,
+as-of join), and writes a checkpointed, resumable feature table with
+lineage + metrics.
 
 Example:
   spark-submit --py-files dist/kamae_spark.zip scripts/run_pipeline.py \
@@ -24,15 +25,15 @@ import sys
 
 def main(argv=None) -> None:
     p = argparse.ArgumentParser()
-    p.add_argument("--input", required=True, help="transcript table path")
+    src = p.add_mutually_exclusive_group(required=True)
+    src.add_argument("--input", help="transcript table path")
+    src.add_argument("--synthetic-convs", type=int,
+                     help="generate this many synthetic conversations instead of reading --input")
     p.add_argument("--annotations", default=None, help="annotation table path")
     p.add_argument("--output", required=True, help="feature table base path")
     p.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
     p.add_argument("--gap-seconds", type=int, default=1800)
     p.add_argument("--n-buckets", type=int, default=256)
-    p.add_argument("--rolling-window", type=int, default=10)
-    p.add_argument("--synthetic-convs", type=int, default=None,
-                   help="generate a synthetic input instead of reading --input")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -46,19 +47,10 @@ def main(argv=None) -> None:
         .getOrCreate()
     )
     from kamae_spark.core.pipeline import PipelineModel
-    from kamae_spark.operators.joins import AsOfJoin
-    from kamae_spark.operators.windows import (
-        Backfill,
-        ConditionalRollingCount,
-        Lag,
-        Lead,
-        ListAgg,
-        RollingAgg,
-        Sessionize,
-    )
+    from kamae_spark.features import transcript_features
     from kamae_spark.sources.io import CheckpointedFeatureWriter, read_table
 
-    if args.synthetic_convs:
+    if args.synthetic_convs is not None:
         from kamae_spark.sources.synth import annotations_table, transcripts_table
 
         t = transcripts_table(spark, n_convs=args.synthetic_convs)
@@ -67,22 +59,7 @@ def main(argv=None) -> None:
         t = read_table(spark, args.input, args.format)
         ann = read_table(spark, args.annotations, args.format) if args.annotations else None
 
-    order = ("ts", "turn_idx")
-    k = args.rolling_window
-    stages = [
-        Lag(input_col="text", output_col="prev_text", order_by=order),
-        Lead(input_col="text", output_col="next_text", order_by=order),
-        Lag(input_col="tool", output_col="prev_tool", order_by=order),
-        RollingAgg(input_col="turn_idx", output_col=f"turns_{k}", agg="count", rows=k, order_by=order),
-        ConditionalRollingCount(input_col="role", output_col=f"asst_{k}", value="assistant", rows=k, order_by=order),
-        Backfill(input_col="tool", output_col="tool_ff", order_by=order),
-        Sessionize(ts_col="ts", output_col="session_idx", gap_seconds=args.gap_seconds,
-                   order_by=order, session_id_col="session_id"),
-        ListAgg(input_col="turn_idx", output_col="conv_len", agg="count"),
-    ]
-    if ann is not None:
-        stages.append(AsOfJoin(on=("conv_id",), right=ann, strategy="union"))
-    features = PipelineModel(stages).transform(t)
+    features = PipelineModel(transcript_features(ann, args.gap_seconds)).transform(t)
 
     writer = CheckpointedFeatureWriter(args.output, key_cols=("conv_id",), n_buckets=args.n_buckets)
     metrics = writer.run(features)

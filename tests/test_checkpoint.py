@@ -118,3 +118,43 @@ def test_corrupt_lineage_fails_the_run(spark, transcripts, tmp_path):
     (tmp_path / "corrupt" / "lineage" / "part-corrupt.parquet").write_bytes(b"not parquet")
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         w.run(feat, job_id="second")
+
+
+def test_packaged_job_writes_the_feature_set_and_resumes(spark, tmp_path):
+    """``scripts/run_pipeline.py`` as a user runs it, in its own process
+    (the job stops its session): on a synthetic input it writes every
+    output column of ``transcript_features``, the lineage marks each
+    bucket complete with rows adding up to the input's, and a second run
+    writes nothing."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from kamae_spark.features import transcript_features
+    from kamae_spark.sources.synth import annotations_table, transcripts_table
+
+    repo = Path(__file__).resolve().parents[1]
+    out = tmp_path / "job"
+    cmd = [sys.executable, str(repo / "scripts" / "run_pipeline.py"),
+           "--synthetic-convs", "40", "--n-buckets", "4", "--output", str(out)]
+
+    def run_job() -> dict:
+        proc = subprocess.run(cmd, env={**os.environ, "PYTHONPATH": str(repo)},
+                              capture_output=True, text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        metrics = [line for line in proc.stdout.splitlines() if '"buckets_written"' in line]
+        return json.loads(metrics[-1])
+
+    assert run_job()["buckets_written"] == 4
+    t = transcripts_table(spark, n_convs=40)
+    expected = {c for s in transcript_features(annotations_table(spark, t))
+                for c in s.output_columns}
+    w = CheckpointedFeatureWriter(str(out), n_buckets=4)
+    assert expected <= set(w.read(spark).columns)
+    lin = w.lineage(spark).toPandas()
+    assert sorted(lin["bucket"]) == [0, 1, 2, 3]
+    assert (lin["status"] == "complete").all()
+    assert lin["rows"].sum() == t.count()
+    assert run_job()["buckets_written"] == 0

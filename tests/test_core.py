@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from kamae_spark.core.pipeline import Pipeline, PipelineModel, _toposort
 from kamae_spark.core.stage import Estimator, Transformer, keyword_params
+from kamae_spark.features import transcript_features
 
 
 class AddOne(Transformer):
@@ -423,31 +424,25 @@ def test_pending_alias_read_with_column_from_non_projection_stage(spark):
     assert rows == [("c1", 1, 4.0), ("c1", 2, 5.0), ("c2", 1, 7.0)]
 
 
-def _flagship_stages(annotations) -> list:
-    """The ten flagship feature stages (perfbench's flagship workload)."""
-    from kamae_spark.operators.joins import AsOfJoin
-    from kamae_spark.operators.windows import (
-        Backfill, ConditionalRollingCount, Lag, Lead, ListAgg, RollingAgg,
-        Sessionize,
-    )
+def test_benchmark_flagship_is_the_library_feature_set(annotations, monkeypatch):
+    """The benchmark's flagship workload keeps its own copy of the stage
+    list; it must equal ``transcript_features`` stage for stage, so the
+    benchmark measures the feature set the library ships. The workload
+    module is loaded from its file without writing a bytecode cache."""
+    import importlib.util
+    import sys
+    from pathlib import Path
 
-    order = ("ts", "turn_idx")
-    return [
-        Lag(input_col="text", output_col="prev_text", order_by=order),
-        Lead(input_col="text", output_col="next_text", order_by=order),
-        Lag(input_col="ts", output_col="prev_ts", order_by=order),
-        RollingAgg(input_col="turn_idx", output_col="turns_5", agg="count",
-                   rows=5, order_by=order),
-        RollingAgg(input_col="turn_idx", output_col="mean_10", agg="mean",
-                   rows=10, order_by=order),
-        ConditionalRollingCount(input_col="role", output_col="role_freq_10",
-                                value="assistant", rows=10, order_by=order),
-        Backfill(input_col="tool", output_col="tool_ff", order_by=order),
-        Sessionize(ts_col="ts", output_col="session_idx", gap_seconds=1800,
-                   order_by=order, session_id_col="session_id"),
-        ListAgg(input_col="turn_idx", output_col="conv_len", agg="count"),
-        AsOfJoin(on=("conv_id",), right=annotations, strategy="union"),
-    ]
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "workloads.py"
+    spec = importlib.util.spec_from_file_location("_perfbench_workloads", path)
+    wl = importlib.util.module_from_spec(spec)
+    monkeypatch.setattr(sys, "dont_write_bytecode", True)
+    spec.loader.exec_module(wl)
+
+    bench = [*wl.window_stages(), wl.sessionize_stage(), wl.listagg_stage(),
+             wl.asof_stage(annotations)]
+    assert [s.to_spec() for s in transcript_features(annotations)] == [
+        s.to_spec() for s in bench]
 
 
 def _sum_chain(n: int) -> list:
@@ -503,7 +498,7 @@ def test_compile_typed_empty_frames_bounded(spark, transcripts, annotations, mon
     wide = [Sum(input_cols=["c0"], output_col=f"b{i}", constant=float(i))
             for i in range(500)]
     assert compile_counts(wide, df) == (0, 0)
-    assert compile_counts(_flagship_stages(annotations), transcripts) == (0, 0)
+    assert compile_counts(transcript_features(annotations), transcripts) == (0, 0)
 
 
 def test_fused_chain_schema_matches_stagewise(spark):
@@ -556,6 +551,6 @@ def test_compile_decisions_logged(spark, transcripts, annotations, caplog):
     assert flushes == ["flush (end of pipeline): 40 appended, 0 replaced"], flushes
 
     caplog.clear()
-    PipelineModel(_flagship_stages(annotations)).transform(transcripts)
+    PipelineModel(transcript_features(annotations)).transform(transcripts)
     hoisted = [m for m in caplog.messages if m.startswith("hoisted")]
     assert hoisted == ["hoisted AsOfJoin from stage 9 to 0"], hoisted

@@ -13,6 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from kamae_spark.core.pipeline import PipelineModel
+from kamae_spark.data import dedup
+from kamae_spark.features import transcript_features
 from kamae_spark.operators.joins import AsOfJoin
 from kamae_spark.operators.windows import (
     Backfill,
@@ -77,27 +79,11 @@ def _node_names(plan: str) -> list[str]:
 
 
 def test_flagship_plan_fence(spark, transcripts, annotations):
-    """The ten flagship stages (the benchmark's list) on a re-spread
+    """The ten flagship stages (``transcript_features``) on a re-spread
     input, so the pipeline's own exchanges show: at most 4 Window nodes
     (Sessionize's lag of the raw timestamp merges into the first window
     batch), 2 Sorts and 1 hash Exchange."""
-    order = ("ts", "turn_idx")
-    model = PipelineModel(
-        [
-            Lag(input_col="text", output_col="prev_text", order_by=order),
-            Lead(input_col="text", output_col="next_text", order_by=order),
-            Lag(input_col="ts", output_col="prev_ts", order_by=order),
-            RollingAgg(input_col="turn_idx", output_col="turns_5", agg="count", rows=5, order_by=order),
-            RollingAgg(input_col="turn_idx", output_col="mean_10", agg="mean", rows=10, order_by=order),
-            ConditionalRollingCount(input_col="role", output_col="role_freq_10", value="assistant",
-                                    rows=10, order_by=order),
-            Backfill(input_col="tool", output_col="tool_ff", order_by=order),
-            Sessionize(ts_col="ts", output_col="session_idx", gap_seconds=1800, order_by=order,
-                       session_id_col="session_id"),
-            ListAgg(input_col="turn_idx", output_col="conv_len", agg="count"),
-            AsOfJoin(on=("conv_id",), right=annotations, strategy="union"),
-        ]
-    )
+    model = PipelineModel(transcript_features(annotations))
     plan = _executed(model.transform(transcripts.repartition(4)))
     names = _node_names(plan)
     assert names.count("Window") <= 4, plan
@@ -225,3 +211,57 @@ def test_minhash_verify_join_is_candidate_pruned(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _reads_range_directly(node) -> bool:
+    """Whether ``node``'s subtree reaches a Range scan without passing
+    through another exchange."""
+    name = node.getClass().getSimpleName()
+    if "Exchange" in name:
+        return False
+    return name == "RangeExec" or any(map(_reads_range_directly, _children(node)))
+
+
+def _source_repartitions(df) -> list[int]:
+    """Partition counts of the distinct REPARTITION_BY_NUM shuffles
+    planned directly over the input's Range scan. Copies of one shuffle
+    that AQE would reuse (``sameResult``, e.g. both sides of a self-join)
+    count once."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    found, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        todo.extend(_children(node))
+        if (node.getClass().getSimpleName() == "ShuffleExchangeExec"
+                and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+                and any(map(_reads_range_directly, _children(node)))
+                and not any(node.sameResult(f) for f in found)):
+            found.append(node)
+    return [f.outputPartitioning().numPartitions() for f in found]
+
+
+@pytest.mark.parametrize("call", [
+    lambda d: dedup.exact_dedup(d, "text", "doc_id"),
+    lambda d: dedup.ngram_jaccard_pairs(d, "text", "doc_id"),
+    lambda d: dedup.minhash_lsh_pairs(d, "text", "doc_id"),
+    lambda d: dedup.simhash_signatures_jvm(d, "toks", "doc_id"),
+], ids=["exact_dedup", "ngram_jaccard_pairs", "minhash_lsh_pairs", "simhash_signatures_jvm"])
+def test_dedup_scan_parallelism_plan(spark, call):
+    """Each ``ensure_scan_parallelism`` call site in ``data/dedup.py``
+    repartitions a 1-partition input to ``defaultParallelism`` exactly
+    once, at its source, and plans no such repartition over an input
+    that already has that many partitions."""
+    from kamae_spark.sources.synth import documents_table
+
+    target = spark.sparkContext.defaultParallelism
+    docs = documents_table(spark, n_docs=200).withColumn("toks", F.split("text", " "))
+    assert docs.rdd.getNumPartitions() >= target
+    assert _source_repartitions(call(docs.coalesce(1))) == [target]
+    assert _source_repartitions(call(docs)) == []
