@@ -20,6 +20,11 @@ without the networkx dependency:
   never re-analyzes the accumulated plan. That frame is a JVM
   ``LocalRelation`` (``dtypes.empty_frame``), not ``createDataFrame([])``,
   which would build a Python RDD for every such stage.
+- the compile's own plumbing avoids wrapped ``Column`` calls, each of
+  which pays PySpark's origin capture in py4j round trips: a flush is
+  one ``withColumns`` (``stage.select_outputs``), a pending alias is
+  typed unaliased and its field renamed in Python, and window and as-of
+  keys go by name
 - compile decisions (each flush and its reason, each hoisted stage) are
   logged at DEBUG on the ``kamae_spark`` logger
 - save/load: one JSON spec per pipeline (stages + params, including
@@ -35,7 +40,7 @@ import os
 from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from kamae_spark.core import dtypes as dt
 from kamae_spark.core.stage import Estimator, Stage, Transformer, select_outputs
@@ -148,8 +153,8 @@ def _fused_transform(
 ) -> DataFrame:
     """Apply transformers with select-fusion.
 
-    Consecutive pure-projection stages fuse into ONE ``select("*", ...)``
-    — including stages that consume a column produced earlier in the
+    Consecutive pure-projection stages fuse into ONE projection (one
+    ``withColumns``, resolved as one select) — including stages that consume a column produced earlier in the
     same batch: Spark's lateral column aliases (3.4+, on by default) let
     a select expression reference an alias defined earlier in the SAME
     select, so a dependent chain compiles to a few Projects instead of
@@ -168,9 +173,13 @@ def _fused_transform(
     py4j calls, where ``createDataFrame([], schema)`` would build and
     ship an empty Python RDD (about 47 calls) for every such stage. A
     pending alias is typed lazily, the first time a later stage reads
-    it, by one ``select(expr.alias(name)).schema`` on the frame it was
-    built on; its type then joins ``fields``. A breadth-only pipeline
-    never types an alias nor makes an empty frame.
+    it, by one UNALIASED ``select(expr).schema`` on the frame it was
+    built on, renamed in Python to a ``StructField`` of the same type,
+    nullability and metadata (an ``alias`` call would add about 11 py4j
+    calls per typed alias); its type then joins ``fields``. A
+    breadth-only pipeline never types an alias nor makes an empty frame.
+    The batch flushes as one ``withColumns`` (``stage.select_outputs``),
+    so no output pays an ``alias`` call either.
     Builds may only reference columns they declare in
     ``input_columns`` — already the pipeline's dependency contract
     (toposort runs on the same declaration).
@@ -204,7 +213,7 @@ def _fused_transform(
                 len(replacing), f", then {type(t).__name__}" if t is not None else "",
             )
         if pending or replacing:
-            df = select_outputs(df, replacing, {n: p[0] for n, p in pending.items()})
+            df = select_outputs(df, {**replacing, **{n: p[0] for n, p in pending.items()}})
             pending.clear()
             replacing.clear()
         if t is not None:
@@ -235,7 +244,8 @@ def _fused_transform(
             for c in ins:
                 if c in pending and c not in fields:
                     expr, _, frame = pending[c]
-                    fields[c] = frame.select(expr.alias(c)).schema[0]
+                    f = frame.select(expr).schema[0]
+                    fields[c] = StructField(c, f.dataType, f.nullable, f.metadata)
             known = [fields[c] for c in dict.fromkeys(ins) if c in fields]
             vdf = dt.empty_frame(spark, StructType(known))
         exprs = t.build(vdf)

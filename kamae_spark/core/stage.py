@@ -130,12 +130,7 @@ class Transformer(Stage):
             raise NotImplementedError(
                 f"{type(self).__name__} must override transform() or build()"
             )
-        cols = set(df.columns)
-        return select_outputs(
-            df,
-            {n: c for n, c in exprs.items() if n in cols},
-            {n: c for n, c in exprs.items() if n not in cols},
-        )
+        return select_outputs(df, exprs)
 
     # -- helpers for subclasses -------------------------------------------
     def _validate(self, df: DataFrame) -> None:
@@ -162,19 +157,33 @@ class Transformer(Stage):
         return expr
 
 
-def select_outputs(
-    df: DataFrame, replacing: dict[str, Column], appends: dict[str, Column]
-) -> DataFrame:
-    """Apply stage outputs in one ``select``. ``replacing`` exprs overwrite
-    existing columns in place, keeping their positions (the reference's
-    withColumn semantics, pipeline test
-    valid_stages_with_uid_set_same_as_input); ``appends`` follow the
-    existing columns."""
-    tail = [c.alias(n) for n, c in appends.items()]
-    if not replacing:
-        return df.select("*", *tail)
-    base = [replacing[n].alias(n) if n in replacing else F.col(n) for n in df.columns]
-    return df.select(*base, *tail)
+def select_outputs(df: DataFrame, outputs: dict[str, Column]) -> DataFrame:
+    """Apply stage outputs in one ``withColumns``, which is one Project.
+
+    An output named like an existing column replaces it in place,
+    keeping its position (the reference's withColumn semantics, pipeline
+    test valid_stages_with_uid_set_same_as_input); the others follow the
+    existing columns in order. Resolution is that of one ``select``: an
+    appended expression may read an output appended before it (a lateral
+    column alias), and every other reference, a replaced name included,
+    reads the input frame.
+
+    ``withColumns`` matches names with the session's resolver, so under
+    the default case-insensitive session an output that differs from a
+    column (or from another output) only by letter case would silently
+    replace it. Such an output raises ``ValueError`` there; a
+    case-sensitive session (``spark.sql.caseSensitive=true``) appends it.
+    The check reads the frame's schema (which PySpark caches once
+    fetched) and reads the session conf only when a twin is found."""
+    seen = {c.lower(): c for c in df.columns}
+    for n in outputs:
+        other = seen.setdefault(n.lower(), n)
+        if other != n and df.sparkSession.conf.get("spark.sql.caseSensitive").lower() != "true":
+            raise ValueError(
+                f"output column {n!r} differs from column {other!r} only by letter "
+                "case, which this case-insensitive session treats as one name"
+            )
+    return df.withColumns(outputs)
 
 
 class Estimator(Stage):

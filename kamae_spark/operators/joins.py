@@ -114,17 +114,17 @@ class AsOfJoin(Transformer):
 
     def transform(self, df: DataFrame) -> DataFrame:
         right = self._right_df(df.sparkSession).dropna(subset=[*self.on, self.right_ts])
-        rec = F.struct(
-            F.col(self.right_ts).alias("__ts"), *[F.col(c) for c in self.payload_cols]
-        ).alias("__rec")
+        rec = F.struct(F.col(self.right_ts).alias("__ts"), *self.payload_cols).alias("__rec")
         pick = self._broadcast if self.strategy == "broadcast" else self._union
         picked = pick(df, right, rec)
         latest = F.col("__rec")
         if self.tolerance_seconds is not None:
             age = epoch_seconds(F.col(self.left_ts)) - epoch_seconds(latest["__ts"])
             latest = F.when(age <= int(self.tolerance_seconds), latest)
+        # pass-through columns go by name: each wrapped ``Column`` call
+        # costs py4j round trips at compile time
         return picked.select(
-            *[F.col(c) for c in df.columns],
+            *df.columns,
             *[latest[c].alias(o) for c, o in zip(self.payload_cols, self.output_columns)],
         )
 
@@ -147,7 +147,7 @@ class AsOfJoin(Transformer):
         # picked in its own select: the tolerance step and every payload
         # field then read one column instead of re-evaluating the filter
         return joined.select(
-            *[F.col(c) for c in left.columns],
+            *left.columns,
             F.try_element_at(seen, F.lit(-1)).alias("__rec"),
         )
 
@@ -165,11 +165,11 @@ class AsOfJoin(Transformer):
         # annotation sorts before the turn at equal ts => tie goes to the annotation
         w = (
             Window.partitionBy(*self.on)
-            .orderBy(F.col(self.left_ts).asc(), F.col("__side").asc())
+            .orderBy(self.left_ts, "__side")
             .rowsBetween(UNB, CUR)
         )
         filled = u.select(
-            *[F.col(c) for c in left.columns],
+            *left.columns,
             "__side",
             F.last("__rec", ignorenulls=True).over(w).alias("__rec"),
         )

@@ -37,7 +37,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from kamae_spark.core.stage import Transformer, keyword_params
+from kamae_spark.core.stage import Transformer, keyword_params, select_outputs
 from kamae_spark.functions.time import epoch_fractional, epoch_seconds
 
 UNB = Window.unboundedPreceding
@@ -91,10 +91,12 @@ class _Windowed(Transformer):
                 *[c.lstrip("-") for c in self._order()]]
 
     def window(self, frame: tuple[int, int] | None = None) -> WindowSpec:
-        """The spec over the keys; ``'-col'`` orders descending."""
-        w = Window.partitionBy(*[F.col(c) for c in self._partition()])
+        """The spec over the keys; ``'-col'`` orders descending. Keys go
+        by name (a name orders ascending): each wrapped ``Column`` call
+        costs py4j round trips at compile time."""
+        w = Window.partitionBy(*self._partition())
         if self._order():
-            w = w.orderBy(*[F.col(c[1:]).desc() if c.startswith("-") else F.col(c).asc()
+            w = w.orderBy(*[F.col(c[1:]).desc() if c.startswith("-") else c
                             for c in self._order()])
         return w if frame is None else w.rowsBetween(*frame)
 
@@ -277,15 +279,15 @@ class Sessionize(_Windowed):
         gap = epoch_fractional(F.col(self.ts_col)) - epoch_fractional(prev)
         flag = F.when(gap > F.lit(float(self.gap_seconds)), 1).otherwise(0)
         tmp = f"__gap_flag_{self.output_col}"
-        df = df.select("*", flag.alias(tmp))
+        df = select_outputs(df, {tmp: flag})
         idx = F.sum(tmp).over(w.rowsBetween(UNB, CUR)).cast("int")
-        df = df.select("*", idx.alias(self.output_col)).drop(tmp)
+        df = select_outputs(df, {self.output_col: idx}).drop(tmp)
         if self.session_id_col:
             sid = F.concat_ws(
                 "#", *[F.col(c).cast("string") for c in self._partition()],
                 F.col(self.output_col).cast("string"),
             )
-            df = df.select("*", sid.alias(self.session_id_col))
+            df = select_outputs(df, {self.session_id_col: sid})
         return df
 
 
@@ -333,7 +335,7 @@ class ListAgg(_Windowed):
         cond = None if self.min_filter_value is None else value >= F.lit(self.min_filter_value)
         tmp = f"__topn_{self.output_col}"
         if self.top_n is not None:
-            df = df.select("*", (F.row_number().over(self.window()) <= self.top_n).alias(tmp))
+            df = select_outputs(df, {tmp: F.row_number().over(self.window()) <= self.top_n})
             cond = F.col(tmp) if cond is None else cond & F.col(tmp)
         if cond is not None:
             value = F.when(cond, value)
@@ -345,7 +347,7 @@ class ListAgg(_Windowed):
         res = agg(value).over(Window.partitionBy(*self._partition()))
         if self.nan_fill is not None:
             res = F.when(res.isNull() | F.isnan(res.cast("double")), F.lit(self.nan_fill)).otherwise(res)
-        df = df.select("*", res.alias(self.output_col))
+        df = select_outputs(df, {self.output_col: res})
         return df.drop(tmp) if self.top_n is not None else df
 
 

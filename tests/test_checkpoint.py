@@ -158,3 +158,38 @@ def test_packaged_job_writes_the_feature_set_and_resumes(spark, tmp_path):
     assert (lin["status"] == "complete").all()
     assert lin["rows"].sum() == t.count()
     assert run_job()["buckets_written"] == 0
+
+
+def test_packaged_job_annotation_source_rule(spark, tmp_path):
+    """``run_pipeline.py --annotations`` follows one rule with either
+    source: ``none`` joins no annotations and a path is read. Omitted,
+    synthetic conversations get generated annotations and ``--input``
+    joins none. The job's source choice runs in-process here (``main``
+    stops the session)."""
+    import importlib.util
+    from pathlib import Path
+
+    from kamae_spark.sources.synth import annotations_table, transcripts_table
+
+    path = Path(__file__).resolve().parents[1] / "scripts" / "run_pipeline.py"
+    spec = importlib.util.spec_from_file_location("_run_pipeline", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    t = transcripts_table(spark, n_convs=6)
+    t.write.parquet(str(tmp_path / "t"))
+    # a one-row table, told apart from generated annotations by its count
+    annotations_table(spark, t).limit(1).write.parquet(str(tmp_path / "ann"))
+
+    def annotation_rows(*flags) -> int | None:
+        args = job.parse_args([*flags, "--output", str(tmp_path / "out")])
+        _, ann = job.load_sources(spark, args)
+        return None if ann is None else ann.count()
+
+    generated = annotations_table(spark, t).count()
+    assert generated > 1
+    for source in (["--synthetic-convs", "6"], ["--input", str(tmp_path / "t")]):
+        assert annotation_rows(*source, "--annotations", "none") is None
+        assert annotation_rows(*source, "--annotations", str(tmp_path / "ann")) == 1
+    assert annotation_rows("--synthetic-convs", "6") == generated
+    assert annotation_rows("--input", str(tmp_path / "t")) is None

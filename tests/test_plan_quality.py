@@ -218,18 +218,19 @@ def _children(node) -> list:
     return [kids.apply(i) for i in range(kids.size())]
 
 
-def _reads_range_directly(node) -> bool:
-    """Whether ``node``'s subtree reaches a Range scan without passing
-    through another exchange."""
+def _reads_source_directly(node) -> bool:
+    """Whether ``node``'s subtree reaches a source scan (a Range or a
+    file scan) without passing through another exchange."""
     name = node.getClass().getSimpleName()
     if "Exchange" in name:
         return False
-    return name == "RangeExec" or any(map(_reads_range_directly, _children(node)))
+    return (name in ("RangeExec", "FileSourceScanExec")
+            or any(map(_reads_source_directly, _children(node))))
 
 
 def _source_repartitions(df) -> list[int]:
     """Partition counts of the distinct REPARTITION_BY_NUM shuffles
-    planned directly over the input's Range scan. Copies of one shuffle
+    planned directly over the input's source scan. Copies of one shuffle
     that AQE would reuse (``sameResult``, e.g. both sides of a self-join)
     count once."""
     plan = df._jdf.queryExecution().executedPlan()
@@ -241,7 +242,7 @@ def _source_repartitions(df) -> list[int]:
         todo.extend(_children(node))
         if (node.getClass().getSimpleName() == "ShuffleExchangeExec"
                 and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
-                and any(map(_reads_range_directly, _children(node)))
+                and any(map(_reads_source_directly, _children(node)))
                 and not any(node.sameResult(f) for f in found)):
             found.append(node)
     return [f.outputPartitioning().numPartitions() for f in found]
@@ -265,3 +266,24 @@ def test_dedup_scan_parallelism_plan(spark, call):
     assert docs.rdd.getNumPartitions() >= target
     assert _source_repartitions(call(docs.coalesce(1))) == [target]
     assert _source_repartitions(call(docs)) == []
+
+
+@pytest.mark.parametrize("query", ["text_stats", "text_quality"])
+def test_text_query_scan_parallelism_plan(spark, tmp_path, monkeypatch, query):
+    """``__spark_entry__``'s ``text_stats`` and ``text_quality`` call
+    ``ensure_scan_parallelism`` on ``documents.parquet``. A 1-file copy
+    reads as one partition, fewer than ``defaultParallelism``, so the
+    query repartitions it to that count exactly once, at its source."""
+    from pathlib import Path
+
+    from kamae_spark.sources.synth import documents_table
+
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parents[1]))
+    import __spark_entry__ as entry
+
+    target = spark.sparkContext.defaultParallelism
+    path = tmp_path / "documents.parquet"
+    documents_table(spark, n_docs=200).coalesce(1).write.parquet(str(path))
+    assert spark.read.parquet(str(path)).rdd.getNumPartitions() == 1 < target
+    out = getattr(entry, f"_q_{query}")(spark, str(tmp_path))
+    assert _source_repartitions(out) == [target]

@@ -239,3 +239,32 @@ def test_bare_string_key_is_one_key(transcripts, cls, kw, key, name):
         return out.select(cols).orderBy("conv_id", "turn_idx").collect()
 
     assert rows(bare) == rows(one)
+
+
+def test_listagg_and_sessionize_outputs_replace_existing_columns_in_place(listwise, transcripts):
+    """An output named like an existing column replaces it in place, as
+    a ``build`` stage's output does: the frame keeps one column of that
+    name at its position, holding the new value, and no temporary is
+    left behind."""
+    cols = listwise.columns
+    for stage in (ListAgg(input_col="col2", output_col="col2", agg="sum", group_cols=("query_id",)),
+                  ListAgg(input_col="col2", output_col="col2", agg="sum", group_cols=("query_id",),
+                          top_n=2, sort_by=("col3",))):
+        out = PipelineModel([stage]).transform(listwise)
+        assert out.columns == cols
+        got = out.toPandas().sort_values(["query_id", "col3"])
+        pdf = listwise.toPandas().sort_values(["query_id", "col3"])
+        if stage.top_n is not None:
+            pdf = pdf.assign(col2=pdf["col2"].where(pdf.groupby("query_id")["col3"].rank() <= 2))
+        exp = pdf.groupby("query_id")["col2"].transform("sum")
+        np.testing.assert_allclose(got["col2"].to_numpy(), exp.to_numpy())
+
+    # tool and role exist already: the session index and id replace them
+    sess = Sessionize(ts_col="ts", output_col="tool", gap_seconds=1800, session_id_col="role")
+    out = sess.transform(transcripts)
+    assert out.columns == transcripts.columns
+    ref = Sessionize(ts_col="ts", output_col="session_idx", gap_seconds=1800,
+                     session_id_col="session_id").transform(transcripts)
+    key = ["conv_id", "turn_idx"]
+    assert (out.select(*key, "tool", "role").orderBy(*key).collect()
+            == ref.select(*key, "session_idx", "session_id").orderBy(*key).collect())
