@@ -149,10 +149,18 @@ class Transformer(Stage):
             df, self.input_columns, self.compatible_dtypes, type(self).__name__
         )
 
-    def _out(self, df: DataFrame, expr: Column, level: int = 0) -> Column:
-        """Apply optional elementwise output_dtype cast to the result."""
+    def _out(self, df: DataFrame, expr: Column) -> Column:
+        """Apply the optional elementwise ``output_dtype`` cast to ``expr``.
+
+        The cast reaches the innermost elements of the output, whatever
+        its nesting: the depth is read from the type of ``expr`` itself
+        (one ``df.select(expr).schema``, paid only when ``output_dtype``
+        is set), so an operator whose output nests deeper or shallower
+        than its input needs nothing of its own. Without
+        ``output_dtype`` the expression is returned untouched."""
         cast_to = getattr(self, "output_dtype", None)
         if cast_to:
+            level, _ = dt.element_type(df.select(expr).schema[0].dataType)
             expr = dt.nested_cast(expr, level, cast_to)
         return expr
 

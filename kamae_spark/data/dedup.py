@@ -647,11 +647,11 @@ def hyperplane_bits_udf(dim: int, n_bits: int = 8, seed: int = 42):
     W = rng.randn(n_bits, dim)
     powers = 1 << np.arange(n_bits, dtype=np.int64)
 
-    def bits(s):
+    def bits(s: pd.Series) -> pd.Series:
         M = np.stack([np.asarray(v, dtype=np.float64) for v in s])
         return pd.Series(((M @ W.T >= 0).astype(np.int64) @ powers))
 
-    return pandas_udf(bits, "long", functionType=200)
+    return pandas_udf(bits, "long")
 
 
 def embedding_neardup_pairs(

@@ -83,7 +83,7 @@ def cosine_pairs_udf():
         nb = np.sqrt(np.einsum("ij,ij->i", B, B))
         return pd.Series(dots / np.maximum(na * nb, 1e-300))
 
-    return pandas_udf(cos, "double", functionType=200)
+    return pandas_udf(cos, "double")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -376,18 +376,13 @@ def _bucket_udfs(cents, nprobe: int):
     interpreted F.transform/F.aggregate lambdas, the dominant cost of
     the assignment pass at corpus scale)."""
 
-    def assign(s):
+    def assign(s: pd.Series) -> pd.Series:
         return pd.Series(np.argmax(_unit(_stack(s)) @ cents.T, axis=1).astype(np.int32))
 
-    def probe(s):
+    def probe(s: pd.Series) -> pd.Series:
         return pd.Series(list(_probe(_stack(s), cents, nprobe).astype(np.int32)))
 
-    # explicit SCALAR eval type: `from __future__ import annotations`
-    # stringifies hints, which pyspark's hint inference cannot resolve
-    return (
-        pandas_udf(assign, "int", functionType=200),
-        pandas_udf(probe, "array<int>", functionType=200),
-    )
+    return pandas_udf(assign, "int"), pandas_udf(probe, "array<int>")
 
 
 def ivf_topk(

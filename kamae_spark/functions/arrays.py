@@ -49,21 +49,22 @@ def elementwise(
     in_cols: Sequence[str],
     fn: Callable[..., Column],
     columns: Sequence[Column] | None = None,
-) -> tuple[Column, int]:
+) -> Column:
     """Apply scalar ``fn`` across N input columns elementwise.
 
     Handles mixed shapes: array columns must share one nesting level;
     scalar columns are broadcast by closing over them in the transform
     lambda (legal: lambda bodies may reference other row columns).
-    Returns (expression, nesting_level) — level lets callers cast output
-    elements. ``columns`` overrides the default ``F.col`` per input
-    (used for input_dtype casts).
+    ``columns`` overrides the default ``F.col`` per input (used for
+    input_dtype casts). The output's own nesting, which ``fn`` may
+    deepen (a scalar to an array), is read back from its type by
+    ``Transformer._out`` when an output cast needs it.
     """
     cols = list(columns) if columns is not None else [F.col(c) for c in in_cols]
     levels = [column_info(df, c)[0] for c in in_cols]
     max_level = max(levels)
     if max_level == 0:
-        return fn(*cols), 0
+        return fn(*cols)
     array_pos = [i for i, lv in enumerate(levels) if lv == max_level]
     if any(lv not in (0, max_level) for lv in levels):
         raise ValueError(
@@ -76,7 +77,7 @@ def elementwise(
         full = [next(elems) if i in array_pos else cols[i] for i in range(len(cols))]
         return fn(*full)
 
-    return zipwise([cols[i] for i in array_pos], apply, max_level), max_level
+    return zipwise([cols[i] for i in array_pos], apply, max_level)
 
 
 def flatten_nested(col: Column, level: int) -> Column:

@@ -15,23 +15,30 @@ from pyspark.sql import functions as F
 
 from kamae_spark.core.dtypes import NUMERIC, column_info
 from kamae_spark.core.stage import Transformer, keyword_params
-from kamae_spark.functions.arrays import nested_transform
-from kamae_spark.operators.rowwise import ElementwiseTransform
+from kamae_spark.functions.arrays import nested_transform, zipwise
 
 
 class ArrayTransform(Transformer):
-    """Base for innermost-axis array ops: subclass implements
-    ``afn(arr) -> Column`` applied at depth level-1."""
+    """The one base for innermost-axis array ops: a subclass implements
+    ``afn(*arrs) -> Column`` over the innermost arrays of its inputs
+    (``input_col``, or ``input_cols`` in order).
 
-    def afn(self, arr: Column) -> Column:  # pragma: no cover - abstract
+    For inputs nested ``level`` deep, ``afn`` applies at depth
+    ``level - 1``; several inputs are zipped level by level down to it
+    (``zipwise``), so array inputs share one nesting. The output nests
+    as ``afn`` makes it (a reduction drops a level, a crop keeps it);
+    ``Transformer._out`` reads that nesting back for ``output_dtype``."""
+
+    def afn(self, *arrs: Column) -> Column:  # pragma: no cover - abstract
         raise NotImplementedError
 
     def build(self, df: DataFrame):
         self._validate(df)
-        level, _ = column_info(df, self.input_col)
+        ins = self.input_columns
+        level = max(column_info(df, c)[0] for c in ins)
         if level < 1:
-            raise TypeError(f"{type(self).__name__}: {self.input_col} must be an array")
-        expr = nested_transform(self._in(df, self.input_col), self.afn, level - 1)
+            raise TypeError(f"{type(self).__name__}: inputs {ins} hold no array column")
+        expr = zipwise([self._in(df, c) for c in ins], self.afn, level - 1)
         return {self.output_col: self._out(df, expr)}
 
 
@@ -77,7 +84,7 @@ class ArrayConcatenate(Transformer):
             parts.append((level == 0, self._in(df, c)))
             max_level = max(max_level, level)
         expr = _zip_concat(parts, max(max_level - 1, 0))
-        return {self.output_col: self._out(df, expr, max(max_level, 1))}
+        return {self.output_col: self._out(df, expr)}
 
 
 class ArraySplit(Transformer):
@@ -92,8 +99,6 @@ class ArraySplit(Transformer):
         pass
 
     def build(self, df: DataFrame):
-        from kamae_spark.functions.arrays import nested_transform
-
         col = self._in(df, self.input_col)
         level, _ = column_info(df, self.input_col)
 
@@ -102,10 +107,7 @@ class ArraySplit(Transformer):
             at = lambda a: F.try_element_at(a, F.lit(i + 1))
             return at(col) if level <= 1 else nested_transform(col, at, level - 1)
 
-        return {
-            name: self._out(df, pick(i), max(level - 1, 0))
-            for i, name in enumerate(self.output_cols)
-        }
+        return {name: self._out(df, pick(i)) for i, name in enumerate(self.output_cols)}
 
 
 class ArrayCrop(ArrayTransform):
@@ -183,7 +185,7 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double")))
 
 
-class CosineSimilarity(ElementwiseTransform):
+class CosineSimilarity(ArrayTransform):
     """Cosine similarity of two vector columns, reducing the INNERMOST
     axis — nested inputs broadcast through the outer levels, so shape
     [..][d] x [..][d] -> [..] (reference cosine_similarity.py:97 via
@@ -197,30 +199,17 @@ class CosineSimilarity(ElementwiseTransform):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
-    def build(self, df: DataFrame):
-        from kamae_spark.core.dtypes import column_info
-        from kamae_spark.functions.arrays import zipwise
-
-        a = self._in(df, self.input_cols[0])
-        b = self._in(df, self.input_cols[1])
-
-        def cos(x: Column, y: Column) -> Column:
-            # try_divide: a zero-norm vector yields null, not an ANSI error
-            return F.try_divide(_dot(x, y), _norm(x) * _norm(y))
-
-        level = max(
-            column_info(df, self.input_cols[0])[0],
-            column_info(df, self.input_cols[1])[0],
-        )
-        expr = cos(a, b) if level <= 1 else zipwise([a, b], cos, level - 1)
-        return {self.output_col: self._out(df, expr, max(level - 1, 0))}
+    def afn(self, x: Column, y: Column) -> Column:
+        # try_divide: a zero-norm vector yields null, not an ANSI error
+        return F.try_divide(_dot(x, y), _norm(x) * _norm(y))
 
 
-class PairwiseCosineSimilarity(Transformer):
+class PairwiseCosineSimilarity(ArrayTransform):
     """Cosine similarity between one query vector and a flat array of
     concatenated candidate vectors -> array of similarities (reference
     pairwise_cosine_similarity.py:85: sequence+slice chunking; zero
-    denominators coalesce to 0)."""
+    denominators coalesce to 0). Nested inputs pair up through their
+    outer levels, as in ``CosineSimilarity``."""
 
     compatible_dtypes = ("float", "double")
 
@@ -230,12 +219,9 @@ class PairwiseCosineSimilarity(Transformer):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
-    def build(self, df: DataFrame):
-        query = self._in(df, self.input_cols[0])
-        flat = self._in(df, self.input_cols[1])
+    def afn(self, query: Column, flat: Column) -> Column:
         dim = self.embedding_dim
         n = (F.size(flat) / F.lit(dim)).cast("int")
-        idx = F.sequence(F.lit(0), n - 1)
         qn = _norm(query)
 
         def sim(i: Column) -> Column:
@@ -246,7 +232,7 @@ class PairwiseCosineSimilarity(Transformer):
             # line 85 coalesces under non-ANSI semantics)
             return F.coalesce(F.try_divide(_dot(query, cand), qn * _norm(cand)), F.lit(0.0))
 
-        return {self.output_col: self._out(df, F.transform(idx, sim))}
+        return F.transform(F.sequence(F.lit(0), n - 1), sim)
 
 
 class OrdinalArrayEncode(ArrayTransform):

@@ -12,12 +12,11 @@ salting scheme) are preserved.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from kamae_spark.core.stage import keyword_params
+from kamae_spark.operators.arrays import ArrayTransform
 from kamae_spark.operators.rowwise import ElementwiseTransform
 
 
@@ -71,7 +70,7 @@ class BloomEncode(ElementwiseTransform):
         return F.array(*[one(k) for k in range(self.num_hash_fns)])
 
 
-class MinHashIndex(ElementwiseTransform):
+class MinHashIndex(ArrayTransform):
     """array<string> (a token set) -> num_permutations minhash signature
     (reference min_hash_index.py:144, min_hash_udf): signature[p] =
     min over tokens of hash_p(token), hash_p = xxhash64 salted by p.
@@ -94,38 +93,23 @@ class MinHashIndex(ElementwiseTransform):
         if num_permutations < 1:
             raise ValueError("num_permutations must be >= 1")
 
-    def build(self, df):
-        from kamae_spark.core.dtypes import column_info
-        from kamae_spark.functions.arrays import nested_transform
+    def afn(self, raw_tokens: Column) -> Column:
+        # reference min_hash_udf:177-181: nulls (and the mask value, if
+        # set) never contribute to the minimum; an empty residue hashes
+        # the empty string so the signature is total
+        tokens = F.filter(raw_tokens, lambda t: t.isNotNull())
+        if self.mask_value is not None:
+            tokens = F.filter(tokens, lambda t: t != F.lit(self.mask_value))
+        tokens = F.when(F.size(tokens) > 0, tokens).otherwise(F.array(F.lit("")))
 
-        self._validate(df)
-        level, _ = column_info(df, self.input_col)
-        if level < 1:
-            raise TypeError(f"{self.input_col} must be an array of strings")
-
-        def sig(raw_tokens: Column) -> Column:
-            # reference min_hash_udf:177-181: nulls (and the mask value,
-            # if set) never contribute to the minimum; an empty residue
-            # hashes the empty string so the signature is total
-            tokens = F.filter(raw_tokens, lambda t: t.isNotNull())
-            if self.mask_value is not None:
-                tokens = F.filter(tokens, lambda t: t != F.lit(self.mask_value))
-            tokens = F.when(F.size(tokens) > 0, tokens).otherwise(
-                F.array(F.lit(""))
-            )
-            def one(p: Column) -> Column:
-                m = F.array_min(
-                    F.transform(
-                        tokens,
-                        lambda t: F.xxhash64(F.concat(p.cast("string"), F.lit("#"), t)),
-                    )
+        def one(p: Column) -> Column:
+            m = F.array_min(
+                F.transform(
+                    tokens,
+                    lambda t: F.xxhash64(F.concat(p.cast("string"), F.lit("#"), t)),
                 )
-                # reference layout: {0,1} parity-bit feature array
-                return F.pmod(m, F.lit(2)).cast("int") if self.parity_bit else m
-
-            return F.transform(
-                F.sequence(F.lit(0), F.lit(self.num_permutations - 1)), one
             )
+            # reference layout: {0,1} parity-bit feature array
+            return F.pmod(m, F.lit(2)).cast("int") if self.parity_bit else m
 
-        expr = nested_transform(self._in(df, self.input_col), sig, level - 1)
-        return {self.output_col: self._out(df, expr)}
+        return F.transform(F.sequence(F.lit(0), F.lit(self.num_permutations - 1)), one)

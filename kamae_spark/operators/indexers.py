@@ -26,8 +26,9 @@ Index layout (reference user_defined_functions.py:46-102):
   vocab[i] -> i + num_oov + start.
 """
 
-from __future__ import annotations
-
+# no ``from __future__ import annotations``: the big-vocab pandas UDF is
+# declared by type hints that name a function-local ``pd``, which
+# pyspark could not resolve from a postponed (string) annotation
 import inspect
 from typing import Sequence
 
@@ -35,9 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kamae_spark.core.dtypes import column_info
-from kamae_spark.core.stage import Estimator, keyword_params
-from kamae_spark.functions.arrays import flatten_nested
-from kamae_spark.operators.rowwise import ElementwiseTransform
+from kamae_spark.core.stage import Estimator, Transformer, keyword_params, select_outputs
+from kamae_spark.functions.arrays import elementwise, flatten_nested
 
 # Above this vocab size the literal map_from_arrays lookup loses: it is a
 # per-row linear scan of the vocab, and the whole vocab is embedded in
@@ -97,7 +97,7 @@ def collect_labels(
         ordered = u.distinct().orderBy(F.col("v").asc() if asc else F.col("v").desc())
     if max_num_labels is not None:
         ordered = ordered.limit(int(max_num_labels))
-    return [r["v"] for r in ordered.select("v").collect()]
+    return ordered.select("v").toArrow().column("v").to_pylist()
 
 
 def vocab_offset(mask_token: str | None, num_oov_indices: int) -> int:
@@ -144,7 +144,49 @@ def fallback_expr(x: Column, mask_token: str | None, num_oov_indices: int) -> Co
     return index_expr(x, F.lit(None).cast("int"), mask_token, num_oov_indices)
 
 
-class StringIndexTransformer(ElementwiseTransform):
+class _VocabLookup(Transformer):
+    """Base of the four fitted vocab transformers: the fitted ``labels``
+    applied to each (input, output) column pair of the stage on its own,
+    elementwise through any nesting. ``_index`` is one element's index
+    (see the module docstring for the layout); ``fn`` is what an element
+    maps to, its index unless a subclass says otherwise."""
+
+    compatible_dtypes = ("string",)
+
+    def _index(self, x: Column) -> Column:
+        offset = vocab_offset(self.mask_token, self.num_oov_indices)
+        return index_expr(x, literal_lookup(x, self.labels, offset),
+                          self.mask_token, self.num_oov_indices)
+
+    def fn(self, x: Column) -> Column:
+        return self._index(x)
+
+    def _pairs(self, df: DataFrame) -> list[tuple[str, str]]:
+        """The (input, output) column pairs, after dtype validation."""
+        self._validate(df)
+        ins, outs = self.input_columns, self.output_columns
+        if len(ins) != len(outs):
+            raise ValueError(
+                f"{type(self).__name__}: {len(ins)} input columns for "
+                f"{len(outs)} output columns; they must align"
+            )
+        return list(zip(ins, outs))
+
+    def _join_cols(self, df: DataFrame) -> dict[str, int]:
+        """Input columns taking a big-vocab path -> nesting level."""
+        return {}
+
+    def build(self, df: DataFrame):
+        pairs = self._pairs(df)
+        if self._join_cols(df):
+            return None  # pipeline falls back to transform()
+        return {
+            out_c: self._out(df, elementwise(df, [in_c], self.fn, columns=[self._in(df, in_c)]))
+            for in_c, out_c in pairs
+        }
+
+
+class StringIndexTransformer(_VocabLookup):
     """Fitted vocab lookup (see module docstring for index layout).
 
     Big-vocab path: when the vocab exceeds ``VOCAB_JOIN_THRESHOLD``,
@@ -160,10 +202,9 @@ class StringIndexTransformer(ElementwiseTransform):
     probe and layout parity is structural). Rationale: a join would need
     explode + order-preserving re-assembly (an extra shuffle per
     column); the literal map would inline a multi-MB vocab into every
-    plan and crush the analyzer.
+    plan and crush the analyzer. Either path replaces an output named
+    like an existing column in place, as ``build`` does.
     """
-
-    compatible_dtypes = ("string",)
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -172,34 +213,16 @@ class StringIndexTransformer(ElementwiseTransform):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
-    def _index_expr(self, x: Column) -> Column:
-        offset = vocab_offset(self.mask_token, self.num_oov_indices)
-        return index_expr(x, literal_lookup(x, self.labels, offset),
-                          self.mask_token, self.num_oov_indices)
-
-    def fn(self, x: Column) -> Column:
-        return self._index_expr(x)
-
-    # -- broadcast-join lookup (big vocab, scalar columns) -----------------
-    def _col_pairs(self) -> list[tuple[str, str]]:
-        return [(self.input_col, self.output_col)]
-
     def _join_cols(self, df: DataFrame) -> dict[str, int]:
-        """input columns taking a big-vocab path -> nesting level."""
         if len(self.labels) <= VOCAB_JOIN_THRESHOLD:
             return {}
         return {c: column_info(df, c)[0] for c in self.input_columns}
-
-    def build(self, df: DataFrame):
-        if self._join_cols(df):
-            return None  # pipeline falls back to transform()
-        return super().build(df)
 
     def transform(self, df: DataFrame) -> DataFrame:
         join_cols = self._join_cols(df)
         if not join_cols:
             return super().transform(df)
-        self._validate(df)
+        pairs = self._pairs(df)
         # the small-vocab map_from_arrays path raises on duplicate keys;
         # the join path would silently DUPLICATE input rows and the dict
         # path would silently last-wins — fail identically on both sides
@@ -209,8 +232,8 @@ class StringIndexTransformer(ElementwiseTransform):
                 f"{type(self).__name__}: labels contain duplicate entries; "
                 "vocab keys must be unique"
             )
-        for in_c, out_c in self._col_pairs():
-            if join_cols.get(in_c, 0) == 0:
+        for in_c, out_c in pairs:
+            if join_cols[in_c] == 0:
                 df = self._join_lookup(df, in_c, out_c)
             else:
                 df = self._dict_lookup(df, in_c, out_c, join_cols[in_c])
@@ -234,7 +257,7 @@ class StringIndexTransformer(ElementwiseTransform):
         x = self._in(df, in_c)
         joined = df.join(F.broadcast(vocab), x == F.col("__label"), "left")
         expr = index_expr(x, F.col("__vidx"), self.mask_token, self.num_oov_indices)
-        return joined.select(*df.columns, self._out(df, expr).alias(out_c))
+        return select_outputs(joined, {out_c: self._out(joined, expr)}).drop("__label", "__vidx")
 
     def _dict_lookup(self, df: DataFrame, in_c: str, out_c: str, level: int) -> DataFrame:
         """Big-vocab lookup for (nested) array columns: broadcast the
@@ -243,18 +266,15 @@ class StringIndexTransformer(ElementwiseTransform):
         same shape as the input, then resolve each element with a pure
         dict probe inside an Arrow-batched pandas UDF. No explode, no
         join, no per-plan literal — row-local and shuffle-free."""
-        from pyspark.sql.functions import pandas_udf
-
-        from kamae_spark.functions.arrays import elementwise
-
         import pandas as pd
+        from pyspark.sql.functions import pandas_udf
 
         offset = vocab_offset(self.mask_token, self.num_oov_indices)
         bc = df.sparkSession.sparkContext.broadcast(
             {lab: i for i, lab in enumerate(self.labels, offset)}
         )
         casted = self._in(df, in_c)
-        fb, _ = elementwise(
+        fb = elementwise(
             df, [in_c],
             lambda x: fallback_expr(x, self.mask_token, self.num_oov_indices),
             columns=[casted],
@@ -273,15 +293,14 @@ class StringIndexTransformer(ElementwiseTransform):
                 ]
             return [walk(x, f, lv - 1) for x, f in zip(xs, fs)]
 
-        def lookup(xs, fs):
+        def lookup(xs: pd.Series, fs: pd.Series) -> pd.Series:
             return pd.Series(
                 [walk(x, f, level) for x, f in zip(xs, fs)], dtype=object
             )
 
         ret = "array<" * level + "int" + ">" * level
-        udf = pandas_udf(lookup, ret, functionType=200)  # SQL_SCALAR_PANDAS_UDF
-        expr = udf(casted, fb)
-        return df.select("*", self._out(df, expr, level).alias(out_c))
+        expr = pandas_udf(lookup, ret)(casted, fb)
+        return select_outputs(df, {out_c: self._out(df, expr)})
 
 
 class _VocabEstimator(Estimator):
@@ -291,7 +310,7 @@ class _VocabEstimator(Estimator):
 
     fitted: type
 
-    def fit(self, df: DataFrame) -> ElementwiseTransform:
+    def fit(self, df: DataFrame) -> _VocabLookup:
         labels = collect_labels(
             self._fit_input(df), self.input_columns, self.string_order_type,
             self.mask_token, self.max_num_labels,
@@ -327,20 +346,6 @@ class SharedStringIndexTransformer(StringIndexTransformer):
                  num_oov_indices: int = 1):
         pass
 
-    def _col_pairs(self) -> list[tuple[str, str]]:
-        return list(zip(self.input_cols, self.output_cols))
-
-    def build(self, df: DataFrame):
-        if self._join_cols(df):
-            return None  # pipeline falls back to transform()
-        from kamae_spark.functions.arrays import elementwise
-
-        out = {}
-        for in_c, out_c in zip(self.input_cols, self.output_cols):
-            expr, _ = elementwise(df, [in_c], self._index_expr)
-            out[out_c] = expr
-        return out
-
 
 class SharedStringIndexEstimator(_VocabEstimator):
     """One vocab across N columns (reference shared_string_index.py:105);
@@ -358,11 +363,9 @@ class SharedStringIndexEstimator(_VocabEstimator):
             raise ValueError("input_cols and output_cols must align")
 
 
-class OneHotTransformer(ElementwiseTransform):
+class OneHotTransformer(_VocabLookup):
     """One-hot from the fitted vocab (reference one_hot_encode.py:129,
     user_defined_functions.py:105-139) as a pure expression."""
-
-    compatible_dtypes = ("string",)
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -373,8 +376,7 @@ class OneHotTransformer(ElementwiseTransform):
 
     def fn(self, x: Column) -> Column:
         offset = vocab_offset(self.mask_token, self.num_oov_indices)
-        idx = index_expr(x, literal_lookup(x, self.labels, offset),
-                         self.mask_token, self.num_oov_indices)
+        idx = self._index(x)
         if self.drop_unseen:
             n = len(self.labels)
             target = idx - offset
@@ -396,15 +398,6 @@ class SharedOneHotTransformer(OneHotTransformer):
                  labels: Sequence[str] = (), mask_token: str | None = None,
                  num_oov_indices: int = 1, drop_unseen: bool = False):
         pass
-
-    def build(self, df: DataFrame):
-        from kamae_spark.functions.arrays import elementwise
-
-        out = {}
-        for in_c, out_c in zip(self.input_cols, self.output_cols):
-            expr, _ = elementwise(df, [in_c], self.fn)
-            out[out_c] = expr
-        return out
 
 
 class SharedOneHotEncodeEstimator(_VocabEstimator):

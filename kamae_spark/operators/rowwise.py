@@ -33,8 +33,8 @@ class ElementwiseTransform(Transformer):
         self._validate(df)
         in_cols = self.input_columns
         casted = [self._in(df, c) for c in in_cols]
-        expr, level = elementwise(df, in_cols, self.fn, columns=casted)
-        return {self.output_col: self._out(df, expr, level)}
+        expr = elementwise(df, in_cols, self.fn, columns=casted)
+        return {self.output_col: self._out(df, expr)}
 
 
 def nary(cols: list[Column], op) -> Column:

@@ -125,7 +125,7 @@ class _AffineScale(ElementwiseTransform):
             expr = nested_transform(col, lambda arr: F.transform(
                 arr, lambda x, i: affine(x, F.element_at(ms, i + 1), F.element_at(ss, i + 1))
             ), level - 1)
-        return {self.output_col: self._out(df, expr, level)}
+        return {self.output_col: self._out(df, expr)}
 
 
 class StandardScaleTransformer(_AffineScale):

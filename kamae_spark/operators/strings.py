@@ -9,6 +9,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from kamae_spark.core.stage import keyword_params
+from kamae_spark.operators.arrays import ArrayTransform
 from kamae_spark.operators.rowwise import ElementwiseTransform
 
 
@@ -186,7 +187,7 @@ class StringToStringList(_StrIn):
         return F.concat(arr, pad)
 
 
-class StringListToString(ElementwiseTransform):
+class StringListToString(ArrayTransform):
     """Join an array of strings with a separator (reference
     string_list_to_string.py:120). Array op: applies at the innermost
     array axis, so it consumes one nesting level."""
@@ -198,20 +199,8 @@ class StringListToString(ElementwiseTransform):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
-    def build(self, df):
-        from kamae_spark.core.dtypes import column_info
-        from kamae_spark.functions.arrays import nested_transform
-
-        self._validate(df)
-        level, _ = column_info(df, self.input_col)
-        if level < 1:
-            raise TypeError(f"{self.input_col} must be an array column")
-        expr = nested_transform(
-            self._in(df, self.input_col),
-            lambda a: F.concat_ws(self.separator, a),
-            level - 1,
-        )
-        return {self.output_col: self._out(df, expr, level - 1)}
+    def afn(self, arr: Column) -> Column:
+        return F.concat_ws(self.separator, arr)
 
 
 class StringArrayConstant(ElementwiseTransform):
@@ -240,7 +229,7 @@ class StringArrayConstant(ElementwiseTransform):
     def build(self, df):
         if self.input_col:
             return super().build(df)
-        return {self.output_col: self._const()}
+        return {self.output_col: self._out(df, self._const())}
 
 
 class StringSequenceToEmbedding(_StrIn):

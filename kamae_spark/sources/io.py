@@ -116,21 +116,12 @@ class CheckpointedFeatureWriter:
             return set()  # removed after the existence check
         return {int(r["bucket"]) for r in rows}
 
-    def _append_lineage(self, spark: SparkSession, rows: list[dict]) -> None:
-        if not rows:
-            return
-        spark.createDataFrame(
-            [(r["job_id"], int(r["bucket"]), int(r["rows"]), float(r["wall_sec"]),
-              r["status"], float(r["finished_at"])) for r in rows],
-            "job_id string, bucket int, rows bigint, wall_sec double, status string, finished_at double",
-        ).coalesce(1).write.mode("append").parquet(self.lineage_path)
-
-    def _append_metrics(self, spark: SparkSession, m: dict) -> None:
-        spark.createDataFrame(
-            [(m["job_id"], int(m["buckets_written"]), int(m["rows"]),
-              float(m["wall_sec"]), float(m["rows_per_sec"]), float(m["finished_at"]))],
-            "job_id string, buckets_written int, rows bigint, wall_sec double, rows_per_sec double, finished_at double",
-        ).coalesce(1).write.mode("append").parquet(self.metrics_path)
+    @staticmethod
+    def _append(spark: SparkSession, path: str, schema: str, rows: list[tuple]) -> None:
+        """Append ``rows`` (typed by the DDL ``schema``) to the side
+        table at ``path`` as one file."""
+        if rows:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(path)
 
     # -- write / resume -----------------------------------------------------
     def run(self, df: DataFrame, job_id: str | None = None,
@@ -155,18 +146,11 @@ class CheckpointedFeatureWriter:
         t0 = time.time()
         bucketed = df.select("*", bucket_expr(self.key_cols, self.n_buckets).alias(BUCKET_COL))
         part = bucketed.where(F.col(BUCKET_COL).isin([int(b) for b in todo]))
-        # scope dynamic partition overwrite to THIS write: leaking it into
-        # the shared session would silently change overwrite semantics for
-        # every later partitioned write in the same session
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            part.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(self.data_path)
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # dynamic partition overwrite as an option of THIS write: the
+        # session conf, which every later write in the session reads,
+        # is never touched
+        (part.write.partitionBy(BUCKET_COL).mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic").parquet(self.data_path))
         wall = time.time() - t0
 
         # per-bucket row counts from the written files (metadata-cheap scan
@@ -178,19 +162,23 @@ class CheckpointedFeatureWriter:
             .groupBy(BUCKET_COL).agg(F.count("*").alias("n")).collect()
         }
         now = time.time()
-        self._append_lineage(spark, [
-            {"job_id": job_id, "bucket": b, "rows": counts.get(b, 0),
-             "wall_sec": wall / max(len(todo), 1), "status": "complete",
-             "finished_at": now}
-            for b in todo
-        ])
+        self._append(
+            spark, self.lineage_path,
+            "job_id string, bucket int, rows bigint, wall_sec double, status string, finished_at double",
+            [(job_id, b, counts.get(b, 0), wall / max(len(todo), 1), "complete", now)
+             for b in todo],
+        )
         total_rows = sum(counts.values())
         metrics = {
             "job_id": job_id, "buckets_written": len(todo), "rows": total_rows,
             "wall_sec": wall, "rows_per_sec": total_rows / wall if wall > 0 else 0.0,
             "finished_at": now,
         }
-        self._append_metrics(spark, metrics)
+        self._append(
+            spark, self.metrics_path,
+            "job_id string, buckets_written int, rows bigint, wall_sec double, rows_per_sec double, finished_at double",
+            [tuple(metrics.values())],
+        )
         return metrics
 
     def read(self, spark: SparkSession) -> DataFrame:

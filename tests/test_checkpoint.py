@@ -57,6 +57,26 @@ def test_kill_and_resume_byte_identical(spark, transcripts, tmp_path):
     assert m3.get("skipped") is True and m3["buckets_written"] == 0
 
 
+def test_run_scopes_dynamic_overwrite_to_its_write(spark, transcripts, tmp_path, monkeypatch):
+    """run() overwrites only the buckets it writes, as an option of its
+    own write: with ``RuntimeConfig.set`` raising, a resumed run still
+    keeps the buckets the first run wrote, and the session's overwrite
+    mode stays static."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    feat = _features(transcripts)
+
+    def refuse(self, key, value):
+        raise AssertionError(f"run() set the session conf {key}={value}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    w = CheckpointedFeatureWriter(str(tmp_path / "w"), n_buckets=4)
+    assert w.run(feat, job_id="a", fail_after_buckets=1)["buckets_written"] == 1
+    assert w.run(feat, job_id="b")["buckets_written"] == 3
+    assert w.read(spark).count() == feat.count()
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper() == "STATIC"
+
+
 def test_lineage_and_metrics_tables(spark, transcripts, tmp_path):
     feat = _features(transcripts)
     w = CheckpointedFeatureWriter(str(tmp_path / "lm"), n_buckets=8)

@@ -715,3 +715,22 @@ def test_exact_dedup_single_partition_input_parallelizes_identically(spark):
     # repartitions the single-partition scan before the md5 projection
     plan = exact_dedup(one, "text", "doc_id")._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan, plan
+
+
+def test_library_pandas_udfs_declare_type_hints(spark, monkeypatch):
+    """The library's own scalar pandas UDFs are declared by type hints,
+    so none of them raises pyspark's SPARK-28264 deprecation warning
+    (an explicit ``functionType``)."""
+    import warnings
+
+    from kamae_spark.operators import indexers
+
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 1)
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", message=".*SPARK-28264.*")
+        similarity.cosine_pairs_udf()
+        similarity._bucket_udfs(np.eye(2), 1)
+        dedup.hyperplane_bits_udf(dim=2)
+        df = spark.createDataFrame([(["a", "z"],)], "w array<string>")
+        t = indexers.StringIndexTransformer(input_col="w", output_col="i", labels=["a", "b"])
+        assert t.transform(df).first()["i"] == [1, 0]

@@ -84,3 +84,91 @@ def test_negative_zero_normalized_on_cast(spark):
     ]).transform(df2)
     vals = sorted(r["s"] for r in out.collect())
     assert vals == ["0.0", "1.5"], vals
+
+
+def _dtype_matrix():
+    """(stage, input DDL, input row, output column, output type, output
+    value) for every operator whose output nests deeper or shallower
+    than its input. A callable value maps the uncast output (hashes)."""
+    from kamae_spark.operators import arrays as A
+    from kamae_spark.operators import hashing as H
+    from kamae_spark.operators import indexers as I
+    from kamae_spark.operators import strings as S
+
+    dbl, nested = "x array<double>", "x array<array<double>>"
+    return [
+        (A.ArrayCrop(input_col="x", output_col="y", length=3, pad_value=0.0,
+                     output_dtype="float"),
+         dbl, ([1.5, 2.5],), "y", "array<float>", [1.5, 2.5, 0.0]),
+        (A.ArrayReduceMax(input_col="x", output_col="y", output_dtype="float"),
+         nested, ([[1.0, 3.0], [2.0]],), "y", "array<float>", [3.0, 2.0]),
+        (A.ArrayReduceMin(input_col="x", output_col="y", output_dtype="bigint"),
+         nested, ([[1.0, 3.0], [2.0]],), "y", "array<bigint>", [1, 2]),
+        (A.ArraySubtractMinimum(input_col="x", output_col="y", output_dtype="double"),
+         "x array<int>", ([3, 5],), "y", "array<double>", [0.0, 2.0]),
+        (A.OrdinalArrayEncode(input_col="x", output_col="y", output_dtype="string"),
+         "x array<string>", (["b", "a", "b"],), "y", "array<string>", ["0", "1", "0"]),
+        (A.PairwiseCosineSimilarity(input_cols=["q", "c"], output_col="y",
+                                    embedding_dim=2, output_dtype="float"),
+         "q array<double>, c array<double>", ([1.0, 0.0], [1.0, 0.0, 0.0, 1.0]),
+         "y", "array<float>", [1.0, 0.0]),
+        (H.BloomEncode(input_col="x", output_col="y", num_bins=10, num_hash_fns=2,
+                       output_dtype="bigint"),
+         "x string", ("a",), "y", "array<bigint>", lambda raw: raw),
+        (I.OneHotTransformer(input_col="x", output_col="y", labels=["a", "b"],
+                             output_dtype="float"),
+         "x string", ("b",), "y", "array<float>", [0.0, 0.0, 1.0]),
+        (S.StringSequenceToEmbedding(input_col="x", output_col="y", seq_len=2,
+                                     embedding_dim=2, output_dtype="double"),
+         "x string", ("1,2;3,4",), "y", "array<array<double>>", [[1.0, 2.0], [3.0, 4.0]]),
+        (H.MinHashIndex(input_col="x", output_col="y", num_permutations=2,
+                        output_dtype="string"),
+         "x array<string>", (["a", "b"],), "y", "array<string>",
+         lambda raw: [str(v) for v in raw]),
+        (S.StringToStringList(input_col="x", output_col="y", list_length=3,
+                              output_dtype="string"),
+         "x string", ("a,b",), "y", "array<string>", ["a", "b", ""]),
+        (S.StringArrayConstant(input_col="x", output_col="y", values=["a", "b"],
+                               output_dtype="string"),
+         "x string", ("z",), "y", "array<string>", ["a", "b"]),
+        # these already cast at the right depth before the depth was read
+        # from the output's type
+        (A.CosineSimilarity(input_cols=["a", "b"], output_col="y", output_dtype="float"),
+         "a array<array<double>>, b array<array<double>>",
+         ([[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.0], [1.0, 0.0]]), "y", "array<float>", [1.0, 0.0]),
+        (A.ArrayConcatenate(input_cols=["a", "b"], output_col="y", output_dtype="float"),
+         "a array<double>, b double", ([1.0, 2.0], 3.0), "y", "array<float>", [1.0, 2.0, 3.0]),
+        (A.ArraySplit(input_col="x", output_cols=["y", "z"], output_dtype="float"),
+         dbl, ([1.0, 2.0],), "y", "float", 1.0),
+        (S.StringListToString(input_col="x", output_col="y", output_dtype="string"),
+         "x array<array<string>>", ([["a", "b"], ["c"]],), "y", "array<string>", ["a,b", "c"]),
+        (H.HashIndex(input_col="x", output_col="y", num_bins=10, output_dtype="bigint"),
+         "x array<string>", (["a", "b"],), "y", "array<bigint>", lambda raw: raw),
+        (I.StringIndexTransformer(input_col="x", output_col="y", labels=["a", "b"],
+                                  output_dtype="bigint"),
+         "x array<string>", (["a", "z"],), "y", "array<bigint>", [1, 0]),
+    ]
+
+
+@pytest.mark.parametrize(
+    "case", _dtype_matrix(),
+    ids=lambda c: f"{type(c[0]).__name__}-{c[1].split(',')[0].split(' ', 1)[1]}",
+)
+def test_output_dtype_reaches_elements_whatever_the_nesting(spark, case):
+    """output_dtype casts the innermost elements of the output whether
+    the operator keeps, deepens or drops its input's nesting: the full
+    output type and the values come out as the cast of the uncast
+    output, never as an array cast to one string."""
+    from kamae_spark.core.stage import Stage
+
+    op, ddl, row, out_col, want_type, want = case
+    df = spark.createDataFrame([row], ddl)
+    out = PipelineModel([op]).transform(df)
+    assert out.schema[out_col].dataType.simpleString() == want_type
+    got = out.first()[out_col]
+    if callable(want):
+        spec = op.to_spec()
+        spec["params"]["output_dtype"] = None
+        raw = PipelineModel([Stage.from_spec(spec)]).transform(df).first()[out_col]
+        want = want(raw)
+    assert got == want

@@ -55,6 +55,30 @@ def test_pairwise_cosine_zero_vector_coalesces_to_zero(spark):
     assert out.first()["scores"] == pytest.approx([0.0, 0.0])
 
 
+def test_pairwise_cosine_nested_pairs_through_outer_levels(spark):
+    """Nested inputs pair up through their outer levels, as in
+    CosineSimilarity: [n][d] queries x [n][k*d] candidates -> [n][k]."""
+    df = spark.createDataFrame(
+        [([[1.0, 0.0], [0.0, 2.0]], [[1.0, 0.0, 0.0, 1.0], [0.0, 1.0, -3.0, 0.0]])],
+        "query array<array<double>>, candidates array<array<double>>",
+    )
+    out = PairwiseCosineSimilarity(
+        input_cols=["query", "candidates"], output_col="scores", embedding_dim=2
+    ).transform(df)
+    assert out.schema["scores"].dataType.simpleString() == "array<array<double>>"
+    assert out.first()["scores"] == [pytest.approx([1.0, 0.0]), pytest.approx([1.0, 0.0])]
+
+
+def test_pairwise_cosine_scalar_inputs_raise_naming_them(spark):
+    """An array op given no array input raises a TypeError that names
+    its inputs, and a non-float input fails the dtype check."""
+    df = spark.createDataFrame([(1.0, 2.0, [1, 2])], "q double, c double, i array<int>")
+    with pytest.raises(TypeError, match=r"\['q', 'c'\]"):
+        PairwiseCosineSimilarity(input_cols=["q", "c"], output_col="s").transform(df)
+    with pytest.raises(TypeError, match="element dtype 'int'"):
+        PairwiseCosineSimilarity(input_cols=["i", "i"], output_col="s").transform(df)
+
+
 # -- StringArrayConstant -----------------------------------------------------
 
 

@@ -508,3 +508,48 @@ def test_minmax_and_impute_fit_see_input_dtype_cast(spark):
     ss = StandardScaleEstimator(input_col="v", output_col="o",
                                 input_dtype="float").fit(df)
     assert ss.mean == 16777216.0
+
+
+@pytest.mark.parametrize("col", ["s", "arr"])
+def test_big_vocab_paths_replace_in_place(spark, monkeypatch, col):
+    """An output named like its input replaces the column in place on
+    the big-vocab join (scalar) and dict (array) paths too, as on the
+    literal path: same columns, same order, indexed values."""
+    from kamae_spark.operators.indexers import SharedStringIndexTransformer
+
+    df = spark.createDataFrame([("a", 1, ["b", "z"])], "s string, i int, arr array<string>")
+    monkeypatch.setattr(indexers, "VOCAB_JOIN_THRESHOLD", 1)
+    want = {"s": 1, "arr": [2, 0]}[col]
+    for t in (
+        StringIndexTransformer(input_col=col, output_col=col, labels=["a", "b"]),
+        SharedStringIndexTransformer(input_cols=[col], output_cols=[col], labels=["a", "b"]),
+    ):
+        out = t.transform(df)
+        assert out.columns == ["s", "i", "arr"]
+        assert out.first()[col] == want
+
+
+def test_shared_vocab_transformers_check_input_dtype(spark):
+    """The shared vocab transformers reject a non-string input column
+    with the dtype check of the single-column ones."""
+    from kamae_spark.operators.indexers import (
+        SharedOneHotTransformer, SharedStringIndexTransformer,
+    )
+
+    df = spark.createDataFrame([("a", 1)], "s string, n int")
+    for cls in (SharedStringIndexTransformer, SharedOneHotTransformer):
+        with pytest.raises(TypeError, match="element dtype 'int'"):
+            cls(input_cols=["s", "n"], output_cols=["o1", "o2"], labels=["a"]).transform(df)
+
+
+def test_shared_vocab_transformers_need_aligned_columns(spark):
+    """More input than output columns raises instead of silently
+    dropping the extra input."""
+    from kamae_spark.operators.indexers import (
+        SharedOneHotTransformer, SharedStringIndexTransformer,
+    )
+
+    df = spark.createDataFrame([("a", "b")], "s string, t string")
+    for cls in (SharedStringIndexTransformer, SharedOneHotTransformer):
+        with pytest.raises(ValueError, match="must align"):
+            cls(input_cols=["s", "t"], output_cols=["o1"], labels=["a"]).transform(df)
