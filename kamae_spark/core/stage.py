@@ -156,12 +156,14 @@ class Transformer(Stage):
         its nesting: the depth is read from the type of ``expr`` itself
         (one ``df.select(expr).schema``, paid only when ``output_dtype``
         is set), so an operator whose output nests deeper or shallower
-        than its input needs nothing of its own. Without
-        ``output_dtype`` the expression is returned untouched."""
+        than its input needs nothing of its own. The element type read
+        there is also the cast's source, so a float ``-0.0`` cast to a
+        non-float type is normalized first (``"0.0"``, not ``"-0.0"``).
+        Without ``output_dtype`` the expression is returned untouched."""
         cast_to = getattr(self, "output_dtype", None)
         if cast_to:
-            level, _ = dt.element_type(df.select(expr).schema[0].dataType)
-            expr = dt.nested_cast(expr, level, cast_to)
+            level, elem = dt.element_type(df.select(expr).schema[0].dataType)
+            expr = dt.nested_cast(expr, level, cast_to, src=dt.dtype_name(elem))
         return expr
 
 
@@ -197,10 +199,19 @@ def select_outputs(df: DataFrame, outputs: dict[str, Column]) -> DataFrame:
 class Estimator(Stage):
     """A stage whose ``fit`` runs Spark jobs and returns a fitted Transformer.
 
+    ``fit`` is the one fit path: it samples the input (``_fit_input``),
+    runs the subclass's ``_fit`` on it, and hands the result to the
+    ``fitted`` transformer class. A subclass states only what the data
+    decides: ``_fit(src) -> {param: value}``. Every other param the
+    ``fitted`` constructor takes is copied from this estimator by name;
+    on a shared name the fitted value wins.
+
     ``sample_fraction`` optionally subsamples before fitting (reference:
     estimators/base.py:61-64, params/base.py:135-168) — the fit-cost lever
     at 100 TB scale: statistics like mean/stddev/vocab converge on samples.
     """
+
+    fitted: type
 
     def _fit_input(self, df: DataFrame) -> DataFrame:
         frac = getattr(self, "sample_fraction", None)
@@ -208,8 +219,13 @@ class Estimator(Stage):
             return df.sample(fraction=frac, seed=getattr(self, "seed", 42))
         return df
 
-    def fit(self, df: DataFrame) -> Transformer:
+    def _fit(self, src: DataFrame) -> dict[str, Any]:  # pragma: no cover - abstract
         raise NotImplementedError
+
+    def fit(self, df: DataFrame) -> Transformer:
+        state = self._fit(self._fit_input(df))
+        takes = inspect.signature(self.fitted).parameters
+        return self.fitted(**{k: v for k, v in self.params().items() if k in takes} | state)
 
 
 def keyword_params(fn):

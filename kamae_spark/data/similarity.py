@@ -33,6 +33,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from kamae_spark.core.dtypes import empty_frame
+from kamae_spark.functions.arrays import dot, norm
 
 # NOTE: the scan deliberately does NOT apply
 # kamae_spark.data.partitioning.ensure_scan_parallelism to the corpus:
@@ -86,20 +87,8 @@ def cosine_pairs_udf():
     return pandas_udf(cos, "double")
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x * y).cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double")))
-
-
 def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def _scorable(df: DataFrame, vec_col: str) -> DataFrame:

@@ -62,7 +62,7 @@ def elementwise(
     """
     cols = list(columns) if columns is not None else [F.col(c) for c in in_cols]
     levels = [column_info(df, c)[0] for c in in_cols]
-    max_level = max(levels)
+    max_level = max(levels, default=0)
     if max_level == 0:
         return fn(*cols)
     array_pos = [i for i, lv in enumerate(levels) if lv == max_level]
@@ -85,3 +85,20 @@ def flatten_nested(col: Column, level: int) -> Column:
     for _ in range(max(level - 1, 0)):
         col = F.flatten(col)
     return col
+
+
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two numeric arrays as a double: the element
+    products folded left to right (``data.similarity._fold_scorer``
+    mirrors this order to match it bit for bit). Null if either array
+    or any element is null."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x * y).cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def norm(a: Column) -> Column:
+    """Euclidean norm of a numeric array, squares folded left to right."""
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double")))

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from kamae_spark.core.dtypes import NUMERIC, column_info
 from kamae_spark.core.stage import Transformer, keyword_params
-from kamae_spark.functions.arrays import nested_transform, zipwise
+from kamae_spark.functions.arrays import dot, nested_transform, norm, zipwise
 
 
 class ArrayTransform(Transformer):
@@ -174,17 +174,6 @@ class ArraySubtractMinimum(ArrayTransform):
         )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    z = F.arrays_zip(a.alias("q"), b.alias("c"))
-    return F.aggregate(
-        z, F.lit(0.0), lambda acc, p: acc + (p["q"] * p["c"]).cast("double")
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + (x * x).cast("double")))
-
-
 class CosineSimilarity(ArrayTransform):
     """Cosine similarity of two vector columns, reducing the INNERMOST
     axis — nested inputs broadcast through the outer levels, so shape
@@ -201,7 +190,7 @@ class CosineSimilarity(ArrayTransform):
 
     def afn(self, x: Column, y: Column) -> Column:
         # try_divide: a zero-norm vector yields null, not an ANSI error
-        return F.try_divide(_dot(x, y), _norm(x) * _norm(y))
+        return F.try_divide(dot(x, y), norm(x) * norm(y))
 
 
 class PairwiseCosineSimilarity(ArrayTransform):
@@ -222,7 +211,7 @@ class PairwiseCosineSimilarity(ArrayTransform):
     def afn(self, query: Column, flat: Column) -> Column:
         dim = self.embedding_dim
         n = (F.size(flat) / F.lit(dim)).cast("int")
-        qn = _norm(query)
+        qn = norm(query)
 
         def sim(i: Column) -> Column:
             cand = F.slice(flat, i * dim + 1, dim)
@@ -230,9 +219,11 @@ class PairwiseCosineSimilarity(ArrayTransform):
             # not an ANSI DIVIDE_BY_ZERO job failure (coalesce cannot
             # catch an ANSI error; reference pairwise_cosine_similarity.py
             # line 85 coalesces under non-ANSI semantics)
-            return F.coalesce(F.try_divide(_dot(query, cand), qn * _norm(cand)), F.lit(0.0))
+            return F.coalesce(F.try_divide(dot(query, cand), qn * norm(cand)), F.lit(0.0))
 
-        return F.transform(F.sequence(F.lit(0), n - 1), sim)
+        # F.sequence(0, -1) counts down: no candidates give no indices
+        idx = F.when(n > 0, F.sequence(F.lit(0), n - 1)).otherwise(F.array())
+        return F.transform(idx, sim)
 
 
 class OrdinalArrayEncode(ArrayTransform):

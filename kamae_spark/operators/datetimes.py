@@ -42,17 +42,8 @@ class _Now:
             return F.to_timestamp(F.lit(self.now))
         return F.to_utc_timestamp(F.localtimestamp(), F.current_timezone())
 
-    @property
-    def input_columns(self):
-        return [self.input_col] if getattr(self, "input_col", None) else []
-
-    def fn(self, x: Column) -> Column:
+    def fn(self, *_: Column) -> Column:
         return self._value()
-
-    def build(self, df):
-        if getattr(self, "input_col", None):
-            return ElementwiseTransform.build(self, df)
-        return {self.output_col: self._value()}
 
 
 class CurrentDate(_Now, ElementwiseTransform):

@@ -29,7 +29,6 @@ Index layout (reference user_defined_functions.py:46-102):
 # no ``from __future__ import annotations``: the big-vocab pandas UDF is
 # declared by type hints that name a function-local ``pd``, which
 # pyspark could not resolve from a postponed (string) annotation
-import inspect
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -304,19 +303,13 @@ class StringIndexTransformer(_VocabLookup):
 
 
 class _VocabEstimator(Estimator):
-    """Fit one vocab over every input column, then hand the labels, plus
-    each of this estimator's params that the ``fitted`` transformer's
-    constructor takes, to that transformer."""
+    """Fit one vocab over every input column: the fitted ``labels``.
+    ``Estimator.fit`` hands them, with the params the ``fitted``
+    transformer takes, to that transformer."""
 
-    fitted: type
-
-    def fit(self, df: DataFrame) -> _VocabLookup:
-        labels = collect_labels(
-            self._fit_input(df), self.input_columns, self.string_order_type,
-            self.mask_token, self.max_num_labels,
-        )
-        takes = inspect.signature(self.fitted).parameters
-        return self.fitted(labels=labels, **{k: v for k, v in self.params().items() if k in takes})
+    def _fit(self, src: DataFrame) -> dict:
+        return {"labels": collect_labels(src, self.input_columns, self.string_order_type,
+                                         self.mask_token, self.max_num_labels)}
 
 
 class StringIndexEstimator(_VocabEstimator):

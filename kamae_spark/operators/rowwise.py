@@ -20,7 +20,8 @@ from kamae_spark.functions.arrays import elementwise
 class ElementwiseTransform(Transformer):
     """Base: subclass implements ``fn(*scalar_cols) -> Column``.
 
-    Inputs come from ``input_col`` (single) or ``input_cols`` (multi).
+    Inputs come from ``input_col`` (single) or ``input_cols`` (multi);
+    a stage with neither (a constant) has ``fn()`` called once.
     A subclass whose op accepts "N columns OR 1 column + constant"
     (reference params/utils.py:79-122) appends the constant inside its
     ``fn`` via ``self.<constant_param>``.

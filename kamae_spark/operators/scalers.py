@@ -8,8 +8,11 @@ or per-index lists, the pass-through value (``mask_value``, or 0.0
 under ``skip_zeros``) and an optional ``log10`` on the way in. List
 stats on a scalar column raise ``TypeError``.
 
-Fits are single-pass ``df.agg`` jobs (reference estimators/standard_scale.py:
-100-163, min_max_scale.py:102, impute.py:110-162), and ``_fit_pairs`` is
+Each estimator's ``_fit`` returns only its fitted statistics; the
+shared ``Estimator.fit`` samples the input and builds the ``fitted``
+transformer. Fits are single-pass ``df.agg`` jobs (reference
+estimators/standard_scale.py: 100-163, min_max_scale.py:102,
+impute.py:110-162), and ``_fit_pairs`` (through ``_fit_stats``) is
 the one fit the three affine estimators share: two statistics over the
 double-cast value, on a scalar column directly, and on an array column
 per innermost index through ``element_at`` projections — a map-side
@@ -88,6 +91,14 @@ def _fit_pairs(
     return [a for a, _ in pairs], [b for _, b in pairs]
 
 
+def _fit_stats(est: Estimator, src: DataFrame, names: tuple[str, str], post=None) -> dict:
+    """``_fit_pairs`` of ``est._stats`` over ``est``'s (``input_dtype``
+    cast) input column, as the two fitted params ``names``."""
+    level, _ = column_info(src, est.input_col)
+    pair = _fit_pairs(src, est._in(src, est.input_col), level, est._stats, post)
+    return dict(zip(names, pair))
+
+
 class _AffineScale(ElementwiseTransform):
     """``(pre(x) - shift) / scale``, per element for array inputs; x equal
     to the ``_keep()`` value passes through unscaled. Scalar stats apply
@@ -148,6 +159,8 @@ class StandardScaleEstimator(Estimator):
     """Fit per-element mean / population stddev, mask-aware (reference
     estimators/standard_scale.py:100-163; stddev_pop per :136-144)."""
 
+    fitted = StandardScaleTransformer
+
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
                  mask_value: float | None = None,
@@ -159,15 +172,8 @@ class StandardScaleEstimator(Estimator):
         v = _masked(v, self.mask_value)
         return F.mean(v), F.stddev_pop(v)
 
-    def fit(self, df: DataFrame) -> StandardScaleTransformer:
-        src = self._fit_input(df)
-        level, _ = column_info(df, self.input_col)
-        mean, std = _fit_pairs(src, self._in(src, self.input_col), level, self._stats)
-        return StandardScaleTransformer(
-            input_col=self.input_col, output_col=self.output_col,
-            mean=mean, stddev=std, mask_value=self.mask_value,
-            input_dtype=self.input_dtype, output_dtype=self.output_dtype,
-        )
+    def _fit(self, src: DataFrame) -> dict:
+        return _fit_stats(self, src, ("mean", "stddev"))
 
 
 class SingleFeatureArrayStandardScaleEstimator(Estimator):
@@ -179,15 +185,16 @@ class SingleFeatureArrayStandardScaleEstimator(Estimator):
     tests: with_nulls mean 5.625 over the non-null residue, maskValue=-1
     mean 4.3636 over the non-pad residue)."""
 
+    fitted = StandardScaleTransformer
+
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
                  mask_value: float | None = None,
                  sample_fraction: float | None = None, seed: int = 42):
         pass
 
-    def fit(self, df: DataFrame) -> StandardScaleTransformer:
-        src = self._fit_input(df)
-        level, _ = column_info(df, self.input_col)
+    def _fit(self, src: DataFrame) -> dict:
+        level, _ = column_info(src, self.input_col)
         col = F.col(self.input_col)
         flat = col if level <= 1 else flatten_nested(col, level)
         if self.mask_value is not None:
@@ -206,11 +213,7 @@ class SingleFeatureArrayStandardScaleEstimator(Estimator):
         else:
             mean = _f(row["s1"]) / n
             var = _f(row["s2"]) / n - mean * mean
-        return StandardScaleTransformer(
-            input_col=self.input_col, output_col=self.output_col,
-            mean=mean, stddev=max(var, 0.0) ** 0.5,
-            mask_value=self.mask_value,
-        )
+        return {"mean": mean, "stddev": max(var, 0.0) ** 0.5}
 
 
 class MinMaxScaleTransformer(_AffineScale):
@@ -235,6 +238,8 @@ class MinMaxScaleTransformer(_AffineScale):
 class MinMaxScaleEstimator(Estimator):
     """Fit per-element min/max (reference estimators/min_max_scale.py:102)."""
 
+    fitted = MinMaxScaleTransformer
+
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
                  mask_value: float | None = None,
@@ -246,15 +251,30 @@ class MinMaxScaleEstimator(Estimator):
         v = _masked(v, self.mask_value)
         return F.min(v), F.max(v)
 
-    def fit(self, df: DataFrame) -> MinMaxScaleTransformer:
-        src = self._fit_input(df)
-        level, _ = column_info(df, self.input_col)
-        lo, hi = _fit_pairs(src, self._in(src, self.input_col), level, self._stats)
-        return MinMaxScaleTransformer(
-            input_col=self.input_col, output_col=self.output_col,
-            min=lo, max=hi, mask_value=self.mask_value,
-            input_dtype=self.input_dtype, output_dtype=self.output_dtype,
-        )
+    def _fit(self, src: DataFrame) -> dict:
+        return _fit_stats(self, src, ("min", "max"))
+
+
+class ConditionalStandardScaleTransformer(_AffineScale):
+    """Scalar or per-element (list mean/stddev) conditional scaling:
+    (log10?(x) - mean) / stddev, zeros passing through under
+    ``skip_zeros``."""
+
+    @keyword_params
+    def __init__(self, input_col: str, output_col: str,
+                 mean: Sequence[float] | float = 0.0,
+                 stddev: Sequence[float] | float = 1.0,
+                 scaling: str = "standard", skip_zeros: bool = False):
+        pass
+
+    def _affine(self):
+        return self.mean, self.stddev
+
+    def _keep(self) -> float | None:
+        return 0.0 if self.skip_zeros else None
+
+    def _pre(self, x: Column) -> Column:
+        return F.log10(x) if self.scaling == "log10" else x
 
 
 class ConditionalStandardScaleEstimator(Estimator):
@@ -271,7 +291,12 @@ class ConditionalStandardScaleEstimator(Estimator):
     mean = 1 - f/n and stddev = sqrt((f(1-f/n)^2 + (n-f)(f/n)^2)/(n-1));
     requires ``relevance_col`` and a scalar or flat array input (the
     counts need the row-aligned relevance, which a nested explode loses;
-    the reference only exercises level<=1)."""
+    the reference only exercises level<=1). ``relevance_col`` is a
+    declared input, so ``Pipeline.fit`` computes it first when another
+    stage produces it. ``filter_expr`` is SQL text the pipeline does not
+    read, so it may name only columns of the fit's input frame."""
+
+    fitted = ConditionalStandardScaleTransformer
 
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
@@ -282,6 +307,10 @@ class ConditionalStandardScaleEstimator(Estimator):
             raise ValueError("scaling must be standard|log10|binary")
         if scaling == "binary" and relevance_col is None:
             raise ValueError("relevance_col must be set for binary scaling")
+
+    @property
+    def input_columns(self) -> list[str]:
+        return super().input_columns + ([self.relevance_col] if self.relevance_col else [])
 
     @staticmethod
     def _binary_moments(n: float, f: float) -> tuple[float, float]:
@@ -307,46 +336,15 @@ class ConditionalStandardScaleEstimator(Estimator):
             v = F.log10(v)
         return F.mean(v), F.stddev_pop(v)
 
-    def fit(self, df: DataFrame) -> "ConditionalStandardScaleTransformer":
-        src = self._fit_input(df)
+    def _fit(self, src: DataFrame) -> dict:
         if self.filter_expr:
             src = src.where(self.filter_expr)
-        level, _ = column_info(df, self.input_col)
-        binary = self.scaling == "binary"
-        if binary and level >= 2:
+        if self.scaling != "binary":
+            return _fit_stats(self, src, ("mean", "stddev"))
+        if column_info(src, self.input_col)[0] >= 2:
             raise ValueError("binary scaling needs a scalar or flat array input column")
-        mean, std = _fit_pairs(
-            src, F.col(self.input_col), level, self._stats,
-            self._binary_moments if binary else None,
-        )
-        return ConditionalStandardScaleTransformer(
-            input_col=self.input_col, output_col=self.output_col,
-            mean=mean, stddev=std,
-            scaling="standard" if binary else self.scaling,
-            skip_zeros=self.skip_zeros,
-        )
-
-
-class ConditionalStandardScaleTransformer(_AffineScale):
-    """Scalar or per-element (list mean/stddev) conditional scaling:
-    (log10?(x) - mean) / stddev, zeros passing through under
-    ``skip_zeros``."""
-
-    @keyword_params
-    def __init__(self, input_col: str, output_col: str,
-                 mean: Sequence[float] | float = 0.0,
-                 stddev: Sequence[float] | float = 1.0,
-                 scaling: str = "standard", skip_zeros: bool = False):
-        pass
-
-    def _affine(self):
-        return self.mean, self.stddev
-
-    def _keep(self) -> float | None:
-        return 0.0 if self.skip_zeros else None
-
-    def _pre(self, x: Column) -> Column:
-        return F.log10(x) if self.scaling == "log10" else x
+        stats = _fit_stats(self, src, ("mean", "stddev"), self._binary_moments)
+        return stats | {"scaling": "standard"}
 
 
 class ImputeTransformer(ElementwiseTransform):
@@ -375,6 +373,8 @@ class ImputeEstimator(Estimator):
     """Fit mean or (exact) median ignoring mask/null (reference
     estimators/impute.py:110-162; median via F.median)."""
 
+    fitted = ImputeTransformer
+
     @keyword_params
     def __init__(self, input_col: str, output_col: str,
                  strategy: str = "mean", mask_value: float | None = None,
@@ -383,9 +383,8 @@ class ImputeEstimator(Estimator):
         if strategy not in ("mean", "median"):
             raise ValueError("strategy must be mean|median")
 
-    def fit(self, df: DataFrame) -> ImputeTransformer:
-        src = self._fit_input(df)
-        level, _ = column_info(df, self.input_col)
+    def _fit(self, src: DataFrame) -> dict:
+        level, _ = column_info(src, self.input_col)
         c = self._in(src, self.input_col)
         if level > 0:
             # one scalar statistic pooled over EVERY element of a
@@ -395,9 +394,4 @@ class ImputeEstimator(Estimator):
             c = F.col("__v")
         v = _masked(c.cast("double"), self.mask_value)
         agg = F.mean(v) if self.strategy == "mean" else F.median(v)
-        stat = _f(src.agg(agg.alias("st")).first()["st"])
-        return ImputeTransformer(
-            input_col=self.input_col, output_col=self.output_col,
-            statistic=stat, mask_value=self.mask_value,
-            input_dtype=self.input_dtype, output_dtype=self.output_dtype,
-        )
+        return {"statistic": _f(src.agg(agg.alias("st")).first()["st"])}

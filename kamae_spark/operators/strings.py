@@ -216,20 +216,8 @@ class StringArrayConstant(ElementwiseTransform):
                  input_dtype: str | None = None, output_dtype: str | None = None):
         pass
 
-    @property
-    def input_columns(self):
-        return [self.input_col] if self.input_col else []
-
-    def _const(self) -> Column:
+    def fn(self, *_: Column) -> Column:
         return F.array(*[F.lit(v) for v in self.values])
-
-    def fn(self, x: Column) -> Column:
-        return self._const()
-
-    def build(self, df):
-        if self.input_col:
-            return super().build(df)
-        return {self.output_col: self._out(df, self._const())}
 
 
 class StringSequenceToEmbedding(_StrIn):

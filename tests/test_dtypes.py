@@ -86,6 +86,23 @@ def test_negative_zero_normalized_on_cast(spark):
     assert vals == ["0.0", "1.5"], vals
 
 
+def test_output_cast_to_string_normalizes_negative_zero(spark):
+    """An ``output_dtype`` cast reads its source element type from the
+    output, so a float -0.0 cast to a string reads "0.0" at any
+    nesting, like an ``input_dtype`` cast does."""
+    from kamae_spark.operators.math import Multiply
+
+    df = spark.createDataFrame(
+        [(0.0, -1.0, [[0.0, 2.0]])], "x double, m double, arr array<array<double>>"
+    )
+    got = PipelineModel([
+        Multiply(input_cols=["x", "m"], output_col="y", output_dtype="string"),
+        Multiply(input_cols=["arr", "m"], output_col="arr_y", output_dtype="string"),
+    ]).transform(df).first()
+    assert got["y"] == "0.0"
+    assert got["arr_y"] == [["0.0", "-2.0"]]
+
+
 def _dtype_matrix():
     """(stage, input DDL, input row, output column, output type, output
     value) for every operator whose output nests deeper or shallower

@@ -69,6 +69,21 @@ def test_pairwise_cosine_nested_pairs_through_outer_levels(spark):
     assert out.first()["scores"] == [pytest.approx([1.0, 0.0]), pytest.approx([1.0, 0.0])]
 
 
+def test_pairwise_cosine_empty_candidates_give_no_scores(spark):
+    """One similarity per candidate: an empty candidate array gives an
+    empty score array (not one score per index of a count-down
+    sequence), next to a row that has candidates."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0], []), (1, [1.0, 0.0], [1.0, 0.0])],
+        "id int, query array<double>, candidates array<double>",
+    )
+    out = PairwiseCosineSimilarity(
+        input_cols=["query", "candidates"], output_col="scores", embedding_dim=2
+    ).transform(df)
+    got = {r["id"]: r["scores"] for r in out.collect()}
+    assert got == {0: [], 1: [pytest.approx(1.0)]}
+
+
 def test_pairwise_cosine_scalar_inputs_raise_naming_them(spark):
     """An array op given no array input raises a TypeError that names
     its inputs, and a non-float input fails the dtype check."""

@@ -260,6 +260,29 @@ def test_conditional_binary_scaling(spark):
     assert abs(model.stddev - exp_std) < 1e-9
 
 
+def test_conditional_binary_relevance_produced_in_pipeline(spark):
+    """``relevance_col`` is a declared input of the binary scaler, so
+    ``Pipeline.fit`` orders its producer first and keeps it in the
+    fit's output-pruned input, in either declaration order."""
+    from kamae_spark.operators.math import Sum
+
+    rows = [(1.0, 1.0), (1.0, 2.0), (1.0, 0.5), (1.0, 0.0), (0.0, 5.0)]
+    df = spark.createDataFrame(rows, "x double, r0 double")
+    rel = Sum(input_cols=["r0"], constant=0.0, output_col="rel")
+    est = ConditionalStandardScaleEstimator(
+        input_col="x", output_col="xs", scaling="binary", relevance_col="rel"
+    )
+    n, f = 4.0, 3.0
+    p = f / n
+    exp_std = ((f * (1 - p) ** 2 + (n - f) * p**2) / (n - 1)) ** 0.5
+    for stages in ([rel, est], [est, rel]):
+        fitted = Pipeline(stages).fit(df).stages[-1]
+        assert isinstance(fitted, ConditionalStandardScaleTransformer)
+        assert abs(fitted.mean - (1 - p)) < 1e-9
+        assert abs(fitted.stddev - exp_std) < 1e-9
+    assert est.input_columns == ["x", "rel"]
+
+
 def test_conditional_scale_array_per_element(spark):
     """Reference parity: conditional scaling over an ARRAY input fits
     per-element moments (conditional_standard_scale.py:398-540), for
