@@ -785,18 +785,18 @@ def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY 1.0 (any pair within hamming 10 shares a band), and the
     exact-hamming verify makes precision 1.0, so the emitted pair set
     equals DuckDB's exhaustive popcount(xor) join. The text SimHash
-    signature itself (FNV-based Arrow UDF) is engine-specific; it is
-    executed here as a smoke gate and value-tested in unit tests
-    (tests/test_data_ops.py, tests/test_property.py)."""
-    from kamae_spark.data.dedup import _simhash64, simhash_pairs_from_sigs
+    signature itself (bit-majority of xxhash64 token hashes) is
+    engine-specific; the SimHash stage is executed here as a smoke gate
+    and value-tested in unit tests (tests/test_data_ops.py)."""
+    from kamae_spark.data.dedup import SimHash, simhash_pairs_from_sigs
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # smoke-run the real text-signature UDF (values engine-specific)
+    # smoke-run the real text-signature stage (values engine-specific)
     toks = d.select(F.split(F.lower("text"), r"\s+").alias("toks")).limit(64)
-    n_sigs = toks.select(_simhash64(F.col("toks")).alias("s")).where(
+    n_sigs = SimHash(input_col="toks", output_col="s").transform(toks).where(
         F.col("s").isNotNull()).count()
     if n_sigs == 0:
-        raise RuntimeError("SimHash text UDF produced no signatures")
+        raise RuntimeError("SimHash stage produced no signatures")
 
     # base bounded to < 8192 so base<<50 fits in 63 bits on BOTH engines
     # (DuckDB raises Out of Range on signed shift overflow where Spark

@@ -226,12 +226,10 @@ def main() -> None:
         t.unpersist()
 
     # -- data-ops over synthetic corpora (scaling-run participants) --------
-    # KAMAE_BENCH_DATA_OPS=N is the legacy combined knob (minhash over N
-    # docs + IVF over 2N vecs); the per-op knobs below override it so the
-    # scaling protocol can run each op alone at its amortizing scale
-    n_data = int(os.environ.get("KAMAE_BENCH_DATA_OPS", "0"))
-    n_mh = int(os.environ.get("KAMAE_BENCH_MINHASH_DOCS", str(n_data)))
-    n_vecs = int(os.environ.get("KAMAE_BENCH_IVF_VECS", str(n_data * 2)))
+    # one knob per op, so the scaling protocol can run each op alone at
+    # its amortizing scale
+    n_mh = int(os.environ.get("KAMAE_BENCH_MINHASH_DOCS", "0"))
+    n_vecs = int(os.environ.get("KAMAE_BENCH_IVF_VECS", "0"))
     if n_mh:
         from kamae_spark.data.dedup import minhash_lsh_pairs
         from kamae_spark.sources.synth import documents_table

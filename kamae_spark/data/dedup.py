@@ -11,11 +11,13 @@ Five strategies, each with an explicit scale story:
   bucket self-join -> jaccard verification. The classic sub-quadratic
   near-dup path: only signatures shuffle, candidate pairs are bounded
   by band-bucket collisions.
-- simhash: 64-bit signature, row-local in the ``SimHash`` stage via an
-  Arrow-vectorized pandas UDF (numpy bit-unpack — the one op where
-  per-bit Column exprs would be slower than the Arrow hop), and as a JVM
-  aggregate over exploded tokens in ``simhash_neardup_pairs``;
-  near-dups = hamming <= k within band buckets.
+- simhash: 64-bit bit-majority signature of xxhash64 token hashes, in
+  two shapes with equal values: row-local in the ``SimHash`` stage (the
+  hashes are Column exprs; only the 64-bit bit-majority crosses into an
+  Arrow-vectorized pandas UDF, the one op where per-bit Column exprs
+  would be slower than the Arrow hop), and as a JVM aggregate over
+  exploded tokens in ``simhash_neardup_pairs``; near-dups = hamming <= k
+  within band buckets.
 - embedding_neardup_pairs: cosine >= tau among embedding vectors,
   bucketed by random-hyperplane LSH sign bits (deterministic seed).
 
@@ -37,7 +39,7 @@ from pyspark.sql.functions import pandas_udf
 from kamae_spark.core.stage import keyword_params
 from kamae_spark.data.partitioning import ensure_scan_parallelism
 from kamae_spark.data.text import Fingerprint
-from kamae_spark.operators.rowwise import ElementwiseTransform
+from kamae_spark.operators.arrays import ArrayTransform
 
 # Buckets holding more rows than this are split into chunk-pair tasks of
 # <= ~2x this many rows each (see _bucket_pairs).
@@ -117,6 +119,12 @@ def shingles(col: Column, n: int, tokenizer: str) -> Column:
     raise ValueError("tokenizer must be char|word")
 
 
+def jaccard(a: Column, b: Column) -> Column:
+    """Exact jaccard of two distinct-element arrays (pure expr)."""
+    return (F.size(F.array_intersect(a, b)).cast("double")
+            / F.size(F.array_union(a, b)).cast("double"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str,
     block_cols: Sequence[str] = (), n: int = 3, threshold: float = 0.8,
@@ -144,9 +152,7 @@ def ngram_jaccard_pairs(
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
     if length_bucket:
         cond = cond & (F.col("a.__lb") == F.col("b.__lb"))
-    inter = F.size(F.array_intersect(F.col("a.__grams"), F.col("b.__grams")))
-    union = F.size(F.array_union(F.col("a.__grams"), F.col("b.__grams")))
-    jac = inter.cast("double") / union.cast("double")
+    jac = jaccard(F.col("a.__grams"), F.col("b.__grams"))
     return (
         a.join(b, cond)
         .select(
@@ -176,6 +182,19 @@ def _signatures_from_grams(gsel: DataFrame, num_perm: int) -> DataFrame:
     aggs = [F.min(F.xxhash64(F.col("__h"), F.lit(p))).alias(f"_p{p}") for p in range(num_perm)]
     return g.groupBy("__id").agg(*aggs).select(
         "__id", F.array(*[F.col(f"_p{p}") for p in range(num_perm)]).alias("__sig")
+    )
+
+
+def _all_pairs(items: Column) -> Column:
+    """Every (a, b) struct pair of an array's elements, a before b."""
+    return F.flatten(
+        F.transform(
+            items,
+            lambda a, i: F.transform(
+                F.slice(items, i + 2, F.size(items)),
+                lambda b: F.struct(a.alias("a"), b.alias("b")),
+            ),
+        )
     )
 
 
@@ -211,15 +230,7 @@ def _bucket_pairs(
             .agg(F.array_sort(F.collect_list(item)).alias("items"))
             .where(F.size("items") > 1)
         )
-        pair_structs = F.flatten(
-            F.transform(
-                F.col("items"),
-                lambda a, i: F.transform(
-                    F.slice(F.col("items"), i + 2, F.size(F.col("items"))),
-                    lambda b: F.struct(a.alias("a"), b.alias("b")),
-                ),
-            )
-        )
+        pair_structs = _all_pairs(F.col("items"))
     else:
         w = Window.partitionBy("band", "bucket")
         nchunks = F.greatest(
@@ -241,15 +252,7 @@ def _bucket_pairs(
             .agg(F.array_sort(F.collect_list(item)).alias("items"))
             .where(F.size("items") > 1)
         )
-        within = F.flatten(
-            F.transform(
-                F.col("items"),
-                lambda a, i: F.transform(
-                    F.slice(F.col("items"), i + 2, F.size(F.col("items"))),
-                    lambda b: F.struct(a.alias("a"), b.alias("b")),
-                ),
-            )
-        )
+        within = _all_pairs(F.col("items"))
         lo = F.filter(F.col("items"), lambda x: x["__c"] == F.col("__t1"))
         hi = F.filter(F.col("items"), lambda x: x["__c"] == F.col("__t2"))
         cross = F.flatten(
@@ -398,9 +401,7 @@ def minhash_lsh_pairs(
         cand.join(gsub.withColumnRenamed("__id", "id_a").withColumnRenamed("__g", "__ga"), "id_a")
         .join(gsub.withColumnRenamed("__id", "id_b").withColumnRenamed("__g", "__gb"), "id_b")
         .select(
-            "id_a", "id_b",
-            (F.size(F.array_intersect("__ga", "__gb")).cast("double")
-             / F.size(F.array_union("__ga", "__gb")).cast("double")).alias("jaccard"),
+            "id_a", "id_b", jaccard(F.col("__ga"), F.col("__gb")).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )
@@ -408,96 +409,49 @@ def minhash_lsh_pairs(
 
 
 # ---------------------------------------------------------------------------
-# simhash (Arrow-vectorized)
+# simhash
 # ---------------------------------------------------------------------------
 
-def _fnv1a64_tokens(bts: list) -> "np.ndarray":
-    """FNV-1a 64 of each byte string, vectorized ACROSS tokens: all
-    bytes concatenate into one buffer, then one numpy xor-multiply pass
-    per byte POSITION updates every still-active token hash at once.
-    Python work is O(max_token_len) loop iterations, not O(total_chars)
-    — the per-character interpreter loop this replaces was the last
-    Python-bound inner loop in the dedup module (same constants, so
-    signatures are stable across rounds; parity-tested against a
-    scalar reference in tests/test_data_ops.py)."""
-    n = len(bts)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    lens = np.fromiter((len(b) for b in bts), dtype=np.int64, count=n)
-    maxlen = int(lens.max()) if n else 0
-    h = np.full(n, 0xCBF29CE484222325, dtype=np.uint64)
-    if maxlen == 0:
-        return h
-    cat = np.frombuffer(b"".join(bts), dtype=np.uint8)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    prime = np.uint64(0x100000001B3)
-    # walk byte positions; tokens shorter than j drop out of `active`
-    order = np.argsort(lens, kind="stable")  # longest last
-    h_s, lens_s, starts_s = h[order], lens[order], starts[order]
-    lo = 0
-    with np.errstate(over="ignore"):
-        for j in range(maxlen):
-            while lo < n and lens_s[lo] <= j:
-                lo += 1
-            idx = starts_s[lo:] + j
-            h_s[lo:] = (h_s[lo:] ^ cat[idx].astype(np.uint64)) * prime
-    out = np.empty(n, dtype=np.uint64)
-    out[order] = h_s
-    return out
-
-
-def _simhash64_py(tokens: pd.Series) -> pd.Series:
-    """64-bit simhash of token arrays. Vectorized per Arrow batch:
-    the batch's tokens are flattened into ONE array, hashed with the
-    numpy-vectorized FNV-1a above, bit contributions summed per doc
-    via np.add.reduceat, sign taken — no per-character or per-token
-    Python hash loop."""
-    n = len(tokens)
-    out = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return pd.Series(out)
-    docs = [
-        [] if toks is None else [t.encode("utf-8") for t in toks] for toks in tokens
-    ]
-    counts = np.fromiter((len(d) for d in docs), dtype=np.int64, count=n)
-    flat = [b for d in docs for b in d]
-    if not flat:
-        return pd.Series(out)
-    hs = _fnv1a64_tokens(flat)
-    # (n_tokens, 64) signed bit contributions, summed per document
-    bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(
-        np.int64
+def _simhash64_py(hashes: pd.Series) -> pd.Series:
+    """64-bit simhash of each row's token hashes (``array<bigint>``): bit
+    b is set when more than half of the row's hashes have bit b set.
+    Vectorized per Arrow batch: the batch's hashes concatenate into ONE
+    array, unpack to a (tokens, 64) bit matrix of bytes, sum per row in
+    one np.add.reduceat and pack back into int64s — no per-token Python.
+    A null or empty row gives 0."""
+    counts = np.fromiter(
+        (0 if h is None else len(h) for h in hashes), dtype=np.int64, count=len(hashes)
     )
-    contrib = 2 * bits - 1
+    out = np.zeros(len(hashes), dtype=np.int64)
     nz = counts > 0
-    offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))[nz]
-    acc = np.add.reduceat(contrib, offsets, axis=0)  # (n_nonempty, 64)
-    weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))[None, :]
-    sigs = np.where(acc > 0, weights, np.uint64(0)).sum(
-        axis=1, dtype=np.uint64
-    )
-    out[nz] = sigs.astype(np.int64)
+    if nz.any():
+        hs = np.concatenate([np.asarray(h, dtype="<i8") for h in hashes[nz]])
+        bits = np.unpackbits(hs.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+        n = counts[nz]
+        ones = np.add.reduceat(bits, np.cumsum(n) - n, axis=0, dtype=np.int64)
+        majority = 2 * ones > n[:, None]
+        out[nz] = np.packbits(majority, axis=1, bitorder="little").view("<i8")[:, 0]
     return pd.Series(out)
 
 
-def _simhash64(col: Column) -> Column:
-    # pandas_udf registration parses DDL and needs an active session, so
-    # the wrapper is created lazily at expression-build time
-    return pandas_udf(_simhash64_py, "long")(col)
-
-
-class SimHash(ElementwiseTransform):
+class SimHash(ArrayTransform):
     """64-bit simhash signature of a tokenized text column
-    (array<string> -> bigint). Arrow-vectorized pandas UDF.
+    (array<string> -> bigint): the bit-majority of the tokens' xxhash64.
+
+    Each token is hashed by a Column expr (``transform`` + ``xxhash64``),
+    so only 8 bytes per token cross into the Arrow-vectorized pandas UDF
+    that takes the bit-majority. The signature equals
+    ``simhash_signatures_jvm``'s on every doc with at least one token
+    (a null token hashes as ``xxhash64(null)`` in both); an empty or null
+    array gives 0 here and no row there.
 
     Why a second signature function next to ``simhash_signatures_jvm``:
     this stage is row-local (one value per input row, fusible into a
     pipeline ``select``), while the JVM path is an aggregate over
     exploded tokens keyed by a document id — it cannot be a column
-    expression without a shuffle and a join back. The two use different
-    token hashes (FNV-1a here, xxhash64 there), so their signatures are
-    not interchangeable; no oracle depends on signature values, only on
-    the pairs they yield."""
+    expression without a shuffle and a join back. A Python UDF cannot
+    run inside a higher-order function, so the input must be a flat
+    array<string>."""
 
     compatible_dtypes = ("string",)
 
@@ -505,8 +459,11 @@ class SimHash(ElementwiseTransform):
     def __init__(self, input_col: str, output_col: str):
         pass
 
-    def build(self, df):
-        return {self.output_col: _simhash64(F.col(self.input_col))}
+    def afn(self, tokens: Column) -> Column:
+        # pandas_udf registration parses DDL and needs an active session,
+        # so the wrapper is created lazily at expression-build time
+        udf = pandas_udf(_simhash64_py, "long")
+        return udf(F.transform(tokens, lambda t: F.xxhash64(t)))
 
 
 def simhash_signatures_jvm(
@@ -517,14 +474,13 @@ def simhash_signatures_jvm(
     aggregates per doc (map-side partial agg; the shuffle carries
     docs x 64 longs) -> sign assembly into one bigint.
 
-    This is the corpus-scale path: the Arrow ``SimHash`` stage is
-    numpy-vectorized (``_fnv1a64_tokens``) but still moves every token
-    across the Arrow boundary into Python — fine for a column-transformer
-    stage on modest data, a Python-bound cost at 10^9 documents. Same
-    simhash math (bit-majority of token hashes), different token hash
-    (xxhash64 vs FNV-1a), so signatures are not interchangeable between
-    the two paths. Docs with empty/null token arrays produce no signature
-    row (they cannot be near-dups of anything by content)."""
+    This is the corpus-scale path: the ``SimHash`` stage moves 8 bytes
+    per token across the Arrow boundary into Python — fine for a
+    column-transformer stage on modest data, a Python-bound cost at 10^9
+    documents. The signatures are interchangeable with the stage's: the
+    same token hash and the same bit-majority. Docs with empty/null
+    token arrays produce no signature row (they cannot be near-dups of
+    anything by content)."""
     t = ensure_scan_parallelism(df, id_col).select(
         F.col(id_col).alias("__id"), F.explode(tokens_col).alias("__t")
     )
@@ -666,9 +622,10 @@ def embedding_neardup_pairs(
     it, so the bucket count scales with the corpus to hold expected
     occupancy (and the per-bucket quadratic term) roughly constant.
     Null vectors are excluded up front (a null can match nothing; the
-    Arrow bucketing/rescoring batches require dense rows). Candidate verification is an Arrow-batched numpy cosine, not
-    the interpreted Column fold — at corpus scale the verify runs over
-    every candidate pair and dominates.
+    Arrow bucketing/rescoring batches require dense rows). Candidate
+    verification is an Arrow-batched numpy cosine, not the interpreted
+    Column fold — at corpus scale the verify runs over every candidate
+    pair and dominates.
 
     Candidate generation goes through the chunk-guarded
     ``_bucket_pairs`` (same machinery as minhash/simhash): a dedup

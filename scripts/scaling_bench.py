@@ -154,7 +154,6 @@ def _bench_env(cpus: int, **knobs: str) -> dict:
         KAMAE_BENCH_ONLY="synth",
         KAMAE_BENCH_DRIVER_MEM="48g",
         KAMAE_BENCH_SYNTH_CONVS="0",
-        KAMAE_BENCH_DATA_OPS="0",
     )
     env.update({k: str(v) for k, v in knobs.items()})
     return env

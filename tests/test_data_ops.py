@@ -427,52 +427,21 @@ def test_simhash_neardup_jvm_recovers_pairs(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_fnv1a_vectorized_parity():
-    """The numpy-vectorized FNV-1a must bit-equal the scalar definition
-    (cross-round signature stability depends on it)."""
-    import random
-    import string
-
-    from kamae_spark.data.dedup import _fnv1a64_tokens
-
-    def fnv_ref(b):
-        h = 0xCBF29CE484222325
-        for ch in b:
-            h = ((h ^ ch) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-        return h
-
-    rng = random.Random(7)
-    toks = ["", "a", "hello", "世界のテスト", "x" * 300] + [
-        "".join(rng.choices(string.printable, k=rng.randint(0, 50)))
-        for _ in range(200)
-    ]
-    bts = [t.encode("utf-8") for t in toks]
-    got = _fnv1a64_tokens(bts)
-    exp = np.array([fnv_ref(b) for b in bts], dtype=np.uint64)
-    assert (got == exp).all()
-
-
 def test_simhash_vectorized_batch_parity():
-    """_simhash64_py (flattened batch + reduceat) must equal the
-    per-doc scalar simhash definition, including None/empty docs."""
+    """_simhash64_py (flattened batch + reduceat) must equal the per-doc
+    scalar bit-majority definition over int64 token hashes, including
+    None/empty docs and hashes with bit 63 set."""
     import random
-    import string
 
     import pandas as pd
 
     from kamae_spark.data.dedup import _simhash64_py
 
-    def fnv_ref(b):
-        h = 0xCBF29CE484222325
-        for ch in b:
-            h = ((h ^ ch) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-        return h
-
-    def simhash_ref(toks):
-        if toks is None or len(toks) == 0:
+    def simhash_ref(hs):
+        if hs is None or len(hs) == 0:
             return 0
-        hs = np.array([fnv_ref(t.encode("utf-8")) for t in toks], dtype=np.uint64)
-        bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(np.int64)
+        u = np.asarray(hs, dtype=np.int64).view(np.uint64)
+        bits = ((u[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(np.int64)
         acc = (2 * bits - 1).sum(axis=0)
         sig = np.uint64(0)
         for b in np.nonzero(acc > 0)[0]:
@@ -480,15 +449,46 @@ def test_simhash_vectorized_batch_parity():
         return int(np.int64(sig.astype(np.int64)))
 
     rng = random.Random(3)
-    docs = [None, [], ["hello", "world"], ["a"], ["the", "quick", "the"], ["世界", ""]]
+    lo, hi = -(2**63), 2**63 - 1
+    docs = [None, [], [-1], [lo], [lo, lo, 1], [1, 2, 3], [hi, -1, 0, lo]]
     docs += [
-        ["".join(rng.choices(string.ascii_lowercase, k=rng.randint(1, 12)))
-         for _ in range(rng.randint(1, 40))]
+        np.array([rng.randint(lo, hi) for _ in range(rng.randint(0, 40))], dtype=np.int64)
         for _ in range(100)
     ]
     got = _simhash64_py(pd.Series(docs, dtype=object)).to_numpy()
     exp = np.array([simhash_ref(d) for d in docs], dtype=np.int64)
     assert (got == exp).all()
+
+
+def test_simhash_stage_equals_jvm_signatures(spark):
+    """The SimHash stage and simhash_signatures_jvm share one token hash,
+    so every doc with at least one token (a null token included) gets
+    the same signature from both; an empty or null array gets 0 from
+    the stage and no JVM row."""
+    from kamae_spark.sources.synth import documents_table
+
+    docs = documents_table(spark, n_docs=3000).select(
+        "doc_id", F.split("text", " ").alias("toks")
+    )
+    odd = spark.createDataFrame(
+        [(-1, ["a", None]), (-2, []), (-3, None)], "doc_id long, toks array<string>"
+    )
+    df = docs.unionByName(odd)
+    stage = PipelineModel([SimHash(input_col="toks", output_col="sig")]).transform(df)
+    got = {r["doc_id"]: r["sig"] for r in stage.select("doc_id", "sig").collect()}
+    jvm = {r["__id"]: r["__sig"] for r in dedup.simhash_signatures_jvm(df, "toks", "doc_id").collect()}
+    assert len(got) == 3003 and set(jvm) == set(got) - {-2, -3}
+    assert {k: got[k] for k in jvm} == jvm
+    assert got[-2] == got[-3] == 0
+
+
+def test_simhash_stage_checks_its_input(spark):
+    """A scalar string or a non-string array is refused at transform,
+    not signed per character or failed inside the UDF at the action."""
+    df = spark.createDataFrame([("hello world", [1, 2])], "s string, ints array<int>")
+    for col in ("s", "ints"):
+        with pytest.raises(TypeError):
+            SimHash(input_col=col, output_col="sig").transform(df)
 
 
 def test_embedding_neardup_adversarial_identical_vectors(spark, monkeypatch):
