@@ -25,8 +25,20 @@ without the networkx dependency:
   one ``withColumns`` (``stage.select_outputs``), a pending alias is
   typed unaliased and its field renamed in Python, and window and as-of
   keys go by name
-- compile decisions (each flush and its reason, each hoisted stage) are
-  logged at DEBUG on the ``kamae_spark`` logger
+- window stages compile by layer (``_layers``), the cover-set idea of
+  Cao et al., *Optimization of Analytic Window Functions* (PVLDB 2012):
+  as few window passes over one sort as the dependencies allow. A stage
+  runs as its ``passes()`` (Sessionize: the gap flag, then the running
+  index with the session id); a pass's layer is the number of dependent
+  window passes before it; each window pass moves to the last layer its
+  consumers allow; and each layer is one select, so its windows on one
+  spec evaluate in one Window node. A ListAgg count/min/max joins its
+  layer's ordered windows over their order. The flagship feature set
+  plans three Window nodes: the as-of fill, the gap flag, everything
+  else. Shuffling stages (AsOfJoin) are hoisted first; a pipeline with
+  an in-place replacement keeps its declared order
+- compile decisions (each layer's stages, each flush and its reason)
+  are logged at DEBUG on the ``kamae_spark`` logger
 - save/load: one JSON spec per pipeline (stages + params, including
   fitted state such as vocab arrays / means), reference analogue:
   pipeline.py:193-239, pipeline_model.py:62-79
@@ -69,9 +81,9 @@ def _toposort(stages: list[Stage], hoist: bool = False) -> list[Stage]:
     stages, but an early shuffle (a) carries only the columns that exist
     so far — later projections never ride through its exchange — and (b)
     leaves behind a hash partitioning that co-keyed window stages reuse
-    instead of re-shuffling (guide §2.3/§2.4). Skipped entirely when any
-    in-place replacement is present: replacement semantics are
-    declared-order-sensitive.
+    instead of re-shuffling (guide §2.3/§2.4). The caller hoists only
+    when no stage replaces its own input in place (``_replaces_in_place``):
+    replacement semantics are declared-order-sensitive.
     """
     producer: dict[str, int] = {}
     for i, s in enumerate(stages):
@@ -79,10 +91,6 @@ def _toposort(stages: list[Stage], hoist: bool = False) -> list[Stage]:
             if c in producer:
                 raise ValueError(f"duplicate producer for column {c!r}")
             producer[c] = i
-
-    def self_replacer(i: int) -> bool:
-        s = stages[i]
-        return bool(set(s.output_columns) & set(s.input_columns))
 
     deps: list[set[int]] = []
     for i, s in enumerate(stages):
@@ -117,13 +125,19 @@ def _toposort(stages: list[Stage], hoist: bool = False) -> list[Stage]:
         done.append(i)
 
     roots = list(range(len(stages)))
-    if hoist and not any(self_replacer(i) for i in roots):
+    if hoist:
         roots.sort(
             key=lambda i: (0 if getattr(stages[i], "schedule_early", False) else 1, i)
         )
     for i in roots:
         visit(i)
     return [stages[i] for i in done]
+
+
+def _replaces_in_place(stages: list[Stage]) -> bool:
+    """Whether a stage overwrites one of its own inputs: such a pipeline
+    keeps its declared order (no hoist, no layers)."""
+    return any(set(s.output_columns) & set(s.input_columns) for s in stages)
 
 
 def _ancestor_indices(stages: list[Stage], targets: Iterable[int]) -> set[int]:
@@ -147,11 +161,83 @@ def _ancestor_indices(stages: list[Stage], targets: Iterable[int]) -> set[int]:
 _MAX_LCA_DEPTH = 40
 
 
+def _barrier(t: Transformer) -> bool:
+    """Whether ``t`` may run as its own ``transform`` (a join, a Python
+    path, a changed row set): no pass is moved across it."""
+    return type(t).transform is not Transformer.transform
+
+
+def _layers(units: list[Transformer]) -> list[tuple[int, Transformer]]:
+    """Schedule passes into layers: ``(layer, pass)`` in compile order.
+
+    Each run of passes between barriers is layered on its own, its
+    layers numbered on from the run before it; a barrier takes the
+    current layer. In a run, a pass's layer is the number of dependent
+    window passes before it: a window reads only columns of earlier
+    layers (it cannot read a lateral alias), and a projection that
+    reads a window output goes to the next layer (as a lateral alias,
+    the window output would split its select, and that select's windows
+    with it). Each window then moves to the last layer its consumers
+    allow, so a feature that no pass reads lands in the last window
+    layer and skips the buffers of the Window nodes before it;
+    projections stay in the first layer they can. Windows come first in
+    a layer. When a layer's ordered windows share one spec, each pass
+    with an ``over`` (a ``ListAgg``) that accepts that spec joins them,
+    and so their Window node."""
+    out: list[tuple[int, Transformer]] = []
+    run: list[Transformer] = []
+    base = 0
+
+    def close() -> None:
+        nonlocal base
+        if not run:
+            return
+        producer = {c: i for i, u in enumerate(run) for c in u.output_columns}
+        win = [not getattr(u, "lca_fuse", True) for u in run]
+        deps = [{producer[c] for c in u.input_columns if producer.get(c, i) < i}
+                for i, u in enumerate(run)]
+        layer: list[int] = []
+        for i, d in enumerate(deps):
+            layer.append(max((layer[j] + (win[i] or win[j]) for j in d), default=0))
+        last = max((k for k, w in zip(layer, win) if w), default=0)
+        for i in reversed(range(len(run))):
+            if win[i]:
+                layer[i] = min((layer[j] - 1 for j in range(i + 1, len(run)) if i in deps[j]),
+                               default=last)
+        for k in set(layer):
+            here = [i for i in range(len(run)) if win[i] and layer[i] == k]
+            ordered = {getattr(run[i], "spec", lambda: None)() for i in here}
+            ordered = {sp for sp in ordered if sp is None or sp[1]}
+            if len(ordered) == 1 and None not in ordered:
+                for i in here:
+                    if hasattr(run[i], "over"):
+                        run[i] = run[i].over(*ordered) or run[i]
+        order = sorted(range(len(run)), key=lambda i: (layer[i], not win[i], i))
+        out.extend((base + layer[i], run[i]) for i in order)
+        base += max(layer)
+        run.clear()
+
+    for u in units:
+        if _barrier(u):
+            close()
+            out.append((base, u))
+        else:
+            run.append(u)
+    close()
+    return out
+
+
 def _fused_transform(
-    df: DataFrame, transformers: list[Transformer],
-    canonical: list[Transformer] | None = None,
+    df: DataFrame, transformers: list[Transformer], canonical: list[Transformer],
+    layered: bool = True,
 ) -> DataFrame:
-    """Apply transformers with select-fusion.
+    """Apply transformers with select-fusion, window passes by layer.
+
+    Each stage contributes its ``passes()``. With ``layered``, the
+    passes are scheduled by ``_layers`` and every layer starts a new
+    select, so each layer's windows on one spec evaluate in one Window
+    node; without it (a pipeline that replaces a column in place), they
+    run in the given order and only the rules below flush.
 
     Consecutive pure-projection stages fuse into ONE projection (one
     ``withColumns``, resolved as one select) — including stages that consume a column produced earlier in the
@@ -192,14 +278,32 @@ def _fused_transform(
     ~13 selects of 40 laterally-chained exprs each instead of one
     unanalyzable select.
 
+    A projection reading a pending window output flushes first, too: a
+    lateral alias of a window output splits the select in two, and the
+    select's windows with it.
+
     Non-projection stages (``build`` returns None: joins, Python paths)
-    flush the batch and apply their own ``transform``. Each flush that
-    emits anything is logged at DEBUG with its reason."""
+    flush the batch and apply their own ``transform``, after the passes'
+    temporaries are dropped. At the end the columns take the order that
+    applying the ``canonical`` (declared, topological) stages one by one
+    gives, and the temporaries go. Each layer is logged at DEBUG, and so
+    is each flush that emits anything, with its reason."""
     spark = df.sparkSession
     debug = _log.isEnabledFor(logging.DEBUG)
     base_cols = tuple(df.columns)
-    # pending alias -> (expr, lateral depth, frame it was built on)
-    pending: dict[str, tuple[Column, int, DataFrame]] = {}
+    units: list[Transformer] = []
+    temps: set[str] = set()
+    for t in transformers:
+        passes = t.passes()
+        units += passes
+        temps.update(c for p in passes for c in p.output_columns if c not in t.output_columns)
+    plan = _layers(units) if layered else [(0, u) for u in units]
+    if debug:
+        for k in sorted({k for k, _ in plan}):
+            names = (type(getattr(u, "of", u)).__name__ for n, u in plan if n == k)
+            _log.debug("layer %d: %s", k, ", ".join(names))
+    # pending alias -> (expr, lateral depth, frame it was built on, is a window)
+    pending: dict[str, tuple[Column, int, DataFrame, bool]] = {}
     replacing: dict[str, Column] = {}  # in-place replacements, fused (see loop)
     # types of the current frame's columns, plus pending aliases once typed
     fields = {f.name: f for f in df.schema.fields}
@@ -217,11 +321,16 @@ def _fused_transform(
             pending.clear()
             replacing.clear()
         if t is not None:
-            df = t.transform(df)
+            gone = [c for c in df.columns if c in temps and c not in t.input_columns] if temps else []
+            df = t.transform(df.drop(*gone) if gone else df)
         fields.clear()
         fields.update((f.name, f) for f in df.schema.fields)
 
-    for t in transformers:
+    layer = 0
+    for k, t in plan:
+        if k > layer:
+            flush(f"layer {k}")
+            layer = k
         ins = t.input_columns
         # a consumer of a pending IN-PLACE REPLACEMENT must read the
         # replaced value, so materialize the batch first: a same-select
@@ -236,14 +345,17 @@ def _fused_transform(
         # deep dependent chains flush to stay under the analyzer's
         # iterative-resolution budget
         lca = getattr(t, "lca_fuse", True)
-        if d > 1 and (not lca or d > _MAX_LCA_DEPTH):
-            flush("LCA depth cap" if lca else "window stage")
+        why = ("window stage" if d > 1 and not lca
+               else "window output" if any(pending[c][3] for c in ins if c in pending)
+               else "LCA depth cap" if d > _MAX_LCA_DEPTH else None)
+        if why:
+            flush(why)
             d = 1
         vdf = df
         if d > 1:
             for c in ins:
                 if c in pending and c not in fields:
-                    expr, _, frame = pending[c]
+                    expr, _, frame, _ = pending[c]
                     f = frame.select(expr).schema[0]
                     fields[c] = StructField(c, f.dataType, f.nullable, f.metadata)
             known = [fields[c] for c in dict.fromkeys(ins) if c in fields]
@@ -273,18 +385,14 @@ def _fused_transform(
         # value (they were declared earlier), consumers arriving after
         # hit the flush-on-read guard and see the new value.
         replacing.update(repl)
-        pending.update((n, (c, d, vdf)) for n, c in exprs.items() if n not in repl)
+        pending.update((n, (c, d, vdf, not lca)) for n, c in exprs.items() if n not in repl)
     flush("end of pipeline")
-    if canonical is not None and canonical != transformers:
-        # hoisted execution order: restore the column order the canonical
-        # (declared-topological) order would have produced, so callers see
-        # an identical schema regardless of scheduling; columns a stage
-        # does not declare keep their frame order at the end
-        have = df.columns
-        declared = (c for s in canonical for c in s.output_columns)
-        order = [c for c in dict.fromkeys((*base_cols, *declared, *have)) if c in have]
-        if order != have:
-            df = df.select(*order)
+    # columns a stage does not declare keep their frame order at the end
+    have = df.columns
+    declared = (c for s in canonical for c in s.output_columns)
+    order = [c for c in dict.fromkeys((*base_cols, *declared, *have)) if c in have and c not in temps]
+    if order != have:
+        df = df.select(*order)
     return df
 
 
@@ -354,16 +462,13 @@ class PipelineModel(Stage):
         # schedule shuffling stages (schedule_early) as early as their
         # dependencies allow: their exchange then carries only the
         # columns produced so far, and co-keyed window stages downstream
-        # reuse the partitioning (values identical in any topo order;
-        # column order restored by _fused_transform)
-        hoisted = _toposort([s for s in stages], hoist=True)
-        if hoisted != stages and _log.isEnabledFor(logging.DEBUG):
-            was = {id(s): i for i, s in enumerate(stages)}
-            for i, s in enumerate(hoisted):
-                if getattr(s, "schedule_early", False) and i < was[id(s)]:
-                    _log.debug("hoisted %s from stage %d to %d", type(s).__name__, was[id(s)], i)
+        # reuse the partitioning. Values are identical in any topological
+        # order, and _fused_transform restores the column order; a
+        # pipeline with an in-place replacement keeps its declared order
+        layered = not _replaces_in_place(stages)
         return _fused_transform(  # type: ignore[arg-type]
-            df, hoisted, canonical=stages if hoisted != stages else None,
+            df, _toposort(stages, hoist=True) if layered else stages,
+            canonical=stages, layered=layered,
         )
 
     def save(self, path: str) -> None:

@@ -105,8 +105,9 @@ class Stage:
 class Transformer(Stage):
     """A stage that appends output column(s) to a DataFrame.
 
-    Subclasses implement ``build`` (pure-projection fast path) and/or
-    override ``transform``. ``input_dtype`` / ``output_dtype`` params cast
+    Subclasses implement ``build`` (pure-projection fast path), split
+    into ``passes`` when one select cannot hold them, and/or override
+    ``transform``. ``input_dtype`` / ``output_dtype`` params cast
     elements on the way in / out (reference: spark_operation.py:128-206;
     casting composes into the expression — no temp columns needed because
     exprs never mutate the source column).
@@ -124,13 +125,26 @@ class Transformer(Stage):
     def build(self, df: DataFrame) -> dict[str, Column] | None:
         return None
 
+    def passes(self) -> list["Transformer"]:
+        """The selects this stage runs as, in order: itself alone, unless
+        a later select reads a window output of an earlier one (Spark
+        nests no window inside a window aggregate). Each pass declares
+        its own inputs and outputs, so the pipeline schedules passes,
+        not stages; an output of a pass that the stage does not declare
+        is a temporary, dropped once the stage has run."""
+        return [self]
+
     def transform(self, df: DataFrame) -> DataFrame:
-        exprs = self.build(df)
-        if exprs is None:
-            raise NotImplementedError(
-                f"{type(self).__name__} must override transform() or build()"
-            )
-        return select_outputs(df, exprs)
+        passes = self.passes()
+        for p in passes:
+            exprs = p.build(df)
+            if exprs is None:
+                raise NotImplementedError(
+                    f"{type(self).__name__} must override transform() or build()"
+                )
+            df = select_outputs(df, exprs)
+        temps = [c for p in passes for c in p.output_columns if c not in self.output_columns]
+        return df.drop(*temps) if temps else df
 
     # -- helpers for subclasses -------------------------------------------
     def _validate(self, df: DataFrame) -> None:

@@ -4,7 +4,9 @@ One definition of the flagship feature stages: lag/lead of the text and
 the timestamp, rolling counts and means, role frequency, tool backfill,
 sessionization, conversation length and the as-of annotation join.
 Every window stage partitions by ``conv_id`` and the ordered ones order
-by ``(ts, turn_idx)``, so the compile puts them on one shuffle.
+by ``(ts, turn_idx)``, so the compile runs them on one shuffle and three
+window passes: the as-of fill, Sessionize's gap flag, and one pass for
+every other feature.
 """
 
 from __future__ import annotations

@@ -19,10 +19,11 @@ Scale design:
   child exchange for equal partitioning
 - frames are ALWAYS `<= current row` for point-in-time ops, and the
   frame params are checked at construction (``offset >= 1``,
-  ``rows >= 1``, ``range_seconds >= 0``): temporal leakage is impossible
-  by construction (SURVEY.md §7 risk 1); `Lead` and unbounded listwise
-  stats exist for training-label use and are explicitly not
-  point-in-time
+  ``rows >= 1``, ``range_seconds >= 0``; a range frame and Sessionize,
+  which assume forward time, take no descending key): temporal leakage
+  is impossible by construction (SURVEY.md §7 risk 1); `Lead` and
+  unbounded listwise stats exist for training-label use and are
+  explicitly not point-in-time
 - deterministic ordering: order specs should include a unique
   tie-breaker (e.g. ``["ts", "turn_idx"]``) per SURVEY.md §7 risk 2
 - skew: conversations are bounded (≤ ~10^4 turns) so per-key state fits
@@ -32,16 +33,18 @@ Scale design:
 
 from __future__ import annotations
 
+import copy
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from kamae_spark.core.stage import Transformer, keyword_params, select_outputs
+from kamae_spark.core.stage import Transformer, keyword_params
 from kamae_spark.functions.time import epoch_fractional, epoch_seconds
 
 UNB = Window.unboundedPreceding
 CUR = Window.currentRow
+UNF = Window.unboundedFollowing
 
 _AGGS = {
     "count": F.count,
@@ -90,15 +93,37 @@ class _Windowed(Transformer):
         return [*super().input_columns, *self._partition(),
                 *[c.lstrip("-") for c in self._order()]]
 
-    def window(self, frame: tuple[int, int] | None = None) -> WindowSpec:
-        """The spec over the keys; ``'-col'`` orders descending. Keys go
-        by name (a name orders ascending): each wrapped ``Column`` call
-        costs py4j round trips at compile time."""
+    def window(self, frame: tuple[int, int] | None = None,
+               order: tuple | None = None) -> WindowSpec:
+        """The spec over the partition keys and ``order`` (default: the
+        order keys); ``'-col'`` orders descending. Keys go by name (a
+        name orders ascending): each wrapped ``Column`` call costs py4j
+        round trips at compile time."""
+        order = self._order() if order is None else order
         w = Window.partitionBy(*self._partition())
-        if self._order():
-            w = w.orderBy(*[F.col(c[1:]).desc() if c.startswith("-") else c
-                            for c in self._order()])
+        if order:
+            w = w.orderBy(*[F.col(c[1:]).desc() if c.startswith("-") else c for c in order])
         return w if frame is None else w.rowsBetween(*frame)
+
+    def spec(self) -> tuple | None:
+        """``(partition keys, order keys)`` of this stage's window, which
+        the pipeline compares to find the windows that share one sort;
+        None when the window is ordered by something other than its
+        keys."""
+        return self._partition(), self._order()
+
+
+class _Pass(_Windowed):
+    """One select of a multi-pass window stage ``of``: ``fn(df)`` builds
+    its outputs over ``of``'s partition keys and ``order_by``."""
+
+    def __init__(self, of: _Windowed, fn, input_cols, output_cols, order_by: tuple):
+        super().__init__(input_cols=list(input_cols), output_cols=list(output_cols),
+                         partition_by=of._partition(), order_by=order_by)
+        self.of, self._fn = of, fn
+
+    def build(self, df):
+        return self._fn(df)
 
 
 class Lag(_Windowed):
@@ -173,6 +198,14 @@ class RollingAgg(_Windowed):
                 raise ValueError(f"range_seconds must be >= 0, got {self.range_seconds}")
             if len(self._order()) != 1:
                 raise ValueError("range_seconds requires exactly one order column")
+            if self._order()[0].startswith("-"):
+                raise ValueError(
+                    f"range_seconds frames look back in time; order_by {self.order_by!r} is descending"
+                )
+
+    def spec(self):
+        # a range frame orders by the timestamp's epoch seconds, not the key
+        return None if self.range_seconds is not None else super().spec()
 
     def _value(self) -> Column | str:
         return self.input_col
@@ -243,12 +276,15 @@ class Sessionize(_Windowed):
     """Timestamp-gap sessionization: new session when gap > threshold.
 
     Produces an integer session index (0-based per partition) and, when
-    ``session_id_col`` is set, a string id ``{conv_id}#{idx}``. Two window
-    passes (gap flag via lag, then cumulative sum) — Spark forbids nesting
-    a window inside a window aggregate, but both passes share one
-    partitioning so AQE plans a single Exchange. The lag reads the raw
-    timestamp column, so Catalyst merges it into an earlier window batch
-    on the same spec.
+    ``session_id_col`` is set, a string id ``{conv_id}#{idx}``. Two
+    passes, because Spark nests no window inside a window aggregate: the
+    gap flag (a lag of the raw timestamp), then the running sum of the
+    flag, which is the index; the id is built from that same window
+    expression, not from the index column, so both stay in one select.
+    The pipeline puts the second pass in the Window node of the other
+    windows on the same spec; the flag is a temporary, dropped at the
+    end. The order keys must ascend: a descending key makes every gap
+    negative, so every row would fall into session 0.
     """
 
     @keyword_params
@@ -261,7 +297,8 @@ class Sessionize(_Windowed):
         order_by: Sequence[str] = ("ts", "turn_idx"),
         session_id_col: str | None = None,
     ):
-        pass
+        if any(c.startswith("-") for c in self._order()):
+            raise ValueError(f"Sessionize needs ascending order keys, got {order_by!r}")
 
     @property
     def input_columns(self):
@@ -271,24 +308,26 @@ class Sessionize(_Windowed):
     def output_columns(self):
         return [self.output_col, *([self.session_id_col] if self.session_id_col else [])]
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        # lag the raw column: a window over plain input columns collapses
-        # into the preceding window batch on the same spec
-        w = self.window()
-        prev = F.lag(self.ts_col).over(w)
-        gap = epoch_fractional(F.col(self.ts_col)) - epoch_fractional(prev)
-        flag = F.when(gap > F.lit(float(self.gap_seconds)), 1).otherwise(0)
-        tmp = f"__gap_flag_{self.output_col}"
-        df = select_outputs(df, {tmp: flag})
-        idx = F.sum(tmp).over(w.rowsBetween(UNB, CUR)).cast("int")
-        df = select_outputs(df, {self.output_col: idx}).drop(tmp)
-        if self.session_id_col:
-            sid = F.concat_ws(
-                "#", *[F.col(c).cast("string") for c in self._partition()],
-                F.col(self.output_col).cast("string"),
-            )
-            df = select_outputs(df, {self.session_id_col: sid})
-        return df
+    def passes(self):
+        flag = f"__gap_flag_{self.output_col}"
+
+        def gap(df):
+            prev = F.lag(self.ts_col).over(self.window())
+            secs = epoch_fractional(F.col(self.ts_col)) - epoch_fractional(prev)
+            return {flag: F.when(secs > F.lit(float(self.gap_seconds)), 1).otherwise(0)}
+
+        def index(df):
+            idx = F.sum(flag).over(self.window((UNB, CUR))).cast("int")
+            out = {self.output_col: idx}
+            if self.session_id_col:
+                out[self.session_id_col] = F.concat_ws(
+                    "#", *[F.col(c).cast("string") for c in self._partition()], idx.cast("string"),
+                )
+            return out
+
+        order = self._order()
+        return [_Pass(self, gap, [self.ts_col], [flag], order),
+                _Pass(self, index, [flag], self.output_columns, order)]
 
 
 class ListAgg(_Windowed):
@@ -305,9 +344,17 @@ class ListAgg(_Windowed):
     ``median`` is Spark's exact ``median`` (percentile 0.5) window
     aggregate, the reference's midpoint (even n -> mean of the two
     middles): one Window node, no value-ordered rank pass.
+
+    The statistic's window is unordered. With ``top_n`` the stage runs
+    as two passes, the rank gate (a temporary) and then the statistic.
+    Without it, a ``count``, ``min`` or ``max`` may be evaluated over an
+    ordered window of the same partition with a whole-partition frame
+    (``over``), which gives the same value: the pipeline does so to put
+    it in the Window node of the ordered windows it is compiled with.
     """
 
     keys = ("group_cols", "sort_by")
+    _over: tuple = ()  # the order ``over`` evaluates the statistic by
 
     @keyword_params
     def __init__(
@@ -330,25 +377,54 @@ class ListAgg(_Windowed):
     def _partition(self) -> tuple:
         return (*super()._partition(), *_as_seq(self.segment_col))
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def spec(self):
+        return self._partition(), self._over
+
+    def over(self, spec: tuple) -> "ListAgg | None":
+        """This stage evaluated over the ordered window ``spec``
+        (``(partition keys, order keys)``) with a whole-partition ROWS
+        frame, or None when that could change its value or is not
+        allowed: a ``top_n`` gate, an agg other than ``count``, ``min``
+        and ``max`` (an ordered ``median`` is rejected by Spark; a sum
+        could round differently), or another partition."""
+        partition, order = spec
+        if self.top_n is not None or self.agg not in ("count", "min", "max") \
+                or partition != self._partition():
+            return None
+        folded = copy.copy(self)
+        folded._over = order
+        return folded
+
+    def passes(self):
+        if self.top_n is None:
+            return [self]
+        gate = f"__topn_{self.output_col}"
+        return [
+            _Pass(self, lambda df: {gate: F.row_number().over(self.window()) <= self.top_n},
+                  [], [gate], self._order()),
+            _Pass(self, lambda df: self._stat(F.col(gate)), [self.input_col, gate],
+                  self.output_columns, ()),
+        ]
+
+    def build(self, df):
+        return self._stat()
+
+    def _stat(self, gate: Column | None = None) -> dict[str, Column]:
         value: Column = F.col(self.input_col)
         cond = None if self.min_filter_value is None else value >= F.lit(self.min_filter_value)
-        tmp = f"__topn_{self.output_col}"
-        if self.top_n is not None:
-            df = select_outputs(df, {tmp: F.row_number().over(self.window()) <= self.top_n})
-            cond = F.col(tmp) if cond is None else cond & F.col(tmp)
+        if gate is not None:
+            cond = gate if cond is None else cond & gate
         if cond is not None:
             value = F.when(cond, value)
         # median: Spark's exact percentile(0.5), the reference's midpoint
         # (list_median.py:156-183: even n -> mean of the two middles)
         agg = F.median if self.agg == "median" else _AGGS[self.agg]
-        # the aggregate's window is unordered: the statistic covers the
-        # whole group, not a running prefix
-        res = agg(value).over(Window.partitionBy(*self._partition()))
+        # the statistic covers the whole group, not a running prefix
+        w = self.window((UNB, UNF), self._over) if self._over else self.window(order=())
+        res = agg(value).over(w)
         if self.nan_fill is not None:
             res = F.when(res.isNull() | F.isnan(res.cast("double")), F.lit(self.nan_fill)).otherwise(res)
-        df = select_outputs(df, {self.output_col: res})
-        return df.drop(tmp) if self.top_n is not None else df
+        return {self.output_col: res}
 
 
 class ListRank(_Windowed):

@@ -78,17 +78,54 @@ def _node_names(plan: str) -> list[str]:
     return re.findall(r"(?m)^[\s:+-]*(?:\*\(\d+\) )?(\w+)", plan)
 
 
+def _window_lines(plan: str) -> list[str]:
+    """The Window nodes of a plan tree string, top first."""
+    return [line for line in plan.splitlines() if _node_names(line) == ["Window"]]
+
+
 def test_flagship_plan_fence(spark, transcripts, annotations):
     """The ten flagship stages (``transcript_features``) on a re-spread
-    input, so the pipeline's own exchanges show: at most 4 Window nodes
-    (Sessionize's lag of the raw timestamp merges into the first window
-    batch), 2 Sorts and 1 hash Exchange."""
+    input, so the pipeline's own exchanges show: exactly 3 Window nodes,
+    at most 2 Sorts and 1 hash Exchange. The three passes are the as-of
+    fill, Sessionize's gap flag (a lag of the raw timestamp), and one
+    node for everything else: lag/lead, the rolling counts and mean,
+    role frequency, backfill, Sessionize's running index and id, and
+    the ListAgg count over the same order with a whole-partition frame."""
     model = PipelineModel(transcript_features(annotations))
     plan = _executed(model.transform(transcripts.repartition(4)))
     names = _node_names(plan)
-    assert names.count("Window") <= 4, plan
+    assert names.count("Window") == 3, plan
     assert names.count("Sort") <= 2, plan
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+def test_lone_listagg_count_is_one_unordered_window(spark, transcripts):
+    """A ListAgg count with no ordered window beside it keeps its
+    unordered window: one Window node and no Sort for an order."""
+    model = PipelineModel([ListAgg(input_col="turn_idx", output_col="n", agg="count")])
+    plan = _executed(model.transform(transcripts))
+    windows = _window_lines(plan)
+    assert len(windows) == 1 and " ASC " not in windows[0], plan
+    assert "Sort" not in _node_names(plan), plan
+
+
+def test_sessionize_and_lag_share_the_upper_window(spark, transcripts):
+    """Sessionize and a Lag on one spec plan two ordered Window nodes:
+    the gap flag below, and the running index in the upper one, where
+    the Lag goes too (the last layer its consumers allow: none), even
+    when it is declared first."""
+    order = ("ts", "turn_idx")
+    model = PipelineModel([
+        Lag(input_col="text", output_col="prev_text", order_by=order),
+        Sessionize(ts_col="ts", output_col="sess", order_by=order),
+    ])
+    plan = _executed(model.transform(transcripts))
+    windows = _window_lines(plan)
+    assert len(windows) == 2, plan
+    assert all(re.search(r"\], \[conv_id#\d+\], \[ts#\d+ ASC", w) for w in windows), plan
+    upper, lower = windows
+    assert "lag(text" in upper and "sum(__gap_flag_sess" in upper, plan
+    assert "lag(ts" in lower and "lag(text" not in lower, plan
 
 
 def test_median_listagg_is_one_window(spark, transcripts):

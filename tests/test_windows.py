@@ -203,12 +203,20 @@ def test_temporal_leakage_invariance(spark, transcripts):
             id="rolling_range_-3600",
         ),
         pytest.param(lambda: ListAgg(input_col="x", output_col="y", top_n=2), id="listagg_top_n_no_sort_by"),
+        pytest.param(
+            lambda: RollingAgg(input_col="x", output_col="y", order_by=("-ts",), range_seconds=10),
+            id="rolling_range_descending",
+        ),
+        pytest.param(lambda: Sessionize(ts_col="ts", output_col="s", order_by=("-ts",)),
+                     id="sessionize_descending"),
     ],
 )
 def test_point_in_time_frames_checked_at_construction(make):
     """A frame that would read the current-or-later row, or no row at
-    all, is refused when the stage is built, not silently turned into
-    leaked or all-null values at transform."""
+    all, or that assumes forward time over a descending key (a range
+    frame, the session gaps), is refused when the stage is built, not
+    silently turned into leaked, all-null or all-zero values, or a
+    missing-key error, at transform."""
     with pytest.raises(ValueError):
         make()
 
