@@ -30,6 +30,7 @@ package:
 	python scripts/package.py
 
 # code lines per kamae_spark/ module and the total, then one total each for
-# bench.py, scripts/ and tests/ (no blanks, comments or docstrings)
+# bench.py, __spark_entry__.py, scripts/ and tests/ (no blanks, comments or
+# docstrings)
 loc:
-	python scripts/loc.py kamae_spark bench.py scripts tests
+	python scripts/loc.py kamae_spark bench.py __spark_entry__.py scripts tests

@@ -4,8 +4,12 @@ Re-expression of the reference's KamaeSparkPipeline (reference:
 src/kamae/spark/pipeline/pipeline.py:36, graph/pipeline_graph.py:92-117)
 without the networkx dependency:
 
-- stages are validated/ordered topologically by column-name edges
-  (~60 LoC hand-rolled toposort)
+- stages are validated/ordered topologically by column-name edges,
+  and one rule (``_deps``) draws those edges for the toposort, the
+  output pruning and the layers: a reader follows the producer of each
+  column it reads, and a reader declared before a stage that replaces
+  that column in place reads the original value, so the replacer
+  follows it instead
 - fit fits each estimator on the output-pruned transform of the stages
   before it, so only its ancestors run (reference's one optimizer rule,
   pipeline.py:100-178)
@@ -28,15 +32,15 @@ without the networkx dependency:
 - window stages compile by layer (``_layers``), the cover-set idea of
   Cao et al., *Optimization of Analytic Window Functions* (PVLDB 2012):
   as few window passes over one sort as the dependencies allow. A stage
-  runs as its ``passes()`` (Sessionize: the gap flag, then the running
-  index with the session id); a pass's layer is the number of dependent
-  window passes before it; each window pass moves to the last layer its
-  consumers allow; and each layer is one select, so its windows on one
-  spec evaluate in one Window node. A ListAgg count/min/max joins its
-  layer's ordered windows over their order. The flagship feature set
-  plans three Window nodes: the as-of fill, the gap flag, everything
-  else. Shuffling stages (AsOfJoin) are hoisted first; a pipeline with
-  an in-place replacement keeps its declared order
+  runs as its ``passes()`` (Sessionize: the gap flag, its running sum,
+  then the index and id projected from that sum); a pass's layer is
+  the number of dependent window passes before it; each window pass
+  moves to the last layer its consumers allow; and each layer is one
+  select, so its windows on one spec evaluate in one Window node. A
+  ListAgg count/min/max joins its layer's ordered windows over their
+  order. The flagship feature set plans three Window nodes: the as-of
+  fill, the gap flag, everything else. Shuffling stages (AsOfJoin) are
+  hoisted first, in every pipeline, in-place replacements included
 - compile decisions (each layer's stages, each flush and its reason)
   are logged at DEBUG on the ``kamae_spark`` logger
 - save/load: one JSON spec per pipeline (stages + params, including
@@ -60,56 +64,56 @@ from kamae_spark.core.stage import Estimator, Stage, Transformer, select_outputs
 _log = logging.getLogger("kamae_spark")
 
 
+def _deps(units: list) -> list[dict[int, bool]]:
+    """The one dependency rule, over stages or over the passes of a run:
+    for each unit, the units it must follow, each mapped to True when it
+    reads that unit's output and to False when it only must not run
+    before it.
+
+    A reader follows the one producer of each column it reads; two
+    producers of one column raise. The exception is a stage that
+    overwrites one of its own inputs in place (the reference withColumn
+    idiom): a reader declared BEFORE it reads the original value, as
+    applying the stages one by one gives, so the replacer follows that
+    reader (a False edge). This also un-breaks the spurious-cycle case
+    (A: x->y then B: y,x->x is valid sequentially), and it makes a
+    pipeline that could only read a replaced value before its
+    replacement a cycle. A topological order of ``units`` keeps every
+    edge: such a reader stays before its replacer."""
+    producer: dict[str, int] = {}
+    for i, u in enumerate(units):
+        for c in u.output_columns:
+            if c in producer:
+                raise ValueError(f"duplicate producer for column {c!r}")
+            producer[c] = i
+    deps: list[dict[int, bool]] = [{} for _ in units]
+    for i, u in enumerate(units):
+        for c in u.input_columns:
+            p = producer.get(c, i)
+            if p > i and c in units[p].input_columns:
+                deps[p].setdefault(i, False)
+            elif p != i:  # not a base column nor the stage's own in-place input
+                deps[i][p] = True
+    return deps
+
+
 def _toposort(stages: list[Stage], hoist: bool = False) -> list[Stage]:
-    """Order stages so every stage runs after the producers of its inputs.
+    """Order stages so every stage runs after the stages it follows
+    (``_deps``).
 
     Stable: preserves user order among independent stages. Raises on
     cycles and on duplicate output column names.
 
-    In-place self-replacement (a stage whose output overwrites one of its
-    own inputs, the reference withColumn idiom) keeps DECLARED-ORDER
-    semantics: a consumer declared BEFORE the replacer reads the
-    pre-replacement value (the reference applies stages sequentially), so
-    no dependency edge is drawn from it to the replacer — this both
-    preserves the sequential meaning and un-breaks the spurious-cycle
-    case (A: x->y then B: y,x->x is valid sequentially).
-
     ``hoist=True`` additionally schedules stages flagged
     ``schedule_early`` (shuffling non-projection stages such as AsOfJoin)
     as early as their dependencies allow. Any topological order of the
-    same dependency DAG computes identical column values for append-only
-    stages, but an early shuffle (a) carries only the columns that exist
-    so far — later projections never ride through its exchange — and (b)
-    leaves behind a hash partitioning that co-keyed window stages reuse
-    instead of re-shuffling (guide §2.3/§2.4). The caller hoists only
-    when no stage replaces its own input in place (``_replaces_in_place``):
-    replacement semantics are declared-order-sensitive.
+    dependency DAG computes identical column values, but an early
+    shuffle (a) carries only the columns that exist so far — later
+    projections never ride through its exchange — and (b) leaves behind
+    a hash partitioning that co-keyed window stages reuse instead of
+    re-shuffling (guide §2.3/§2.4).
     """
-    producer: dict[str, int] = {}
-    for i, s in enumerate(stages):
-        for c in s.output_columns:
-            if c in producer:
-                raise ValueError(f"duplicate producer for column {c!r}")
-            producer[c] = i
-
-    deps: list[set[int]] = []
-    for i, s in enumerate(stages):
-        d = set()
-        for c in s.input_columns:
-            p = producer.get(c)
-            if p is None or p == i:
-                continue  # base column / in-place self edge
-            if (
-                p > i
-                and c in stages[p].input_columns
-                and c in stages[p].output_columns
-            ):
-                # consumer declared before an in-place replacer of c:
-                # sequential semantics — it reads the ORIGINAL value
-                continue
-            d.add(p)
-        deps.append(d)
-
+    deps = _deps(stages)
     done: list[int] = []
     state = [0] * len(stages)  # 0 unvisited, 1 in-stack, 2 done
 
@@ -134,23 +138,16 @@ def _toposort(stages: list[Stage], hoist: bool = False) -> list[Stage]:
     return [stages[i] for i in done]
 
 
-def _replaces_in_place(stages: list[Stage]) -> bool:
-    """Whether a stage overwrites one of its own inputs: such a pipeline
-    keeps its declared order (no hoist, no layers)."""
-    return any(set(s.output_columns) & set(s.input_columns) for s in stages)
-
-
 def _ancestor_indices(stages: list[Stage], targets: Iterable[int]) -> set[int]:
-    """Indices of stages whose outputs (transitively) feed any target stage
-    (reference: collect_estimator_parents, pipeline.py:100-133)."""
-    producer = {c: i for i, s in enumerate(stages) for c in s.output_columns}
+    """Indices of stages whose outputs (transitively) feed any target
+    stage: only the edges of ``_deps`` that read an output (reference:
+    collect_estimator_parents, pipeline.py:100-133)."""
+    deps = _deps(stages)
     out: set[int] = set()
     frontier = list(targets)
     while frontier:
-        i = frontier.pop()
-        for c in stages[i].input_columns:
-            p = producer.get(c)
-            if p is not None and p not in out:
+        for p, reads in deps[frontier.pop()].items():
+            if reads and p not in out:
                 out.add(p)
                 frontier.append(p)
     return out
@@ -170,20 +167,23 @@ def _barrier(t: Transformer) -> bool:
 def _layers(units: list[Transformer]) -> list[tuple[int, Transformer]]:
     """Schedule passes into layers: ``(layer, pass)`` in compile order.
 
-    Each run of passes between barriers is layered on its own, its
-    layers numbered on from the run before it; a barrier takes the
-    current layer. In a run, a pass's layer is the number of dependent
-    window passes before it: a window reads only columns of earlier
-    layers (it cannot read a lateral alias), and a projection that
-    reads a window output goes to the next layer (as a lateral alias,
-    the window output would split its select, and that select's windows
-    with it). Each window then moves to the last layer its consumers
-    allow, so a feature that no pass reads lands in the last window
-    layer and skips the buffers of the Window nodes before it;
-    projections stay in the first layer they can. Windows come first in
-    a layer. When a layer's ordered windows share one spec, each pass
-    with an ``over`` (a ``ListAgg``) that accepts that spec joins them,
-    and so their Window node."""
+    Each run of passes between barriers is layered on its own, over the
+    edges ``_deps`` gives, its layers numbered on from the run before
+    it; a barrier takes the current layer. In a run, a pass's layer is
+    the number of dependent window passes before it: a window reads
+    only columns of earlier layers (it cannot read a lateral alias), and
+    a projection that reads a window output goes to the next layer (as a
+    lateral alias, the window output would split its select, and that
+    select's windows with it). An in-place replacer shares the layer of
+    a reader it must not precede, because a select reads its input
+    frame; only a window replacer of a projection's input goes one
+    later, since windows come first in a layer. Each window then moves
+    to the last layer its consumers allow, so a feature that no pass
+    reads lands in the last window layer and skips the buffers of the
+    Window nodes before it; projections stay in the first layer they
+    can. When a layer's ordered windows share one spec, each pass with
+    an ``over`` (a ``ListAgg``) that accepts that spec joins them, and
+    so their Window node."""
     out: list[tuple[int, Transformer]] = []
     run: list[Transformer] = []
     base = 0
@@ -192,17 +192,16 @@ def _layers(units: list[Transformer]) -> list[tuple[int, Transformer]]:
         nonlocal base
         if not run:
             return
-        producer = {c: i for i, u in enumerate(run) for c in u.output_columns}
+        deps = _deps(run)
         win = [not getattr(u, "lca_fuse", True) for u in run]
-        deps = [{producer[c] for c in u.input_columns if producer.get(c, i) < i}
-                for i, u in enumerate(run)]
         layer: list[int] = []
         for i, d in enumerate(deps):
-            layer.append(max((layer[j] + (win[i] or win[j]) for j in d), default=0))
+            layer.append(max((layer[j] + ((win[i] or win[j]) if reads else win[i] > win[j])
+                              for j, reads in d.items()), default=0))
         last = max((k for k, w in zip(layer, win) if w), default=0)
         for i in reversed(range(len(run))):
             if win[i]:
-                layer[i] = min((layer[j] - 1 for j in range(i + 1, len(run)) if i in deps[j]),
+                layer[i] = min((layer[j] - deps[j][i] for j in range(i + 1, len(run)) if i in deps[j]),
                                default=last)
         for k in set(layer):
             here = [i for i in range(len(run)) if win[i] and layer[i] == k]
@@ -229,15 +228,12 @@ def _layers(units: list[Transformer]) -> list[tuple[int, Transformer]]:
 
 def _fused_transform(
     df: DataFrame, transformers: list[Transformer], canonical: list[Transformer],
-    layered: bool = True,
 ) -> DataFrame:
     """Apply transformers with select-fusion, window passes by layer.
 
-    Each stage contributes its ``passes()``. With ``layered``, the
-    passes are scheduled by ``_layers`` and every layer starts a new
-    select, so each layer's windows on one spec evaluate in one Window
-    node; without it (a pipeline that replaces a column in place), they
-    run in the given order and only the rules below flush.
+    Each stage contributes its ``passes()``, which ``_layers``
+    schedules; every layer starts a new select, so each layer's windows
+    on one spec evaluate in one Window node.
 
     Consecutive pure-projection stages fuse into ONE projection (one
     ``withColumns``, resolved as one select) — including stages that consume a column produced earlier in the
@@ -297,7 +293,7 @@ def _fused_transform(
         passes = t.passes()
         units += passes
         temps.update(c for p in passes for c in p.output_columns if c not in t.output_columns)
-    plan = _layers(units) if layered else [(0, u) for u in units]
+    plan = _layers(units)
     if debug:
         for k in sorted({k for k, _ in plan}):
             names = (type(getattr(u, "of", u)).__name__ for n, u in plan if n == k)
@@ -463,12 +459,9 @@ class PipelineModel(Stage):
         # dependencies allow: their exchange then carries only the
         # columns produced so far, and co-keyed window stages downstream
         # reuse the partitioning. Values are identical in any topological
-        # order, and _fused_transform restores the column order; a
-        # pipeline with an in-place replacement keeps its declared order
-        layered = not _replaces_in_place(stages)
+        # order, and _fused_transform restores the column order
         return _fused_transform(  # type: ignore[arg-type]
-            df, _toposort(stages, hoist=True) if layered else stages,
-            canonical=stages, layered=layered,
+            df, _toposort(stages, hoist=True), canonical=stages,
         )
 
     def save(self, path: str) -> None:

@@ -115,12 +115,17 @@ class _Windowed(Transformer):
 
 class _Pass(_Windowed):
     """One select of a multi-pass window stage ``of``: ``fn(df)`` builds
-    its outputs over ``of``'s partition keys and ``order_by``."""
+    its outputs over ``of``'s partition keys and ``order_by``, or, with
+    ``order_by=None``, a projection of the outputs of earlier passes.
+    An output that ``of`` reads counts as an input too: the pass then
+    replaces it in place, so the passes before it read the original."""
 
-    def __init__(self, of: _Windowed, fn, input_cols, output_cols, order_by: tuple):
-        super().__init__(input_cols=list(input_cols), output_cols=list(output_cols),
-                         partition_by=of._partition(), order_by=order_by)
+    def __init__(self, of: _Windowed, fn, input_cols, output_cols, order_by: tuple | None):
+        ins = [*input_cols, *(c for c in output_cols if c in of.input_columns)]
+        super().__init__(input_cols=ins, output_cols=list(output_cols),
+                         partition_by=of._partition(), order_by=order_by or ())
         self.of, self._fn = of, fn
+        self.lca_fuse = order_by is None
 
     def build(self, df):
         return self._fn(df)
@@ -277,14 +282,18 @@ class Sessionize(_Windowed):
 
     Produces an integer session index (0-based per partition) and, when
     ``session_id_col`` is set, a string id ``{conv_id}#{idx}``. Two
-    passes, because Spark nests no window inside a window aggregate: the
-    gap flag (a lag of the raw timestamp), then the running sum of the
-    flag, which is the index; the id is built from that same window
-    expression, not from the index column, so both stay in one select.
-    The pipeline puts the second pass in the Window node of the other
-    windows on the same spec; the flag is a temporary, dropped at the
-    end. The order keys must ascend: a descending key makes every gap
-    negative, so every row would fall into session 0.
+    window passes, because Spark nests no window inside a window
+    aggregate: the gap flag (a lag of the raw timestamp), then the
+    running sum of the flag. A third pass, a projection, casts that sum
+    to the index and builds the id from it, so the sum is evaluated
+    once (a copy of its window expression in the id would be a second
+    sum in the same Window node), and the projection collapses into the
+    select above the Window node (the sum's column, unlike the cast
+    index, is cheap to read twice). The pipeline puts the second pass
+    in the Window node of the other windows on the same spec; the flag
+    and the sum are temporaries, dropped at the end. The order keys
+    must ascend: a descending key makes every gap negative, so every
+    row would fall into session 0.
     """
 
     @keyword_params
@@ -309,7 +318,7 @@ class Sessionize(_Windowed):
         return [self.output_col, *([self.session_id_col] if self.session_id_col else [])]
 
     def passes(self):
-        flag = f"__gap_flag_{self.output_col}"
+        flag, gaps = f"__gap_flag_{self.output_col}", f"__gaps_{self.output_col}"
 
         def gap(df):
             prev = F.lag(self.ts_col).over(self.window())
@@ -317,7 +326,7 @@ class Sessionize(_Windowed):
             return {flag: F.when(secs > F.lit(float(self.gap_seconds)), 1).otherwise(0)}
 
         def index(df):
-            idx = F.sum(flag).over(self.window((UNB, CUR))).cast("int")
+            idx = F.col(gaps).cast("int")
             out = {self.output_col: idx}
             if self.session_id_col:
                 out[self.session_id_col] = F.concat_ws(
@@ -327,7 +336,9 @@ class Sessionize(_Windowed):
 
         order = self._order()
         return [_Pass(self, gap, [self.ts_col], [flag], order),
-                _Pass(self, index, [flag], self.output_columns, order)]
+                _Pass(self, lambda df: {gaps: F.sum(flag).over(self.window((UNB, CUR)))},
+                      [flag], [gaps], order),
+                _Pass(self, index, [gaps], self.output_columns, None)]
 
 
 class ListAgg(_Windowed):

@@ -6,8 +6,9 @@ docstring. Each root is a directory (every ``.py`` file under it) or one
 ``<lines>  <module>`` row per module, largest first, then its total;
 each further root gets one ``<lines>  total  <root>`` line.
 
-    python scripts/loc.py                                   # kamae_spark/ only
-    python scripts/loc.py kamae_spark bench.py scripts tests  # or: make loc
+    python scripts/loc.py                # kamae_spark/ only
+    python scripts/loc.py kamae_spark bench.py __spark_entry__.py scripts tests
+                                         # the same as: make loc
 """
 
 from __future__ import annotations

@@ -59,6 +59,21 @@ def annotations(spark, transcripts):
 
 
 @pytest.fixture(scope="session")
+def row_hashes():
+    """Sorted row hashes of a frame, null-safe: each column adds its null
+    flag and its value as a string, so a null never hashes like any
+    value. Two frames with equal hashes hold the same rows."""
+    from pyspark.sql import functions as F
+
+    def hashes(df) -> list[int]:
+        cols = [F.concat(F.col(c).isNull().cast("string"), F.coalesce(F.col(c).cast("string"), F.lit("")))
+                for c in df.columns]
+        return sorted(r[0] for r in df.select(F.xxhash64(*cols)).collect())
+
+    return hashes
+
+
+@pytest.fixture(scope="session")
 def scalar_features(spark):
     """F2: reference base fixture (conftest.py:52-60 shape)."""
     return spark.createDataFrame(

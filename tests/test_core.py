@@ -349,6 +349,61 @@ def test_inplace_replacer_consuming_derived_column_is_not_a_cycle(spark):
     assert out["x"] == pytest.approx(math.log(2.0) + 1.0)
 
 
+def test_reader_declared_before_a_replacer_it_must_follow_is_a_cycle(spark):
+    """``c`` reads ``x`` declared before ``x``'s in-place replacement, so
+    it reads the original ``x``; it also reads ``z``, which is built from
+    the replaced ``x``. No order of the stages gives both, so the
+    pipeline raises instead of returning ``c`` from the replaced ``x``."""
+    from kamae_spark.operators.math import AbsoluteValue, Sum
+
+    df = spark.createDataFrame([(-0.5,)], "x double")
+    model = PipelineModel([
+        Sum(input_cols=["x", "z"], output_col="c"),
+        AbsoluteValue(input_col="x", output_col="x"),
+        Sum(input_cols=["x"], output_col="z", constant=10.0),
+    ])
+    with pytest.raises(ValueError, match="cycle"):
+        model.transform(df)
+
+
+def test_output_pruning_skips_a_replacer_the_outputs_do_not_read(spark):
+    """With ``outputs``, only the stages the requested columns read run:
+    ``lg`` reads the original ``x``, so the in-place replacement of
+    ``x`` declared after it does not run and ``x`` keeps its value."""
+    import math
+
+    from kamae_spark.operators.math import AbsoluteValue, Log
+
+    df = spark.createDataFrame([(-0.5,)], "x double")
+    out = PipelineModel([
+        Log(input_col="x", output_col="lg", alpha=1.0),
+        AbsoluteValue(input_col="x", output_col="x"),
+    ]).transform(df, outputs=["lg"]).first()
+    assert out["x"] == -0.5
+    assert out["lg"] == pytest.approx(math.log(0.5))
+
+
+def test_projection_read_before_a_window_replacement_reads_the_original(spark, transcripts, row_hashes):
+    """A projection declared before a window stage that replaces its
+    input in place reads the original column, and a window declared
+    after reads the replaced one: the compiled frame has the columns and
+    the rows of applying each stage's own ``transform`` in order."""
+    from kamae_spark.operators.strings import StringCase
+    from kamae_spark.operators.windows import Backfill, Lag
+
+    order = ("ts", "turn_idx")
+    stages = [StringCase(input_col="tool", output_col="tool_upper", case="upper"),
+              Backfill(input_col="tool", output_col="tool", order_by=order),
+              Lag(input_col="tool", output_col="prev_tool_ff", order_by=order)]
+    compiled = PipelineModel(stages).transform(transcripts)
+    applied = transcripts
+    for s in stages:
+        applied = s.transform(applied)
+    assert compiled.columns == applied.columns
+    assert row_hashes(compiled) == row_hashes(applied)
+    assert compiled.where(F.col("tool").isNotNull() & F.col("tool_upper").isNull()).count() > 0
+
+
 def test_asof_hoisted_early_keeps_canonical_schema_and_values(spark, transcripts, annotations):
     """AsOfJoin declared last is SCHEDULED first (its union shuffle then
     carries only base columns and the window family reuses the
@@ -373,15 +428,7 @@ def test_asof_hoisted_early_keeps_canonical_schema_and_values(spark, transcripts
     pd.testing.assert_frame_equal(a, b[a.columns])
 
 
-def _row_hashes(df) -> list[int]:
-    """Sorted row hashes, null-safe: each column adds its null flag and
-    its value as a string, so a null never hashes like any value."""
-    cols = [F.concat(F.col(c).isNull().cast("string"), F.coalesce(F.col(c).cast("string"), F.lit("")))
-            for c in df.columns]
-    return sorted(r[0] for r in df.select(F.xxhash64(*cols)).collect())
-
-
-def test_layered_compile_does_not_depend_on_declared_order(spark, transcripts, annotations):
+def test_layered_compile_does_not_depend_on_declared_order(spark, transcripts, annotations, row_hashes):
     """The flagship stages plus a ListAgg max (which the compile folds
     into the ordered Window node) and a ListAgg median (which it cannot
     fold), in three declared orders: each compiled frame has the columns,
@@ -400,7 +447,7 @@ def test_layered_compile_does_not_depend_on_declared_order(spark, transcripts, a
         for s in perm:
             applied = s.transform(applied)
         assert compiled.columns == applied.columns
-        assert _row_hashes(compiled) == _row_hashes(applied)
+        assert row_hashes(compiled) == row_hashes(applied)
 
 
 def test_500_stage_pipeline_with_inplace_replacements_bounded(spark):
@@ -571,9 +618,10 @@ def test_fused_chain_schema_matches_stagewise(spark):
 def test_compile_decisions_logged(spark, transcripts, annotations, caplog):
     """Compile decisions are logged at DEBUG on the ``kamae_spark``
     logger: the 40-stage chain fuses into one select, flushed once at the
-    end of the pipeline, and the flagship compiles in two layers: the
+    end of the pipeline, and the flagship compiles in three layers: the
     hoisted AsOfJoin and Sessionize's gap flag, then every other window
-    (Sessionize's index among them) in one select."""
+    (Sessionize's running sum among them) in one select, then the
+    projection of Sessionize's index and id from that sum."""
     import logging
 
     caplog.set_level(logging.DEBUG, logger="kamae_spark")
@@ -589,6 +637,7 @@ def test_compile_decisions_logged(spark, transcripts, annotations, caplog):
         "layer 0: AsOfJoin, Sessionize",
         "layer 1: Lag, Lead, Lag, RollingAgg, RollingAgg, ConditionalRollingCount, Backfill, "
         "Sessionize, ListAgg",
+        "layer 2: Sessionize",
     ], layers
 
 

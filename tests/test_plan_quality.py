@@ -10,6 +10,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from kamae_spark.core.pipeline import PipelineModel
@@ -89,14 +90,58 @@ def test_flagship_plan_fence(spark, transcripts, annotations):
     at most 2 Sorts and 1 hash Exchange. The three passes are the as-of
     fill, Sessionize's gap flag (a lag of the raw timestamp), and one
     node for everything else: lag/lead, the rolling counts and mean,
-    role frequency, backfill, Sessionize's running index and id, and
-    the ListAgg count over the same order with a whole-partition frame."""
+    role frequency, backfill, Sessionize's running sum, and the ListAgg
+    count over the same order with a whole-partition frame."""
     model = PipelineModel(transcript_features(annotations))
     plan = _executed(model.transform(transcripts.repartition(4)))
     names = _node_names(plan)
     assert names.count("Window") == 3, plan
     assert names.count("Sort") <= 2, plan
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+def test_flagship_sessionize_runs_one_running_sum(spark, transcripts, annotations, row_hashes):
+    """Sessionize's index and id read one running sum of the gap flag:
+    the flagship plan evaluates that sum once, and the session columns
+    equal the two-window formula written out here (the gap flag, its
+    running sum cast to int, and the id built from that index)."""
+    out = PipelineModel(transcript_features(annotations)).transform(transcripts.repartition(4))
+    plan = _executed(out)
+    assert plan.count("sum(__gap_flag_session_idx") == 1, plan
+    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    secs = F.col("ts").cast("double") - F.lag("ts").over(w).cast("double")
+    idx = F.sum("flag").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("int")
+    ref = (transcripts.withColumn("flag", F.when(secs > 1800.0, 1).otherwise(0))
+           .select("conv_id", "turn_idx", idx.alias("session_idx"),
+                   F.concat_ws("#", "conv_id", idx.cast("string")).alias("session_id")))
+    assert row_hashes(out.select(*ref.columns)) == row_hashes(ref)
+
+
+def test_in_place_pipeline_plan_fence(spark, transcripts, annotations, row_hashes):
+    """The flagship with an in-place replacement goes through the same
+    hoisted, layered compile: a ``Lag`` of ``tool`` first, then the
+    flagship, then ``Backfill(tool -> tool)`` and a ``Lag`` of the
+    replaced ``tool``. Exactly 3 Window nodes, at most 2 Sorts and 1
+    hash Exchange, as the flagship alone; the replacement shares the
+    select of the windows that read the original ``tool``. The columns
+    and rows equal applying each stage's own ``transform`` in order."""
+    order = ("ts", "turn_idx")
+    stages = [Lag(input_col="tool", output_col="prev_tool", order_by=order),
+              *transcript_features(annotations),
+              Backfill(input_col="tool", output_col="tool", order_by=order),
+              Lag(input_col="tool", output_col="prev_tool_ff", order_by=order)]
+    src = transcripts.repartition(4)
+    out = PipelineModel(stages).transform(src)
+    plan = _executed(out)
+    names = _node_names(plan)
+    assert names.count("Window") == 3, plan
+    assert names.count("Sort") <= 2, plan
+    assert plan.count("Exchange hashpartitioning") <= 1, plan
+    applied = src
+    for s in stages:
+        applied = s.transform(applied)
+    assert out.columns == applied.columns
+    assert row_hashes(out) == row_hashes(applied)
 
 
 def test_lone_listagg_count_is_one_unordered_window(spark, transcripts):

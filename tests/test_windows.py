@@ -276,3 +276,28 @@ def test_listagg_and_sessionize_outputs_replace_existing_columns_in_place(listwi
     key = ["conv_id", "turn_idx"]
     assert (out.select(*key, "tool", "role").orderBy(*key).collect()
             == ref.select(*key, "session_idx", "session_id").orderBy(*key).collect())
+
+
+def test_pass_replacing_a_column_its_stage_reads_runs_after_the_readers(
+        listwise, transcripts, row_hashes):
+    """A pass may write a column that an earlier pass of its stage
+    reads: a session index over an order key, a top-n statistic over its
+    sort key. In a pipeline, as in the stage's own ``transform``, the
+    earlier passes and a stage declared before read the original
+    column; the Lag still plans in the Window node of the running sum."""
+    order = ("ts", "turn_idx")
+    cases = [(transcripts, [Lag(input_col="turn_idx", output_col="prev_turn", order_by=order),
+                            Sessionize(ts_col="ts", output_col="turn_idx", order_by=order,
+                                       session_id_col="sid")]),
+             (listwise, [ListAgg(input_col="col2", output_col="col3", agg="sum",
+                                 group_cols=("query_id",), top_n=2, sort_by=("col3",))])]
+    for df, stages in cases:
+        compiled = PipelineModel(stages).transform(df)
+        applied = df
+        for s in stages:
+            applied = s.transform(applied)
+        assert compiled.columns == applied.columns
+        assert row_hashes(compiled) == row_hashes(applied)
+    plan = PipelineModel(cases[0][1]).transform(transcripts)._jdf.queryExecution().executedPlan()
+    plan = plan.toString()
+    assert plan[:plan.find("InMemoryTableScan")].count("Window [") == 2, plan
